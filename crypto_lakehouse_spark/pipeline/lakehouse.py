@@ -15,6 +15,10 @@ Every stage is incremental by construction:
 - gold: lookback watermark (A6) + MERGE on (product_id,
   window_start) — the dbt incremental-merge strategy (S7) without dbt.
 
+Each stage returns the rows its own call wrote (for a MERGE, the rows
+of its source), counted on the write side; none of them re-reads the
+table it wrote to count it.
+
 At 100 TB: bronze/silver scans prune on partition date; the silver
 dedup window shuffles only the lookback slice; gold candle builds are
 single-shuffle groupBys on (product_id, bucket); MERGEs rewrite only
@@ -25,15 +29,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark import schemas
+from crypto_lakehouse_spark.operators.trades import LATE_ARRIVAL_THRESHOLD_MS
 from crypto_lakehouse_spark.schemas import TRADE_JSON_SCHEMA
 from crypto_lakehouse_spark.tables import LakehouseTable
-
-LATE_ARRIVAL_THRESHOLD_MS = 300_000  # reference bronze_to_silver.py:39
 
 
 class Lakehouse:
@@ -64,11 +67,17 @@ class Lakehouse:
         Parse failures (malformed JSON) land in the DLQ table wrapped
         with error context (reference producer DLQ, S9/T9); heartbeats
         and other non-trades are dropped by the null-key filter (T7).
+        Returns the rows this call appended to bronze and to the DLQ.
         """
-        parsed = feed.withColumn("parsed", F.from_json("value", TRADE_JSON_SCHEMA))
         # PERMISSIVE from_json yields an all-null struct on bad input;
         # `type` is present on every well-formed message, so a null
-        # `type` identifies parse failures.
+        # `type` identifies parse failures. The bronze append counts
+        # them as it parses, so the DLQ costs a job only when it has
+        # rows to write.
+        obs = Observation()
+        parsed = feed.withColumn(
+            "parsed", F.from_json("value", TRADE_JSON_SCHEMA)
+        ).observe(obs, F.count_if(F.col("parsed.type").isNull()).alias("bad"))
         bad = parsed.filter(F.col("parsed.type").isNull()).select(
             F.col("value").alias("original_message"),
             F.lit("json_parse_error").alias("error"),
@@ -91,11 +100,11 @@ class Lakehouse:
             )
             .filter(F.col("trade_id").isNotNull())  # T7 heartbeat drop
         )
-        self.bronze.append(bronze_rows)
-        n_bad = bad.count()
+        n_bronze = self.bronze.append(bronze_rows)
+        n_bad = obs.get["bad"]
         if n_bad:
             self.dlq.append(bad)
-        return {"bronze": self.bronze.read().count(), "dlq": n_bad}
+        return {"bronze": n_bronze, "dlq": n_bad}
 
     # ------------------------------------------------------------------
     # bronze -> silver (reference bronze_to_silver.py:94-188)
@@ -104,6 +113,7 @@ class Lakehouse:
         """Incremental dedup/cast/validate/MERGE batch job.
 
         lookback_hours=None processes the full table (backfill).
+        Returns the silver rows this call merged.
         """
         b = self.bronze.read()
         if lookback_hours is not None:
@@ -152,8 +162,10 @@ class Lakehouse:
                 & F.col("side").isin("buy", "sell")
             )
         )
-        self.silver.merge(silver, keys=["trade_id"])
-        return self.silver.read().count()
+        # Keyed on trade_id alone, so MERGE keeps its moved-key check:
+        # a re-picked duplicate can carry a different trade_time, and
+        # so a different _trade_date partition.
+        return self.silver.merge(silver, keys=["trade_id"])
 
     # ------------------------------------------------------------------
     # gold builds (reference dbt marts)
@@ -195,7 +207,7 @@ class Lakehouse:
         """Incremental candle build + MERGE (dbt incremental strategy,
         ohlcv_1m.sql:1-23): recompute only buckets newer than
         max(window_start) - lookback, upsert on (product_id,
-        window_start)."""
+        window_start). Returns the candles this call merged."""
         name = "ohlcv_1m" if bucket == "minute" else "ohlcv_1h"
         table = self.gold[name]
         s = self.silver.read()
@@ -205,11 +217,14 @@ class Lakehouse:
                 cutoff = F.lit(wm) - F.expr(f"INTERVAL {lookback}")
                 s = s.filter(F.col("trade_time") >= cutoff)
         candles = self._candles(s, bucket)
-        table.merge(candles, keys=["product_id", "window_start"])
-        return table.read().count()
+        # _partition_date is to_date(window_start), so adding it leaves
+        # the key set unchanged; with the partition column inside the
+        # keys, a key cannot move partitions and MERGE skips that check.
+        return table.merge(candles, keys=["product_id", "window_start", "_partition_date"])
 
     def build_daily_metrics(self) -> int:
-        """daily_metrics from silver (formulas per SURVEY §2.8.1-2)."""
+        """daily_metrics from silver (formulas per SURVEY §2.8.1-2).
+        Returns the rows this call merged."""
         c = self._candles(self.silver.read(), "day")
         o, h, lo, cl = (F.col(x).cast("double") for x in ("open", "high", "low", "close"))
         out = c.select(
@@ -226,13 +241,12 @@ class Lakehouse:
             ((h - lo) / F.nullif(h, F.lit(0.0))).cast("decimal(18,8)").alias("max_drawdown"),
             F.date_trunc("month", "window_start").cast("date").alias("_partition_month"),
         )
-        self.gold["daily_metrics"].merge(out, keys=["product_id", "date"])
-        return self.gold["daily_metrics"].read().count()
+        return self.gold["daily_metrics"].merge(out, keys=["product_id", "date"])
 
     def build_price_latest(self, now=None) -> int:
         """price_latest full rebuild (dbt table materialization,
         price_latest.sql:1-5). `now` injectable for determinism
-        (SURVEY §2.8.7)."""
+        (SURVEY §2.8.7). Returns the rows written."""
         s = self.silver.read()
         if now is None:
             now = s.agg(F.max("trade_time")).first()[0]
@@ -256,8 +270,7 @@ class Lakehouse:
         out = latest.join(F.broadcast(stats24), "product_id", "left").withColumn(
             "snapshot_time", F.lit(now)
         )
-        self.gold["price_latest"].overwrite(out)
-        return self.gold["price_latest"].read().count()
+        return self.gold["price_latest"].overwrite(out)
 
     # ------------------------------------------------------------------
     def run_all(self, feed: DataFrame) -> dict[str, int]:

@@ -558,7 +558,8 @@ def run_stream_ingest(
 
     Returns (lakehouse, metrics) where metrics is one dict per
     micro-batch — the engine-side analog of the reference's
-    process_batch count logger.
+    process_batch count logger; its `bronze` and `dlq` keys are the
+    rows that batch appended.
 
     Pass the same `stage_dir`/`ckpt_dir` across calls to exercise
     checkpoint RECOVERY: a restart replays nothing already committed

@@ -23,6 +23,22 @@ partition-pruned, a matched key must never move between partitions
 by date but merged on id): that too is enforced fail-fast unless the
 partition columns are part of the merge keys, which makes it
 structurally impossible.
+
+The MERGE computes its source once, as Delta's MERGE does
+(merge.materializeSource): the source is materialized with an eager
+local checkpoint, and the uniqueness check, touched-partition
+discovery, the moved-key check and the rewrite all read that one copy.
+The touched partition values are collected (an incremental batch
+touches a handful) and prune the target as a literal, NULL-safe
+partition predicate, so the moved-key check scans
+only the untouched partitions.
+
+Every write records the table's schema in a `_schema.json` sidecar,
+and `read()` passes it to the parquet reader instead of inferring one
+from file footers and directory names. Besides skipping a Spark job
+per read, this keeps partition column types as written: a STRING
+partition column holding "7" reads back as STRING, where inference
+would return INT.
 """
 
 from __future__ import annotations
@@ -31,9 +47,14 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from crypto_lakehouse_spark.operators.checkpointing import release_lineage
 
 _SCHEMA_SIDECAR = "_schema.json"
 
@@ -78,33 +99,44 @@ class LakehouseTable:
         with open(p) as f:
             return json.load(f)
 
-    def _write_sidecar(self, doc: dict) -> None:
-        tmp = os.path.join(self.path, _SCHEMA_SIDECAR + ".tmp")
-        os.makedirs(self.path, exist_ok=True)
+    def _write_sidecar(self, doc: dict, directory: str | None = None) -> None:
+        directory = directory or self.path
+        tmp = os.path.join(directory, _SCHEMA_SIDECAR + ".tmp")
+        os.makedirs(directory, exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(doc, f)
-        os.rename(tmp, os.path.join(self.path, _SCHEMA_SIDECAR))
+        os.rename(tmp, os.path.join(directory, _SCHEMA_SIDECAR))
 
-    def _added_columns(self) -> dict[str, dict]:
-        return self._sidecar().get("added_columns", {})
-
-    def _record_schema(self, df: DataFrame) -> None:
-        # A PARTITIONED write of 0 rows emits no files at all (dynamic
-        # partitioning has no partition values to materialize), so a
-        # later read cannot infer the schema from data. Delta records
-        # the schema in its log; the parquet-native equivalent is this
-        # sidecar entry, written on every write path and used by
-        # read() only when no data file exists. An empty first batch
-        # (a real occurrence in a scheduled pipeline) then yields an
-        # empty, correctly-typed table instead of UNABLE_TO_INFER_SCHEMA.
+    def _record_schema(self, df: DataFrame, directory: str | None = None) -> None:
+        # Delta records the schema in its log; the parquet-native
+        # equivalent is this sidecar entry, written on every write path
+        # (into `directory` when the write is staged elsewhere first).
+        # read() uses it in place of footer inference. It also covers a
+        # PARTITIONED write of 0 rows, which emits no files at all
+        # (dynamic partitioning has no partition values to
+        # materialize): an empty first batch (a real occurrence in a
+        # scheduled pipeline) then yields an empty, correctly-typed
+        # table instead of UNABLE_TO_INFER_SCHEMA.
         doc = self._sidecar()
         doc["table_schema"] = df.schema.jsonValue()
-        self._write_sidecar(doc)
+        self._write_sidecar(doc, directory)
 
     def read(self) -> DataFrame:
-        from pyspark.sql.types import StructType
-
-        added = self._added_columns()
+        doc = self._sidecar()
+        added = doc.get("added_columns", {})
+        stored = doc.get("table_schema")
+        if stored is not None and not added:
+            # The writes recorded this schema, so the reader needs no
+            # footer inference (one Spark job per read).
+            # Columns read back nullable, and the partition columns
+            # last, as an inferred read returns them.
+            schema = StructType(
+                [
+                    StructField(f.name, f.dataType, True, f.metadata)
+                    for f in StructType.fromJson(stored).fields
+                ]
+            )
+            return self.spark.read.schema(schema).parquet(self.path)
         reader = self.spark.read
         if added:
             # Declared added columns imply mixed file schemas.
@@ -112,7 +144,6 @@ class LakehouseTable:
         try:
             df = reader.parquet(self.path)
         except Exception as e:
-            stored = self._sidecar().get("table_schema")
             if stored is None or "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
             df = self.spark.createDataFrame(
@@ -150,42 +181,73 @@ class LakehouseTable:
         self._write_sidecar(doc)
 
     # -- writes ------------------------------------------------------------
-    def _writer(self, df: DataFrame, mode: str):
-        w = df.write.mode(mode)
+    def _write(self, df: DataFrame, mode: str) -> int:
+        """Write `df` with this table's partitioning; returns the rows
+        written, counted by an observation on the write itself (no
+        extra Spark job)."""
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        return w
+        w.parquet(self.path)
+        self._record_schema(df)
+        self._refresh()
+        return obs.get["rows"]
 
     def _refresh(self) -> None:
         # Invalidate Spark's cached FileIndex for this path — required
         # after any in-place rewrite, or later reads see stale files.
         self.spark.catalog.refreshByPath(self.path)
 
-    def append(self, df: DataFrame) -> None:
-        self._writer(df, "append").parquet(self.path)
-        self._record_schema(df)
-        self._refresh()
+    def append(self, df: DataFrame) -> int:
+        """Append `df`; returns the rows written."""
+        return self._write(df, "append")
 
-    def overwrite(self, df: DataFrame) -> None:
-        self._writer(df, "overwrite").parquet(self.path)
-        self._record_schema(df)
-        self._refresh()
+    def overwrite(self, df: DataFrame) -> int:
+        """Replace the table with `df`; returns the rows written."""
+        return self._write(df, "overwrite")
 
-    def overwrite_partitions(self, df: DataFrame) -> None:
+    def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition overwrite: replaces only the partitions
-        present in `df`. Requires partitionOverwriteMode=dynamic (set
-        by the session factory)."""
+        present in `df`; returns the rows written. Requires
+        partitionOverwriteMode=dynamic (set by the session factory)."""
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        self._writer(df, "overwrite").parquet(self.path)
-        self._record_schema(df)
-        self._refresh()
+        return self._write(df, "overwrite")
 
     # -- merge -------------------------------------------------------------
+    def _partition_predicate(self, parts: list) -> Column:
+        """Literal predicate selecting the partitions whose values are
+        in `parts` (rows of the partition columns). A NULL partition
+        value is a legal partition (__HIVE_DEFAULT_PARTITION__ on disk)
+        and plain equality would never match it: the pruned rewrite
+        would then drop the NULL partition's unmatched target rows. So
+        NULL matches NULL here, and the predicate is never NULL itself:
+        its negation selects exactly the untouched partitions."""
+        if len(self.partition_by) == 1:
+            (c,) = self.partition_by
+            values = [row[c] for row in parts]
+            pred = F.col(c).isin([v for v in values if v is not None])
+            if None in values:
+                pred = pred | F.col(c).isNull()
+            return F.coalesce(pred, F.lit(False))
+        return reduce(
+            lambda a, b: a | b,
+            (
+                reduce(
+                    lambda a, b: a & b,
+                    (F.col(c).eqNullSafe(F.lit(row[c])) for c in self.partition_by),
+                )
+                for row in parts
+            ),
+            F.lit(False),
+        )
+
     def merge(
         self, source: DataFrame, keys: list[str], delete_match: str | None = None
-    ) -> None:
+    ) -> int:
         """Upsert `source` by `keys` (MERGE WHEN MATCHED UPDATE SET * /
         WHEN NOT MATCHED INSERT *). Rewrites only touched partitions.
+        Returns the number of source rows.
 
         `delete_match` adds Delta's third clause — WHEN MATCHED AND
         <predicate> THEN DELETE: source rows satisfying the predicate
@@ -195,8 +257,29 @@ class LakehouseTable:
         stays partition-pruned: a deleted key's partition is touched
         by definition (the target row lives there).
         """
-        dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        if dup:
+        # Every step below reads the source, so compute it once.
+        source = source.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        try:
+            return self._merge_materialized(source, keys, delete_match)
+        finally:
+            release_lineage(source)
+
+    def _merge_materialized(
+        self, source: DataFrame, keys: list[str], delete_match: str | None
+    ) -> int:
+        # One pass over the source: its size, whether it is unique on
+        # the keys (a struct counts NULL keys as a value, as groupBy
+        # does), and the partitions it touches.
+        stats = source.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.struct(*keys)).alias("n_keys"),
+            *(
+                [F.collect_set(F.struct(*self.partition_by)).alias("parts")]
+                if self.partition_by
+                else []
+            ),
+        ).first()
+        if stats["n"] != stats["n_keys"]:
             raise ValueError(
                 f"MERGE source is not unique on keys {keys} "
                 "(same contract as Delta: multiple source matches are an error)"
@@ -207,23 +290,14 @@ class LakehouseTable:
             upserts = source
         if not self.exists():
             self.overwrite(upserts)
-            return
+            return stats["n"]
 
         target = self.read().select(*source.columns)  # align column order
+        source_keys = source.select(*keys)
         if self.partition_by:
-            # Prune target read to touched partitions; at scale this is
-            # partition pruning on the parquet scan, not a full read.
-            parts = source.select(*self.partition_by).distinct()
-            # Partition-column joins must be NULL-safe: a NULL
-            # partition value is a legal partition
-            # (__HIVE_DEFAULT_PARTITION__ on disk), and plain equality
-            # would never match it — the pruned rewrite would then drop
-            # the NULL partition's unmatched target rows.
-            part_cond = None
-            for c in self.partition_by:
-                eq = F.col(f"t.{c}").eqNullSafe(F.col(f"sp.{c}"))
-                part_cond = eq if part_cond is None else (part_cond & eq)
-            t_al, p_al = target.alias("t"), F.broadcast(parts.alias("sp"))
+            # Prune the target read to the touched partitions: partition
+            # pruning on the parquet scan, not a full read.
+            touched = self._partition_predicate(stats["parts"])
             if not set(self.partition_by) <= set(keys):
                 # A matched key whose partition column changed would
                 # sit in an UNtouched partition and survive the pruned
@@ -231,8 +305,8 @@ class LakehouseTable:
                 # the partition columns in `keys` makes this
                 # structurally impossible (check skipped).
                 moved = (
-                    t_al.join(p_al, part_cond, "left_anti")
-                    .join(source.select(*keys).distinct(), keys, "left_semi")
+                    target.filter(~touched)
+                    .join(source_keys, keys, "left_semi")
                     .limit(1)
                     .count()
                 )
@@ -246,11 +320,11 @@ class LakehouseTable:
                         "merge keys, or route the correction as a "
                         "delete+insert."
                     )
-            target = t_al.join(p_al, part_cond, "left_semi")
+            target = target.filter(touched)
         # Anti-join against ALL source keys (updates AND deletes): a
         # matched target row is either replaced by its upsert row or
         # dropped by its delete row; only `upserts` re-enter.
-        keep = target.join(source.select(*keys).distinct(), keys, "left_anti")
+        keep = target.join(source_keys, keys, "left_anti")
         merged = keep.unionByName(upserts)
         if self.partition_by:
             # Dynamic overwrite only replaces partitions PRESENT in the
@@ -258,24 +332,11 @@ class LakehouseTable:
             # silently survive. Find source-touched partitions that end
             # up empty and drop their directories explicitly (Delta
             # records the same as remove-actions in its log).
-            # NULL-safe anti-join for the same reason as above: a
-            # plain-equality anti-join would flag a still-populated
-            # NULL partition as emptied and delete fresh data.
-            m_cond = None
-            for c in self.partition_by:
-                eq = F.col(f"sp.{c}").eqNullSafe(F.col(f"m.{c}"))
-                m_cond = eq if m_cond is None else (m_cond & eq)
-            emptied = (
-                parts.alias("sp")
-                .join(
-                    merged.select(*self.partition_by).distinct().alias("m"),
-                    m_cond,
-                    "left_anti",
-                )
-                .collect()
-                if delete_match is not None
-                else []
-            )
+            if delete_match is not None:
+                present = set(merged.select(*self.partition_by).distinct().collect())
+                emptied = [p for p in stats["parts"] if p not in present]
+            else:
+                emptied = []
             self.overwrite_partitions(merged)
             for row in emptied:
                 rel = "/".join(
@@ -297,14 +358,18 @@ class LakehouseTable:
                 self._refresh()
         else:
             # Unpartitioned: stage then swap (full rewrite is inherent).
+            # The staged directory carries the sidecar, or the swap
+            # would drop the recorded schema and added columns.
             tmp = f"{self.path}__staging_{int(time.time() * 1000)}"
             merged.write.mode("overwrite").parquet(tmp)
+            self._record_schema(merged, tmp)
             bak = f"{self.path}__old"
             shutil.rmtree(bak, ignore_errors=True)
             os.rename(self.path, bak)
             os.rename(tmp, self.path)
             shutil.rmtree(bak, ignore_errors=True)
             self._refresh()
+        return stats["n"]
 
     # -- maintenance (reference compaction.py analog) ----------------------
     def compact(self, target_files_per_partition: int = 1) -> None:

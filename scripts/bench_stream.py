@@ -141,13 +141,12 @@ def main() -> int:
         ckpt_dir=os.path.join(root, "ckpt_warm"),
     )
     # Input volume: the listener's engine-side per-batch row counts
-    # (keys documented in run_stream_ingest); fall back to the final
-    # cumulative bronze count + DLQ rows if the async listener missed.
+    # (keys documented in run_stream_ingest); fall back to the rows
+    # each batch appended to bronze and the DLQ if the async listener
+    # missed.
     total_rows = sum(m.get("engine_input_rows") or 0 for m in metrics)
-    if not total_rows and metrics:
-        total_rows = metrics[-1].get("bronze", 0) + sum(
-            m.get("dlq", 0) for m in metrics
-        )
+    if not total_rows:
+        total_rows = sum(m.get("bronze", 0) + m.get("dlq", 0) for m in metrics)
 
     best = float("inf")
     for i in range(RUNS):

@@ -113,3 +113,13 @@ def test_incremental_merge_picks_up_new_data(lakehouse, spark):
     lakehouse.build_ohlcv("minute", lookback="2 HOURS")
     m = lakehouse.gold["ohlcv_1m"].read()
     assert m.agg(F.sum("trade_count")).first()[0] == lakehouse.silver.read().count()
+
+
+def test_recorded_schema_matches_files(lakehouse, spark):
+    """read() takes the schema recorded at write time instead of
+    inferring it; for every pipeline table it must equal what the files
+    infer to: the same names, types, nullability and column order."""
+    tables = [lakehouse.bronze, lakehouse.dlq, lakehouse.silver, *lakehouse.gold.values()]
+    assert len(tables) == 7
+    for t in tables:
+        assert t.read().schema == spark.read.parquet(t.path).schema, t.path

@@ -161,3 +161,71 @@ def test_merge_upsert_preserves_null_partition_rows(spark, tmp_path):
     t.merge(_df(spark, [(1, "a", None), (2, "b", None)]), ["k"])
     t.merge(_df(spark, [(1, "A", None)]), ["k"])
     assert {(r.k, r.v) for r in t.read().collect()} == {(1, "A"), (2, "b")}
+
+
+# --- materialized MERGE source, recorded-schema reads ----------------------
+
+
+def test_merge_computes_source_once(spark, tmp_path):
+    """The uniqueness check, partition discovery, moved-key check and
+    rewrite all read one materialized copy of the source: a Python UDF
+    computing the merge key runs once per source row."""
+    from pyspark.sql.types import LongType
+
+    t = LakehouseTable(spark, str(tmp_path / "t"), ["p"])
+    t.merge(_df(spark, [(1, "a", "x"), (2, "b", "y")]), ["k"])
+    calls = spark.sparkContext.accumulator(0)
+
+    def key(k):
+        calls.add(1)
+        return k
+
+    key_udf = F.udf(key, LongType())
+    rows = [(2, "B", "y"), (3, "c", "y"), (4, "d", "z")]
+    t.merge(_df(spark, rows).withColumn("k", key_udf("k")), ["k"])
+    assert calls.value == len(rows)
+    got = {(r.k, r.v, r.p) for r in t.read().collect()}
+    assert got == {(1, "a", "x"), (2, "B", "y"), (3, "c", "y"), (4, "d", "z")}
+
+
+def test_unpartitioned_merge_keeps_schema_sidecar(spark, tmp_path):
+    """The stage-and-swap rewrite must carry `_schema.json` over: the
+    swap used to drop the recorded schema and every added column."""
+    import os
+
+    t = LakehouseTable(spark, str(tmp_path / "u"))
+    t.merge(spark.createDataFrame([(1, "a")], "k BIGINT, v STRING"), ["k"])
+    t.add_column("score", "double", default=0.5)
+    t.merge(spark.createDataFrame([(2, "b")], "k BIGINT, v STRING"), ["k"])
+    assert os.path.isfile(os.path.join(t.path, "_schema.json"))
+    assert {(r.k, r.score) for r in t.read().collect()} == {(1, 0.5), (2, 0.5)}
+
+
+def test_read_keeps_recorded_string_partition_type(spark, tmp_path):
+    """A STRING partition column holding numeric-looking values reads
+    back as STRING; footer-and-directory inference would return INT."""
+    t = LakehouseTable(spark, str(tmp_path / "t"), ["p"])
+    t.append(_df(spark, [(1, "a", "7"), (2, "b", "8")]))
+    assert dict(t.read().dtypes)["p"] == "string"
+    assert {(r.k, r.p) for r in t.read().collect()} == {(1, "7"), (2, "8")}
+
+
+def test_merge_literal_partition_pruning_is_null_safe(spark, tmp_path):
+    """The touched-partition predicate matches NULL partition values:
+    upserts keep the NULL partition's other rows, and a key moving out
+    of a NULL partition is still caught, with one or two partition
+    columns."""
+    t = LakehouseTable(spark, str(tmp_path / "t"), ["p"])
+    t.merge(_df(spark, [(1, "a", None), (2, "b", "x")]), ["k"])
+    with pytest.raises(ValueError, match="outside the source's partitions"):
+        t.merge(_df(spark, [(1, "A", "x")]), ["k"])
+
+    def mk(rows):
+        return spark.createDataFrame(rows, "k BIGINT, v STRING, p STRING, q STRING")
+
+    t2 = LakehouseTable(spark, str(tmp_path / "t2"), ["p", "q"])
+    t2.merge(mk([(1, "a", "x", None), (2, "b", "x", None), (3, "c", "x", "y")]), ["k"])
+    t2.merge(mk([(1, "A", "x", None)]), ["k"])
+    assert {(r.k, r.v) for r in t2.read().collect()} == {(1, "A"), (2, "b"), (3, "c")}
+    with pytest.raises(ValueError, match="outside the source's partitions"):
+        t2.merge(mk([(3, "C", "x", None)]), ["k"])
