@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.queries.dedup_ops import (
     _BANDKEY_DUCK,
     _BANDKEY_SPARK,
@@ -477,44 +478,21 @@ _HAM_DUCK = (
 )
 
 _FP64_VIEW = "simhash64_fps_persisted"
-_FP64_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def _cached_fp64(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the 64-bit fingerprint relation once per (session,
-    sf_dir): Spark inlines deterministic CTEs, so the four references
-    below (two band sides, two verify sides) would each recompute the
-    whole corpus fold — 4 corpus scans at 100 TB (measured 4x here).
-    Same memo discipline as dedup_ops.cached_shingles."""
-    from crypto_lakehouse_spark.io import session_key
+@fixture("simhash_fp64", view=_FP64_VIEW)
+def _cached_fp64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 64-bit fingerprint relation: Spark inlines deterministic
+    CTEs, so the four references below (two band sides, two verify
+    sides) would each recompute the whole corpus fold — 4 corpus scans
+    at 100 TB (measured 4x here). truncate_lineage, not bare persist:
+    consumers wrap this view in WITH CTEs, which misses the
+    CacheManager in Spark 4.1 (see the fixture_meter module
+    docstring)."""
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
 
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _FP64_MEMO:
-        for (sid, _), old in list(_FP64_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _FP64_MEMO[(sid, _)]
-
-        register_views(spark, sf_dir, ["documents"])
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
-        )
-
-        t0 = build_t0()
-        # truncate_lineage, not bare persist: consumers wrap this view
-        # in WITH CTEs, which misses the CacheManager in Spark 4.1
-        # (see dedup_ops._SHINGLE_MEMO comment).
-        df = truncate_lineage(spark.sql(_FPS_SELECT_SPARK), spark)
-        df.createOrReplaceTempView(_FP64_VIEW)
-        _FP64_MEMO[key] = df
-        record_build("simhash_fp64", sf_dir, t0)
+    register_views(spark, sf_dir, ["documents"])
+    return truncate_lineage(spark.sql(_FPS_SELECT_SPARK), spark)
 
 
 @query(

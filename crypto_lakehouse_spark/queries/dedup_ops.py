@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_lakehouse_spark.io import register_views, session_key
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.queries.registry import WIDE_SHUFFLE, query
 
 
@@ -54,25 +54,11 @@ def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> No
 # --- persisted shingle relation -------------------------------------------
 # Spark inlines a CTE at every reference, so the self-join queries
 # below would recompute the corpus explode 4-8x (audited: 8-16 scans
-# of documents.parquet). Persisting the shingle relation once per
-# (session, sf_dir) turns those into InMemoryTableScan reuses — at
-# 100 TB this is the difference between one corpus pass and eight
-# Fixtures are materialized via _truncate_lineage (checkpoint /
-# localCheckpoint), NOT a bare .persist(): a view over a merely-cached
-# DataFrame LOSES the cache whenever the consuming SQL references it
-# inside a WITH CTE — Spark 4.1's CTE resolution wraps the view plan
-# in CTERelationDef/Ref and CacheManager replacement no longer
-# matches, silently recomputing the fixture per reference (measured
-# 72 s vs 21 s on the candidate self-join at sf10). A checkpointed
-# plan IS its materialized rows (LogicalRDD), so every reference —
-# CTE or not — scans the fixture. Eagerness also means no
-# double-compute when a fixture's first consumer hits it from two
-# concurrent stages.
-# Keyed on io.session_key (uuid stamped on the session object), never
-# id(spark): a GC'd session's address can be reused, aliasing a dead
-# session's persisted frame.
-_SHINGLE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
+# of documents.parquet). Materializing the shingle relation once per
+# (session, sf_dir) turns those into scans of one checkpoint — at
+# 100 TB this is the difference between one corpus pass and eight.
+# Why fixtures are checkpointed, not persisted: fixture_meter's
+# module docstring (Spark 4.1 CTE/CacheManager trap).
 SHINGLE_VIEW = "shingles_persisted"
 
 _SHINGLE_SELECT_SPARK = """
@@ -85,24 +71,11 @@ WHERE size(ws) >= 3
 """
 
 
-def cached_shingles(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the 3-gram shingle relation for `sf_dir` and
-    register it as a temp view; returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _SHINGLE_MEMO:
-        # A different sf_dir previously owning the view is unpersisted.
-        for (sid, _), old in list(_SHINGLE_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _SHINGLE_MEMO[(sid, _)]
-        register_views(spark, sf_dir, ["documents"])
-        t0 = build_t0()
-        df = _truncate_lineage(spark.sql(_SHINGLE_SELECT_SPARK), spark)
-        df.createOrReplaceTempView(SHINGLE_VIEW)
-        _SHINGLE_MEMO[key] = df
-        record_build("shingles", sf_dir, t0)
-    return SHINGLE_VIEW
+@fixture("shingles", view=SHINGLE_VIEW)
+def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 3-gram shingle relation for `sf_dir`."""
+    register_views(spark, sf_dir, ["documents"])
+    return _truncate_lineage(spark.sql(_SHINGLE_SELECT_SPARK), spark)
 
 
 def _pair_shingled(name: str, spark_tail: str, duck_sql: str, tags: tuple[str, ...]) -> None:
@@ -389,33 +362,20 @@ ORDER BY rows_per_band DESC
 # join (2.2 s — the documented exact-anchor cost every eval query in
 # this family shares) plus the banded probes.
 _MINHASH_VIEW = "minhash_persisted"
-_MINHASH_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def cached_minhash(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the unpivoted K=8 MinHash signature relation
-    (doc_id, i, mh) for `sf_dir` over the persisted shingle fixture;
-    register as a temp view and return the view name."""
+@fixture("minhash", view=_MINHASH_VIEW)
+def cached_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unpivoted K=8 MinHash signature relation (doc_id, i, mh)
+    for `sf_dir` over the persisted shingle fixture."""
     cached_shingles(spark, sf_dir)
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _MINHASH_MEMO:
-        for (sid, _), old in list(_MINHASH_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _MINHASH_MEMO[(sid, _)]
-        t0 = build_t0()
-        df = _truncate_lineage(
-            spark.sql(
-                "WITH " + _SH_PERSISTED + "," + _MINHASH_SPARK
-                + " SELECT doc_id, i, mh FROM minhash"
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(_MINHASH_VIEW)
-        _MINHASH_MEMO[key] = df
-        record_build("minhash", sf_dir, t0)
-    return _MINHASH_VIEW
+    return _truncate_lineage(
+        spark.sql(
+            "WITH " + _SH_PERSISTED + "," + _MINHASH_SPARK
+            + " SELECT doc_id, i, mh FROM minhash"
+        ),
+        spark,
+    )
 
 
 def _lsh_band_sweep_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,9 +685,7 @@ def _cc_labels(spark, edges, max_rounds: int = 32) -> DataFrame:
     )
 
 
-_CC_MINLBL_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@fixture("cc_minlabels")
 def cached_cc_minlabels(spark, sf_dir: str) -> DataFrame:
     """Materialize the min-label-propagation CC labels once per
     (session, sf_dir) — r13 optimization round: `dup_clusters_cc` and
@@ -735,20 +693,8 @@ def cached_cc_minlabels(spark, sf_dir: str) -> DataFrame:
     over the same shared edge fixture; the persisted label relation is
     the checkpoint a 100 TB pipeline keeps between clustering and its
     consumers (same discipline as `cached_cc_edges`)."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key in _CC_MINLBL_MEMO:
-        return _CC_MINLBL_MEMO[key]
-    for (sid, _), old in list(_CC_MINLBL_MEMO.items()):
-        if sid == skey:
-            _release_lineage(old)
-            del _CC_MINLBL_MEMO[(sid, _)]
-    edges = spark.table(cached_cc_edges(spark, sf_dir))
-    t0 = build_t0()
-    lbl = _truncate_lineage(_cc_labels(spark, edges), spark)
-    _CC_MINLBL_MEMO[key] = lbl
-    record_build("cc_minlabels", sf_dir, t0)
-    return lbl
+    edges = spark.table(cached_cc_edges(spark, sf_dir)[1])
+    return _truncate_lineage(_cc_labels(spark, edges), spark)
 
 
 @query(
@@ -801,94 +747,50 @@ def dup_clusters_cc(spark, sf_dir: str):
 # ranked-prefix relation is the thing you'd checkpoint before the
 # pair-generation stage.
 PREFIX_VIEW = "jaccard_prefix_persisted"
-_PREFIX_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-# Prefix bound is threshold-generic: J >= num/den admits prefix
-# length n - ceil(num*n/den) + 1 (same pigeonhole lemma, t = num/den).
-_PREFIX_SELECT_T = f"""
-WITH freqs AS (SELECT s, COUNT(*) AS df FROM {SHINGLE_VIEW} GROUP BY s),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM {SHINGLE_VIEW} GROUP BY doc_id),
-ranked AS (
-    SELECT sh.doc_id, sh.s, z.n,
-           ROW_NUMBER() OVER (
-               PARTITION BY sh.doc_id ORDER BY f.df, sh.s) AS pos
-    FROM {SHINGLE_VIEW} sh
-    JOIN freqs f ON f.s = sh.s
-    JOIN sizes z ON z.doc_id = sh.doc_id
-)
-SELECT doc_id, xxhash64(s) AS sh, n, pos FROM ranked
-WHERE pos <= n - ({{num}} * n + {{den}} - 1) DIV {{den}} + 1
-"""
-
-_PREFIX_SELECT = _PREFIX_SELECT_T.format(num=1, den=2)
 
 # Threshold-INDEPENDENT rarity-ranked shingle relation (r13
-# optimization round): the freqs-join + per-doc rarity window in
-# _PREFIX_SELECT_T does not depend on the prefix threshold, yet the
-# session built it twice — once for the t=1/2 prefix (cached_prefix)
-# and once for the t=3/10 prefix (cached_cc_edges). Materialize the
-# ranked relation once; each prefix is then a pure filter over it.
-_RANKED_VIEW = "shingle_ranked_persisted"
-_RANKED_MEMO: dict[tuple[str, str], DataFrame] = {}
+# optimization round): the freqs-join + per-doc rarity window does
+# not depend on the prefix threshold, yet the session built it twice —
+# once for the t=1/2 prefix (cached_prefix) and once for the t=3/10
+# prefix (cached_cc_edges). Materialize the ranked relation once (the
+# full (doc_id, hashed shingle, set size, canonical position)
+# postings, which the containment family below also reads on both
+# sides of its candidate join); each prefix is then a pure filter.
+RANKED_VIEW = "shingle_ranked_persisted"
 
 _RANKED_SELECT = f"""
 WITH freqs AS (SELECT s, COUNT(*) AS df FROM {SHINGLE_VIEW} GROUP BY s),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM {SHINGLE_VIEW} GROUP BY doc_id),
-ranked AS (
-    SELECT sh.doc_id, sh.s, z.n,
-           ROW_NUMBER() OVER (
-               PARTITION BY sh.doc_id ORDER BY f.df, sh.s) AS pos
-    FROM {SHINGLE_VIEW} sh
-    JOIN freqs f ON f.s = sh.s
-    JOIN sizes z ON z.doc_id = sh.doc_id
-)
-SELECT doc_id, xxhash64(s) AS sh, n, pos FROM ranked
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM {SHINGLE_VIEW} GROUP BY doc_id)
+SELECT sh.doc_id, xxhash64(sh.s) AS sh, z.n,
+       ROW_NUMBER() OVER (
+           PARTITION BY sh.doc_id ORDER BY f.df, sh.s) AS pos
+FROM {SHINGLE_VIEW} sh
+JOIN freqs f ON f.s = sh.s
+JOIN sizes z ON z.doc_id = sh.doc_id
 """
 
+# Prefix bound is threshold-generic: J >= num/den admits prefix
+# length n - ceil(num*n/den) + 1 (same pigeonhole lemma, t = num/den).
 _PREFIX_FILTER_T = (
-    f"SELECT doc_id, sh, n, pos FROM {_RANKED_VIEW} "
+    f"SELECT doc_id, sh, n, pos FROM {RANKED_VIEW} "
     "WHERE pos <= n - ({num} * n + {den} - 1) DIV {den} + 1"
 )
 
 
-def cached_ranked_shingles(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the rarity-ranked shingle relation once per
-    session; returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _RANKED_MEMO:
-        for (sid, _), old in list(_RANKED_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _RANKED_MEMO[(sid, _)]
-        cached_shingles(spark, sf_dir)
-        t0 = build_t0()
-        df = _truncate_lineage(spark.sql(_RANKED_SELECT), spark)
-        df.createOrReplaceTempView(_RANKED_VIEW)
-        _RANKED_MEMO[key] = df
-        record_build("ranked_shingles", sf_dir, t0)
-    return _RANKED_VIEW
+@fixture("ranked_postings", view=RANKED_VIEW)
+def cached_ranked_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The canonically-ranked hashed posting relation."""
+    cached_shingles(spark, sf_dir)
+    return _truncate_lineage(spark.sql(_RANKED_SELECT), spark)
 
 
-def cached_prefix(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize each doc's rarest-shingle prefix (threshold 0.5)
-    once per session; returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _PREFIX_MEMO:
-        for (sid, _), old in list(_PREFIX_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _PREFIX_MEMO[(sid, _)]
-        cached_ranked_shingles(spark, sf_dir)
-        t0 = build_t0()
-        df = _truncate_lineage(
-            spark.sql(_PREFIX_FILTER_T.format(num=1, den=2)), spark
-        )
-        df.createOrReplaceTempView(PREFIX_VIEW)
-        _PREFIX_MEMO[key] = df
-        record_build("prefix_t12", sf_dir, t0)
-    return PREFIX_VIEW
+@fixture("prefix_t12", view=PREFIX_VIEW)
+def cached_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each doc's rarest-shingle prefix (threshold 0.5)."""
+    cached_ranked_postings(spark, sf_dir)
+    return _truncate_lineage(
+        spark.sql(_PREFIX_FILTER_T.format(num=1, den=2)), spark
+    )
 
 
 # --- shared per-doc shingle-array relation -----------------------------------
@@ -896,11 +798,11 @@ def cached_prefix(spark: SparkSession, sf_dir: str) -> str:
 # every PPJoin-style query. It was an inline `arrays` CTE referenced
 # twice per query (aa/ab verify sides), i.e. the 26M-row collect_list
 # aggregate ran twice per run — and as a CTE it would miss the cache
-# anyway (Spark 4.1 trap, see _SHINGLE_MEMO). One lineage-truncated
-# fixture per session; at 100 TB this is the doc->signature relation
-# a pipeline materializes once next to the shingle store.
+# anyway (Spark 4.1 trap, see fixture_meter's module docstring). One
+# lineage-truncated fixture per session; at 100 TB this is the
+# doc->signature relation a pipeline materializes once next to the
+# shingle store.
 ARRAYS_VIEW = "shingle_arrays_persisted"
-_ARRAYS_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 _ARRAYS_SELECT = f"""
 SELECT doc_id, collect_list(xxhash64(s)) AS arr, COUNT(*) AS n
@@ -908,23 +810,11 @@ FROM {SHINGLE_VIEW} GROUP BY doc_id
 """
 
 
-def cached_shingle_arrays(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the per-doc hashed shingle arrays once per session;
-    returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _ARRAYS_MEMO:
-        for (sid, _), old in list(_ARRAYS_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _ARRAYS_MEMO[(sid, _)]
-        cached_shingles(spark, sf_dir)
-        t0 = build_t0()
-        df = _truncate_lineage(spark.sql(_ARRAYS_SELECT), spark)
-        df.createOrReplaceTempView(ARRAYS_VIEW)
-        _ARRAYS_MEMO[key] = df
-        record_build("shingle_arrays", sf_dir, t0)
-    return ARRAYS_VIEW
+@fixture("shingle_arrays", view=ARRAYS_VIEW)
+def cached_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-doc hashed shingle arrays."""
+    cached_shingles(spark, sf_dir)
+    return _truncate_lineage(spark.sql(_ARRAYS_SELECT), spark)
 
 
 # --- shared near-dup edge relation (Jaccard >= 0.3, prefix-filtered) -------
@@ -945,14 +835,12 @@ def cached_shingle_arrays(spark: SparkSession, sf_dir: str) -> str:
 # pair generation and everything downstream); xxhash64 arrays carry
 # the same documented 2^-64-per-pair collision tradeoff as PPJoin.
 CC_EDGES_VIEW = "cc_edges_persisted"
-# memo value: (prefix03_df, edges_df) — BOTH checkpointed and both
-# kept live for the memo's lifetime: the t=3/10 prefix stays
+# fixture value: (prefix03_df, edges_df) — BOTH checkpointed and both
+# kept live for the fixture's lifetime: the t=3/10 prefix stays
 # registered as PREFIX03_VIEW (referenced on both sides of the
 # candidate self-join — Spark inlines temp views, so a released
 # prefix would recompute the freq-join + window sort twice), and
-# eviction releases both via release_lineage on sf_dir switch.
-_CC_EDGES_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
+# eviction releases both on an sf_dir switch.
 PREFIX03_VIEW = "jaccard_prefix03_persisted"
 
 _CC_EDGES_PREFIX = f"""
@@ -983,37 +871,25 @@ WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.3
 """
 
 
-def cached_cc_edges(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the Jaccard>=0.3 near-dup edge list once per
-    session via the t=3/10 prefix filter (block comment above);
-    returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _CC_EDGES_MEMO:
-        for (sid, _), olds in list(_CC_EDGES_MEMO.items()):
-            if sid == skey:
-                for old in olds:
-                    _release_lineage(old)
-                del _CC_EDGES_MEMO[(sid, _)]
-        cached_shingles(spark, sf_dir)
-        cached_shingle_arrays(spark, sf_dir)
-        cached_ranked_shingles(spark, sf_dir)
-        t0 = build_t0()
-        pfx = _truncate_lineage(
-            spark.sql(_PREFIX_FILTER_T.format(num=3, den=10)), spark
-        )
-        pfx.createOrReplaceTempView(PREFIX03_VIEW)
-        # Lineage is TRUNCATED (not just persisted): downstream
-        # consumers checkpoint plans derived from this view inside
-        # iterative loops, and a view that still carries the CTE
-        # logical plan trips Spark's InlineCTE re-optimization
-        # ([PLAN_VALIDATION_FAILED_RULE_IN_BATCH] on re-checkpoint).
-        # A checkpointed edge list is also the honest 100 TB artifact.
-        df = _truncate_lineage(spark.sql(_CC_EDGES_PREFIX), spark)
-        df.createOrReplaceTempView(CC_EDGES_VIEW)
-        _CC_EDGES_MEMO[key] = (pfx, df)
-        record_build("cc_edges", sf_dir, t0)
-    return CC_EDGES_VIEW
+@fixture("cc_edges", view=(PREFIX03_VIEW, CC_EDGES_VIEW))
+def cached_cc_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The t=3/10 prefix and the Jaccard>=0.3 near-dup edge list it
+    generates (block comment above)."""
+    cached_shingles(spark, sf_dir)
+    cached_shingle_arrays(spark, sf_dir)
+    cached_ranked_postings(spark, sf_dir)
+    pfx = _truncate_lineage(
+        spark.sql(_PREFIX_FILTER_T.format(num=3, den=10)), spark
+    )
+    # The edge SQL reads the prefix view, so register it now.
+    pfx.createOrReplaceTempView(PREFIX03_VIEW)
+    # Lineage is TRUNCATED (not just persisted): downstream
+    # consumers checkpoint plans derived from this view inside
+    # iterative loops, and a view that still carries the CTE
+    # logical plan trips Spark's InlineCTE re-optimization
+    # ([PLAN_VALIDATION_FAILED_RULE_IN_BATCH] on re-checkpoint).
+    # A checkpointed edge list is also the honest 100 TB artifact.
+    return pfx, _truncate_lineage(spark.sql(_CC_EDGES_PREFIX), spark)
 
 
 # Verification joins each candidate pair to per-doc shingle ARRAYS
@@ -1280,7 +1156,6 @@ _TFIDF_FOLD_DUCK = (
 # verify already takes — the oracle joins raw strings and proves no
 # collision bit).
 TFIDF_W_VIEW = "tfidf_w_persisted"
-_TFIDF_W_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 _TFIDF_W_SELECT = f"""
 WITH nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM {SHINGLE_VIEW}),
@@ -1291,23 +1166,11 @@ FROM {SHINGLE_VIEW} sh JOIN idf d ON sh.s = d.s CROSS JOIN nd
 """
 
 
-def cached_tfidf_weights(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the idf-weighted shingle relation once per session;
-    returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _TFIDF_W_MEMO:
-        for (sid, _), old in list(_TFIDF_W_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _TFIDF_W_MEMO[(sid, _)]
-        cached_shingles(spark, sf_dir)
-        t0 = build_t0()
-        df = _truncate_lineage(spark.sql(_TFIDF_W_SELECT), spark)
-        df.createOrReplaceTempView(TFIDF_W_VIEW)
-        _TFIDF_W_MEMO[key] = df
-        record_build("tfidf_weights", sf_dir, t0)
-    return TFIDF_W_VIEW
+@fixture("tfidf_weights", view=TFIDF_W_VIEW)
+def cached_tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The idf-weighted shingle relation."""
+    cached_shingles(spark, sf_dir)
+    return _truncate_lineage(spark.sql(_TFIDF_W_SELECT), spark)
 
 
 _TFIDF_W_DUCK = """
@@ -1326,34 +1189,21 @@ w AS (
 # the dominant recompute in the thresholded twin at sf10. One scan,
 # persisted, shared by both idf-cosine queries.
 TFIDF_NORMS_VIEW = "tfidf_norms_persisted"
-_TFIDF_NORMS_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def cached_tfidf_norms(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize per-doc tf-idf vector norms once per session;
-    returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _TFIDF_NORMS_MEMO:
-        for (sid, _), old in list(_TFIDF_NORMS_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _TFIDF_NORMS_MEMO[(sid, _)]
-        cached_tfidf_weights(spark, sf_dir)
-        t0 = build_t0()
-        df = spark.sql(
-            f"""
+@fixture("tfidf_norms", view=TFIDF_NORMS_VIEW)
+def cached_tfidf_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc tf-idf vector norms."""
+    cached_tfidf_weights(spark, sf_dir)
+    df = spark.sql(
+        f"""
 SELECT doc_id, {{fold}} AS nrm FROM (
     SELECT doc_id, df, COUNT(*) AS c, MAX(wt) AS wt
     FROM {TFIDF_W_VIEW} GROUP BY doc_id, df
 ) g GROUP BY doc_id
 """.format(fold=_TFIDF_FOLD_SPARK)
-        )
-        df = _truncate_lineage(df, spark)
-        df.createOrReplaceTempView(TFIDF_NORMS_VIEW)
-        _TFIDF_NORMS_MEMO[key] = df
-        record_build("tfidf_norms", sf_dir, t0)
-    return TFIDF_NORMS_VIEW
+    )
+    return _truncate_lineage(df, spark)
 
 
 # Per-query conf for the idf-cosine family: the per-doc scalar
@@ -1557,24 +1407,13 @@ ORDER BY doc_a, rnk
 # checkpoint a 100 TB pipeline would persist before pair generation.
 # (TFIDF_CG_VIEW itself is declared above _TFIDF_PREFIX_SPARK, which
 # interpolates it.)
-_TFIDF_CG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def cached_tfidf_cg(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the capped weighted relation extended with the
-    per-doc count-bound threshold g (block comment above); returns
-    the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _TFIDF_CG_MEMO:
-        for (sid, _), old in list(_TFIDF_CG_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _TFIDF_CG_MEMO[(sid, _)]
-        cached_tfidf_norms(spark, sf_dir)
-        t0 = build_t0()
-        df = spark.sql(
-            f"""
+@fixture("tfidf_cg", view=TFIDF_CG_VIEW)
+def cached_tfidf_cg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The capped weighted relation extended with the per-doc
+    count-bound threshold g (block comment above)."""
+    cached_tfidf_norms(spark, sf_dir)
+    df = spark.sql(
+        f"""
 SELECT c.doc_id, c.s, c.wt, c.df, g.g, g.nrm
 FROM (SELECT doc_id, s, wt, df FROM {TFIDF_W_VIEW}
       WHERE df > 1 AND df <= {_TFIDF_DF_CAP}) c
@@ -1584,12 +1423,8 @@ JOIN (SELECT n.doc_id, n.nrm, SQRT({_TFIDF_TAU} * n.nrm) / w.m AS g
             WHERE df > 1 AND df <= {_TFIDF_DF_CAP}) w) g
   ON g.doc_id = c.doc_id
 """
-        )
-        df = _truncate_lineage(df, spark)
-        df.createOrReplaceTempView(TFIDF_CG_VIEW)
-        _TFIDF_CG_MEMO[key] = df
-        record_build("tfidf_cg", sf_dir, t0)
-    return TFIDF_CG_VIEW
+    )
+    return _truncate_lineage(df, spark)
 
 
 def _idf_cosine_thresholded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,23 +1535,12 @@ def dup_clusters_cc_star(spark, sf_dir: str):
     )
 
 
-_CC_STAR_LBL_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@fixture("cc_star_labels")
 def cached_cc_star_labels(spark, sf_dir: str) -> DataFrame:
     """Materialize the star-CC fixpoint labels (node, component) once
     per (session, sf_dir) — the identical loop `dup_clusters_cc_star`
     ran inline before r13 — and return the checkpointed label frame."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key in _CC_STAR_LBL_MEMO:
-        return _CC_STAR_LBL_MEMO[key]
-    for (sid, _), old in list(_CC_STAR_LBL_MEMO.items()):
-        if sid == skey:
-            _release_lineage(old)
-            del _CC_STAR_LBL_MEMO[(sid, _)]
-    base = spark.table(cached_cc_edges(spark, sf_dir))
-    t0 = build_t0()
+    base = spark.table(cached_cc_edges(spark, sf_dir)[1])
     # Canonical edge orientation (big, small); self-loops impossible.
     # Checkpoint FIRST, then derive everything else (nodes, the round
     # loop) from the materialized edge list — deriving nodes from
@@ -1775,8 +1599,6 @@ def cached_cc_star_labels(spark, sf_dir: str) -> DataFrame:
     for f in rounds:
         _release_lineage(f)
     _release_lineage(edges0)
-    _CC_STAR_LBL_MEMO[key] = lbl
-    record_build("cc_star_labels", sf_dir, t0)
     return lbl
 
 
@@ -1903,7 +1725,7 @@ _COMP = "COALESCE(c.component, d.doc_id)"
 def leakage_safe_split(spark, sf_dir: str):
     """Cluster-keyed train/val/test split with an in-result proof of
     near-dup leakage-safety (block comment above)."""
-    edges = spark.table(cached_cc_edges(spark, sf_dir))
+    edges = spark.table(cached_cc_edges(spark, sf_dir)[1])
     cached_cc_minlabels(spark, sf_dir).createOrReplaceTempView(
         "cc_labels_split"
     )
@@ -2006,7 +1828,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     small; doc_id-keyed shuffle join otherwise)."""
     from crypto_lakehouse_spark.io import load_table
 
-    edges = spark.table(cached_cc_edges(spark, sf_dir))
+    edges = spark.table(cached_cc_edges(spark, sf_dir)[1])
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     j = (
         edges.join(docs.withColumnRenamed("source", "sa"), edges.doc_a == docs.doc_id)
@@ -2043,46 +1865,10 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # self-join on raw shingle strings — a green hash proves the prefix
 # filter lost no qualifying pair AND covers the xxhash64 collision
 # bit. Integer threshold (5*inter >= 3*n_in), no float compares.
-# Ranked-postings fixture for the containment family: the full
-# (doc_id, hashed shingle, set size, canonical position) relation —
-# one freqs-join + per-doc window sort per session, referenced on BOTH
-# sides of the candidate join (Spark inlines CTEs, so an inline
-# `ranked` would run the window twice; measured 8 s/call at sf1,
-# ~80 s at sf10 before this fixture existed).
-RANKED_VIEW = "shingle_ranked_persisted"
-_RANKED_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-_RANKED_SELECT = f"""
-WITH freqs AS (SELECT s, COUNT(*) AS df FROM {SHINGLE_VIEW} GROUP BY s),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM {SHINGLE_VIEW} GROUP BY doc_id)
-SELECT sh.doc_id, xxhash64(sh.s) AS sh, z.n,
-       ROW_NUMBER() OVER (
-           PARTITION BY sh.doc_id ORDER BY f.df, sh.s) AS pos
-FROM {SHINGLE_VIEW} sh
-JOIN freqs f ON f.s = sh.s
-JOIN sizes z ON z.doc_id = sh.doc_id
-"""
-
-
-def cached_ranked_postings(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the canonically-ranked hashed posting relation once
-    per session; returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _RANKED_MEMO:
-        for (sid, _), old in list(_RANKED_MEMO.items()):
-            if sid == skey:
-                _release_lineage(old)
-                del _RANKED_MEMO[(sid, _)]
-        cached_shingles(spark, sf_dir)
-        t0 = build_t0()
-        df = _truncate_lineage(spark.sql(_RANKED_SELECT), spark)
-        df.createOrReplaceTempView(RANKED_VIEW)
-        _RANKED_MEMO[key] = df
-        record_build("ranked_postings", sf_dir, t0)
-    return RANKED_VIEW
-
-
+# Both sides of the candidate join read the ranked-postings fixture
+# (cached_ranked_postings, above): Spark inlines CTEs, so an inline
+# `ranked` would run the window twice (measured 8 s/call at sf1,
+# ~80 s at sf10 before that fixture existed).
 _CONTAIN_SPARK = f"""
 WITH pa AS (
     SELECT doc_id, n, sh

@@ -30,8 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from crypto_lakehouse_spark.io import register_views, session_key
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.operators.checkpointing import (
     release_lineage,
     truncate_lineage,
@@ -59,40 +59,25 @@ def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> No
 # supplier->customer edge relation (lineitem x orders + DISTINCT —
 # the expensive part of every plan in this module); a real graph
 # pipeline materializes the edge list once and runs every algorithm
-# over it. Same memo discipline as _daily_candles / cached_shingles:
-# truncate_lineage, keyed on (io.session_key, sf_dir), superseded
-# sf_dirs released eagerly. DuckDB oracles recompute the edges CTE
-# inline (identical rows).
+# over it, as a session fixture (queries/fixture_meter.py). DuckDB
+# oracles recompute the edges CTE inline (identical rows).
 _EDGES_VIEW = "graph_edges_mat"
-_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def _cached_edges(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the supplier->customer edge list for `sf_dir` and
-    register it as `graph_edges_mat`; returns the view name."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _EDGES_MEMO:
-        for (sid, other), old in list(_EDGES_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _EDGES_MEMO[(sid, other)]
-        register_views(spark, sf_dir, ["lineitem", "orders"])
-        t0 = build_t0()
-        df = truncate_lineage(
-            spark.sql(
-                """
-                SELECT DISTINCT concat('S', l.l_suppkey) AS src,
-                                concat('C', o.o_custkey) AS dst
-                FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-                """
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(_EDGES_VIEW)
-        _EDGES_MEMO[key] = df
-        record_build("graph_edges", sf_dir, t0)
-    return _EDGES_VIEW
+@fixture("graph_edges", view=_EDGES_VIEW)
+def _cached_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier->customer edge list for `sf_dir`."""
+    register_views(spark, sf_dir, ["lineitem", "orders"])
+    return truncate_lineage(
+        spark.sql(
+            """
+            SELECT DISTINCT concat('S', l.l_suppkey) AS src,
+                            concat('C', o.o_custkey) AS dst
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+            """
+        ),
+        spark,
+    )
 
 
 def _pair_edges(
@@ -553,38 +538,22 @@ ORDER BY l_suppkey, rank
 _PAIRS_VIEW = "copurchase_pairs_mat"
 _OE_VIEW = "copurchase_oriented_edges_mat"
 
-# Session memos (VERDICT r9 item 5): _materialize_pairs originally
+# Session fixtures (VERDICT r9 item 5): _materialize_pairs originally
 # re-checkpointed the full lineitem-join + cap + self-join fixture on
 # EVERY call (~2.2 s/call at sf0.1) — the whole triangle_census
 # "slowdown" the round-9 bench recorded was this recompute drifting
-# with unrelated IO load, not a plan change. Same memo discipline as
-# dedup_ops.cached_shingles (eviction via release_lineage on sf_dir
-# switch).
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_OE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _materialize_pairs(spark: SparkSession, sf_dir: str) -> None:
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _PAIRS_MEMO:
-        for (sid, _), old in list(_PAIRS_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _PAIRS_MEMO[(sid, _)]
-        register_views(spark, sf_dir, ["lineitem", "orders"])
-        t0 = build_t0()
-        pairs = truncate_lineage(
-            spark.sql(
-                "WITH "
-                + _COPURCHASE_BASE
-                + "\nSELECT supp_a, supp_b, shared_customers FROM pairs"
-            ),
-            spark,
-        )
-        pairs.createOrReplaceTempView(_PAIRS_VIEW)
-        _PAIRS_MEMO[key] = pairs
-        record_build("copurchase_pairs", sf_dir, t0)
+# with unrelated IO load, not a plan change.
+@fixture("copurchase_pairs", view=_PAIRS_VIEW)
+def _materialize_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    register_views(spark, sf_dir, ["lineitem", "orders"])
+    return truncate_lineage(
+        spark.sql(
+            "WITH "
+            + _COPURCHASE_BASE
+            + "\nSELECT supp_a, supp_b, shared_customers FROM pairs"
+        ),
+        spark,
+    )
 
 
 def _copurchase_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,22 +659,13 @@ ORDER BY l_suppkey
 """
 )
 
-def _triangle_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-ordered triangle census over the thresholded co-purchase
-    graph (block comment above). The oriented-edge relation is
-    materialized before the wedge/close joins — see the CTE-inlining
-    note at _PAIRS_VIEW."""
+@fixture("oriented_edges", view=_OE_VIEW)
+def _oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The degree-oriented edges of the thresholded co-purchase
+    graph, materialized before the triangle census's wedge/close
+    joins — see the CTE-inlining note at _PAIRS_VIEW."""
     _materialize_pairs(spark, sf_dir)
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key in _OE_MEMO:
-        return _census_over_oe(spark)
-    for (sid, _), old in list(_OE_MEMO.items()):
-        if sid == skey:
-            release_lineage(old)
-            del _OE_MEMO[(sid, _)]
-    t0 = build_t0()
-    oe = truncate_lineage(
+    return truncate_lineage(
         spark.sql(f"""
 WITH stats AS (
     SELECT CAST(SUM(shared_customers) AS DOUBLE) / COUNT(*) AS mean_shared
@@ -730,14 +690,13 @@ JOIN deg db ON db.u = e.eb
 """),
         spark,
     )
-    oe.createOrReplaceTempView(_OE_VIEW)
-    _OE_MEMO[key] = oe
-    record_build("oriented_edges", sf_dir, t0)
-    return _census_over_oe(spark)
 
 
-def _census_over_oe(spark: SparkSession) -> DataFrame:
-    """Wedge + close joins over the memoized oriented-edge view."""
+def _triangle_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree-ordered triangle census over the thresholded co-purchase
+    graph (block comment above): wedge + close joins over the
+    oriented-edge fixture."""
+    _oriented_edges(spark, sf_dir)
     return spark.sql(f"""
 WITH und AS (
     SELECT s AS u FROM {_OE_VIEW} UNION ALL SELECT t AS u FROM {_OE_VIEW}

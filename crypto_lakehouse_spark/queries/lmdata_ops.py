@@ -66,8 +66,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from crypto_lakehouse_spark.io import register_views, session_key
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
 from crypto_lakehouse_spark.operators.checkpointing import (
     release_lineage,
     truncate_lineage,
@@ -127,9 +127,6 @@ FROM folded
 ORDER BY doc_id
 """
 
-_LM_PREV: dict[str, DataFrame] = {}
-
-
 def _lm_doc_score_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM perplexity-proxy scoring (block comment above). r13
     optimization round: the single-statement form re-ran the token
@@ -139,13 +136,10 @@ def _lm_doc_score_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab.cf = SUM(c) (== the occurrence COUNT(*)), tot.n = SUM(c),
     tot.v = COUNT(*) of vocab rows (== COUNT(DISTINCT tok)) — all
     integer-exact, proven by the unchanged DuckDB oracle hash."""
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    doc_tok = truncate_lineage(
+    hold_view(
+        spark,
+        "lm_doctok_mat",
         spark.sql(
             """
 SELECT doc_id, tok, COUNT(*) AS c FROM (
@@ -153,14 +147,7 @@ SELECT doc_id, tok, COUNT(*) AS c FROM (
     FROM documents WHERE length(text) > 0
 ) GROUP BY doc_id, tok"""
         ),
-        spark,
     )
-    doc_tok.createOrReplaceTempView("lm_doctok_mat")
-    skey = session_key(spark)
-    prev = _LM_PREV.pop(skey, None)
-    if prev is not None:
-        release_lineage(prev)
-    _LM_PREV[skey] = doc_tok
     return spark.sql(
         """
 WITH doc_tok AS (SELECT doc_id, tok, c FROM lm_doctok_mat),
@@ -270,9 +257,6 @@ bigrams AS (
     )
 )
 
-_BIGRAM_PREV: dict[str, DataFrame] = {}
-
-
 def _bigram_lm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM scoring (block comment above). r13 optimization
     round, same rewrite as ngram_lm_doc_score: materialize the
@@ -280,13 +264,10 @@ def _bigram_lm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     them (c2.cf = SUM(c) == COUNT(*) over the bigram explode), keep
     the token-vocabulary subquery as its own single scan. Unchanged
     DuckDB oracle proves equivalence."""
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    doc_bg = truncate_lineage(
+    hold_view(
+        spark,
+        "bigram_docbg_mat",
         spark.sql(
             """
 SELECT doc_id, bg, COUNT(*) AS c FROM (
@@ -297,14 +278,7 @@ SELECT doc_id, bg, COUNT(*) AS c FROM (
     WHERE size(ws) >= 2
 ) GROUP BY doc_id, bg"""
         ),
-        spark,
     )
-    doc_bg.createOrReplaceTempView("bigram_docbg_mat")
-    skey = session_key(spark)
-    prev = _BIGRAM_PREV.pop(skey, None)
-    if prev is not None:
-        release_lineage(prev)
-    _BIGRAM_PREV[skey] = doc_bg
     return spark.sql(
         """
 WITH doc_bg AS (SELECT doc_id, bg, c FROM bigram_docbg_mat),
@@ -894,9 +868,6 @@ _DSIR_TTOKS_DUCK = (
     "    FROM documents WHERE length(text) > 0 AND doc_id % 5 = 0"
 )
 
-_DSIR_PREV: dict[str, DataFrame] = {}
-
-
 def _dsir_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling (block comment above). r13
     optimization round: the single-statement form re-executed the
@@ -907,26 +878,16 @@ def _dsir_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id %% 5 = 0 restriction commutes with the per-doc grouping)
     and the corpus totals from it — integer-exact rewrites, so the
     unchanged DuckDB oracle hash-proves the equivalence."""
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    doc_tok = truncate_lineage(
+    hold_view(
+        spark,
+        "dsir_doctok_mat",
         spark.sql(
             "SELECT doc_id, tok, COUNT(*) AS c FROM ("
             + _DSIR_TOKS_SPARK
             + ") GROUP BY doc_id, tok"
         ),
-        spark,
     )
-    doc_tok.createOrReplaceTempView("dsir_doctok_mat")
-    skey = session_key(spark)
-    prev = _DSIR_PREV.pop(skey, None)
-    if prev is not None:
-        release_lineage(prev)
-    _DSIR_PREV[skey] = doc_tok
     fold_tok = (
         "aggregate(array_sort(collect_list(struct(tok, lw))),"
         " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.lw)"
@@ -1170,22 +1131,11 @@ SELECT x, y, CAST(SUM(cnt) AS BIGINT) AS n FROM (
 # per (session, sf_dir) like the shingle/minhash fixtures: one loop
 # serves both queries. Value = (merge records, checkpointed final
 # word-type segmentation).
-_BPE_RUN_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
+@fixture("bpe_run")
 def cached_bpe_run(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, DataFrame]:
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key in _BPE_RUN_MEMO:
-        return _BPE_RUN_MEMO[key]
-    for (sid, other), (_, old) in list(_BPE_RUN_MEMO.items()):
-        if sid == skey:
-            release_lineage(old)
-            del _BPE_RUN_MEMO[(sid, other)]
     register_views(spark, sf_dir, ["documents"])
-    t0 = build_t0()
     # Checkpoint ONCE after the corpus-wide type census; per-round
     # re-segmentation is a NARROW map (replace) over the tiny
     # word-type relation, so the loop accumulates at most
@@ -1211,9 +1161,7 @@ def cached_bpe_run(
     else:
         final = truncate_lineage(state, spark)
         release_lineage(base)
-    _BPE_RUN_MEMO[key] = (merges, final)
-    record_build("bpe_run", sf_dir, t0)
-    return _BPE_RUN_MEMO[key]
+    return merges, final
 
 
 def _bpe_train_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1447,45 +1395,26 @@ ORDER BY n_occurrences DESC, piece
 
 
 _WORD_TF_VIEW = "word_tf_mat"
-_WORD_TF_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def cached_word_tf(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the corpus word-frequency relation (w, tf) for
-    `sf_dir` — the vocabulary-sized aggregate several token-census
-    queries re-derive from a full corpus explode. Same memo
-    discipline as dedup_ops.cached_shingles."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _WORD_TF_MEMO:
-        for (sid, other), old in list(_WORD_TF_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _WORD_TF_MEMO[(sid, other)]
-        register_views(spark, sf_dir, ["documents"])
-        t0 = build_t0()
-        df = truncate_lineage(
-            spark.sql(
-                """
-                SELECT w, COUNT(*) AS tf FROM (
-                    SELECT explode(ws) AS w FROM (
-                        SELECT split(text, ' ') AS ws FROM documents
-                    )
-                ) GROUP BY w
-                """
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(_WORD_TF_VIEW)
-        _WORD_TF_MEMO[key] = df
-        record_build("word_tf", sf_dir, t0)
-    return _WORD_TF_VIEW
-
-
-# Previous call's materialized `best` per session — released on the
-# NEXT call (the returned walk frame still references it, so eager
-# release inside the call would break collection).
-_WORDPIECE_BEST_PREV: dict[str, DataFrame] = {}
+@fixture("word_tf", view=_WORD_TF_VIEW)
+def cached_word_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus word-frequency relation (w, tf) for `sf_dir` — the
+    vocabulary-sized aggregate several token-census queries re-derive
+    from a full corpus explode."""
+    register_views(spark, sf_dir, ["documents"])
+    return truncate_lineage(
+        spark.sql(
+            """
+            SELECT w, COUNT(*) AS tf FROM (
+                SELECT explode(ws) AS w FROM (
+                    SELECT split(text, ' ') AS ws FROM documents
+                )
+            ) GROUP BY w
+            """
+        ),
+        spark,
+    )
 
 
 def _wordpiece_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1500,10 +1429,12 @@ def _wordpiece_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the recursive term, so the wordpos x pieces prefix join +
     # window would otherwise re-run on EVERY recursion round (depth =
     # max pieces per word). The relation is vocabulary-sized
-    # (positions x 1), checkpointed per call, released after the walk
-    # plan is built... the walk output frame still references it, so
-    # release is deferred to the next call via the per-call handle.
-    best = truncate_lineage(
+    # (positions x 1) and checkpointed per call; the walk output frame
+    # still references it, so hold_view defers its release to the
+    # next call.
+    hold_view(
+        spark,
+        "wordpiece_best_mat",
         spark.sql(f"""
 WITH words AS (SELECT w FROM {view}),
 wordpos AS (
@@ -1513,14 +1444,7 @@ wordpos AS (
 {_wordpiece_best_ctes(_WORDPIECE_SPARK_DIALECT[2])}
 SELECT w, pos, piece FROM best
 """),
-        spark,
     )
-    skey = session_key(spark)
-    prev_best = _WORDPIECE_BEST_PREV.get(skey)
-    if prev_best is not None:
-        release_lineage(prev_best)
-    _WORDPIECE_BEST_PREV[skey] = best
-    best.createOrReplaceTempView("wordpiece_best_mat")
     return spark.sql(f"""
 WITH RECURSIVE walk(w, pos, piece) AS (
     SELECT w, CAST(1 AS INT) AS pos, piece
@@ -1940,16 +1864,15 @@ edges1 AS (
 # discipline as cached_bpe_run; the unchanged single-statement DuckDB
 # oracles re-derive both rounds from scratch, so every green hash
 # proves the shared state bit-exact.
-_UNIGRAM_RUN_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 _UNIGRAM_STEPS0_VIEW = "unigram_steps0_fix"
 _UNIGRAM_STEPS1_VIEW = "unigram_steps1_fix"
 
 
+@fixture("unigram_em_run", view=(_UNIGRAM_STEPS0_VIEW, _UNIGRAM_STEPS1_VIEW))
 def cached_unigram_run(
     spark: SparkSession, sf_dir: str
-) -> tuple[str, str]:
-    """Materialize the two-round unigram-LM EM step relations once per
-    (session, sf_dir); returns the (round-0, round-1) view names.
+) -> tuple[DataFrame, DataFrame]:
+    """The two-round unigram-LM EM step relations (round-0, round-1).
 
     Each doubling round and the step relations are MATERIALIZED
     (checkpointed temp views), because every one is referenced twice
@@ -1957,17 +1880,7 @@ def cached_unigram_run(
     duplicates the census 2^rounds times (measured 24 s on 138 rows;
     materialized: sub-second per round). Same checkpointed-loop
     discipline as the graph pointer-doubling operators."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key in _UNIGRAM_RUN_MEMO:
-        return _UNIGRAM_STEPS0_VIEW, _UNIGRAM_STEPS1_VIEW
-    for (sid, other), olds in list(_UNIGRAM_RUN_MEMO.items()):
-        if sid == skey:
-            for old in olds:
-                release_lineage(old)
-            del _UNIGRAM_RUN_MEMO[(sid, other)]
     view = cached_word_tf(spark, sf_dir)
-    t0 = build_t0()
     words_sql = (
         f"words AS (SELECT w, tf FROM (SELECT w, tf FROM {view}) w0 "
         f"WHERE length(w) BETWEEN 1 AND {_UNIGRAM_MAX_WORD})"
@@ -2018,6 +1931,7 @@ def cached_unigram_run(
         )
 
     steps0 = dp_steps("unigram2_edges_mat")
+    # The round-1 pruning reads the round-0 steps view, so register it now.
     steps0.createOrReplaceTempView(_UNIGRAM_STEPS0_VIEW)
     agg0 = ck(
         spark.sql(
@@ -2051,12 +1965,9 @@ FROM unigram2_edges_mat e JOIN costed1 c ON c.piece = e.piece"""
     edges1.createOrReplaceTempView("unigram2_edges1_mat")
     released.append(edges1)
     steps1 = dp_steps("unigram2_edges1_mat")
-    steps1.createOrReplaceTempView(_UNIGRAM_STEPS1_VIEW)
     for f in released:
         release_lineage(f)
-    _UNIGRAM_RUN_MEMO[key] = (steps0, steps1)
-    record_build("unigram_em_run", sf_dir, t0)
-    return _UNIGRAM_STEPS0_VIEW, _UNIGRAM_STEPS1_VIEW
+    return steps0, steps1
 
 
 def _unigram_lm_em_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_lakehouse_spark.io import load_table, session_key
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import load_table
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.operators.multimodal import attach_blobs, extract_features
 from crypto_lakehouse_spark.queries.registry import query
 
@@ -20,51 +20,32 @@ from crypto_lakehouse_spark.queries.registry import query
 # audited at sf0.1: the capped-only query scanned documents.parquet
 # 12 times before this memo existed. Persisting the 5-column signature
 # relation once per (session, sf_dir) turns every reference into a
-# scan of the materialized rows. Same pattern + keying discipline as
-# dedup_ops.cached_shingles: keyed on io.session_key, never id(spark).
-_AHASH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
+# scan of the materialized rows (a session fixture,
+# queries/fixture_meter.py).
 AHASH_VIEW = "ahash_sig_persisted"
 
 
-def cached_ahash_sig(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the (doc_id, b0..b3) aHash band signatures for
-    `sf_dir` and register them as a temp view; returns the view name.
-    The relation is one row per doc with four 16-bit ints — tiny
-    relative to the corpus, so persisting it is the 100 TB move, not a
+@fixture("ahash_sig", view=AHASH_VIEW)
+def cached_ahash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, b0..b3) aHash band signatures for `sf_dir`. The
+    relation is one row per doc with four 16-bit ints — tiny relative
+    to the corpus, so persisting it is the 100 TB move, not a
     test-scale hack."""
     from crypto_lakehouse_spark.operators.multimodal import (
         ahash_bands,
         attach_token_histogram_blobs,
     )
 
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+
+    docs = load_table(spark, sf_dir, "documents")
+    # truncate_lineage, not bare persist: the banded self-join SQL
+    # consumes this view inside WITH CTEs, and Spark 4.1 misses the
+    # CacheManager for CTE-wrapped cached views (see fixture_meter's
+    # module docstring); a checkpointed plan is immune.
+    return truncate_lineage(
+        ahash_bands(attach_token_histogram_blobs(docs)), spark
     )
-
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _AHASH_MEMO:
-        for (sid, d), old in list(_AHASH_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _AHASH_MEMO[(sid, d)]
-
-        docs = load_table(spark, sf_dir, "documents")
-        t0 = build_t0()
-        # truncate_lineage, not bare persist: the banded self-join SQL
-        # consumes this view inside WITH CTEs, and Spark 4.1 misses the
-        # CacheManager for CTE-wrapped cached views (see
-        # dedup_ops._SHINGLE_MEMO comment); a checkpointed plan is
-        # immune.
-        df = truncate_lineage(
-            ahash_bands(attach_token_histogram_blobs(docs)), spark
-        )
-        df.createOrReplaceTempView(AHASH_VIEW)
-        _AHASH_MEMO[key] = df
-        record_build("ahash_sig", sf_dir, t0)
-    return AHASH_VIEW
 
 
 @query(
@@ -593,47 +574,39 @@ ORDER BY hamming
     )
 
 
-
+@fixture("ahash_hot_values")
 def cached_ahash_hot_values(spark: SparkSession, sf_dir: str) -> dict[int, list[int]]:
     """Per-band HOT value lists (band values held by more than
-    AHASH_BUCKET_CAP docs), memoized per (session, sf_dir) alongside
-    the persisted signature relation. One exploded groupBy over the
-    persisted signatures (map-side combine), collected to the driver —
-    bounded BY CONSTRUCTION: bands are 16-bit, so the collect can
-    never exceed 4 x 65536 rows no matter the corpus size, and the
-    practical hot count is n_values_over_cap (tens). The memo means
-    the steady-state capped query pays only the pruned joins, exactly
-    like the shingle-relation memo pays the corpus explode once."""
+    AHASH_BUCKET_CAP docs), a session fixture alongside the persisted
+    signature relation. One exploded groupBy over the persisted
+    signatures (map-side combine), collected to the driver — bounded
+    BY CONSTRUCTION: bands are 16-bit, so the collect can never exceed
+    4 x 65536 rows no matter the corpus size, and the practical hot
+    count is n_values_over_cap (tens). The fixture means the
+    steady-state capped query pays only the pruned joins, exactly like
+    the shingle fixture pays the corpus explode once."""
     from pyspark.sql import functions as F
 
     view = cached_ahash_sig(spark, sf_dir)
-    key = (session_key(spark), sf_dir)
-    if key not in _AHASH_HOT_MEMO:
-        t0 = build_t0()
-        rows = (
-            spark.table(view)
-            .select(
-                F.explode(
-                    F.create_map(
-                        F.lit(0), F.col("b0"), F.lit(1), F.col("b1"),
-                        F.lit(2), F.col("b2"), F.lit(3), F.col("b3"),
-                    )
-                ).alias("band", "v")
-            )
-            .groupBy("band", "v")
-            .count()
-            .filter(F.col("count") > AHASH_BUCKET_CAP)
-            .collect()
+    rows = (
+        spark.table(view)
+        .select(
+            F.explode(
+                F.create_map(
+                    F.lit(0), F.col("b0"), F.lit(1), F.col("b1"),
+                    F.lit(2), F.col("b2"), F.lit(3), F.col("b3"),
+                )
+            ).alias("band", "v")
         )
-        hot: dict[int, list[int]] = {k: [] for k in range(4)}
-        for r in rows:
-            hot[r.band].append(r.v)
-        _AHASH_HOT_MEMO[key] = hot
-        record_build("ahash_hot_values", sf_dir, t0)
-    return _AHASH_HOT_MEMO[key]
-
-
-_AHASH_HOT_MEMO: dict[tuple[str, str], dict[int, list[int]]] = {}
+        .groupBy("band", "v")
+        .count()
+        .filter(F.col("count") > AHASH_BUCKET_CAP)
+        .collect()
+    )
+    hot: dict[int, list[int]] = {k: [] for k in range(4)}
+    for r in rows:
+        hot[r.band].append(r.v)
+    return hot
 
 
 @query(

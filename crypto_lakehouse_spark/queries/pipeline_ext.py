@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
 from crypto_lakehouse_spark.queries.registry import query
 
 
@@ -132,46 +133,25 @@ _DOT_D = "list_reduce(list_transform(range(1, 65), i -> {a}[i] * {b}[i]), (acc, 
 # deployment persists; materialized once per (session, sf_dir). The
 # expressions are byte-identical to the inline form; every consumer's
 # DuckDB oracle keeps the inline derivation.
-_IVF_CENTS_MEMO: dict[tuple[str, str], DataFrame] = {}
 IVF_CENTS_VIEW = "ivf_cents_mat"
 
 
-def cached_ivf_cents(spark: SparkSession, sf_dir: str) -> str:
-    from crypto_lakehouse_spark.io import session_key
+@fixture("ivf_cents", view=IVF_CENTS_VIEW)
+def cached_ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
 
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-    from crypto_lakehouse_spark.queries.fixture_meter import (
-        build_t0,
-        record_build,
-    )
-
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _IVF_CENTS_MEMO:
-        for (sid, other), old in list(_IVF_CENTS_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _IVF_CENTS_MEMO[(sid, other)]
-        register_views(spark, sf_dir, ["embeddings"])
-        t0 = build_t0()
-        df = truncate_lineage(
-            spark.sql(
-                f"""
+    register_views(spark, sf_dir, ["embeddings"])
+    return truncate_lineage(
+        spark.sql(
+            f"""
 SELECT label,
        transform(array_sort(collect_list(struct(dim, cv))), s -> s.cv)
            AS cvec
 FROM ({_CENT_LONG_S}) cl
 GROUP BY label"""
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(IVF_CENTS_VIEW)
-        _IVF_CENTS_MEMO[key] = df
-        record_build("ivf_cents", sf_dir, t0)
-    return IVF_CENTS_VIEW
+        ),
+        spark,
+    )
 
 
 def _cents_cte(cent_long: str, rebuild: str, cents_src: str | None) -> str:
@@ -383,12 +363,6 @@ FROM hits h
 """
 
 
-# Previous call's materialized ADC relation per session — released on
-# the NEXT call (the returned frame still references it; the same
-# deferred-release discipline as lmdata's _BIGRAM_PREV).
-_IVFPQ_ADC_PREV: dict[str, DataFrame] = {}
-
-
 def _wire_ivf_pq() -> None:
     from crypto_lakehouse_spark.queries.similarity_ops import (
         _DOT_DUCK,
@@ -452,22 +426,11 @@ FROM hits h
 """.replace("{l2}", _PQ_L2_64_SPARK)
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from crypto_lakehouse_spark.operators.checkpointing import (
-            release_lineage,
-            truncate_lineage,
-        )
-
         cached_pq_index(spark, sf_dir)
         cached_ivf_cents(spark, sf_dir)
-        adc = truncate_lineage(spark.sql(adc_head), spark)
-        skey = __import__(
-            "crypto_lakehouse_spark.io", fromlist=["session_key"]
-        ).session_key(spark)
-        prev = _IVFPQ_ADC_PREV.pop(skey, None)
-        if prev is not None:
-            release_lineage(prev)
-        _IVFPQ_ADC_PREV[skey] = adc
-        adc.createOrReplaceTempView("ivfpq_adc_mat")
+        # The returned frame still reads the view: hold_view defers
+        # the previous call's release to this one.
+        hold_view(spark, "ivfpq_adc_mat", spark.sql(adc_head))
         return spark.sql(tail_sql)
 
     fn.__name__ = "ivf_pq_topk"

@@ -12,12 +12,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark.functions import ddiv, fmt_date, fmt_ts
-from crypto_lakehouse_spark.io import load_table, register_views, session_key
-from crypto_lakehouse_spark.operators.checkpointing import (
-    release_lineage,
-    truncate_lineage,
-)
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import load_table, register_views
+from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.operators.trades import (
     ORACLE_TRADES_CTE,
     raw_trades,
@@ -25,77 +22,44 @@ from crypto_lakehouse_spark.operators.trades import (
 )
 from crypto_lakehouse_spark.queries.registry import query
 
-# (session key, sf_dir) -> persisted silver frame. The queries that
-# need silver twice (A6 watermark scalar + the main plan) previously
-# each called .cache() on a FRESH frame — up to three duplicate cached
-# copies of the same data per suite run, none ever unpersisted. One
-# memo entry per session (an older sf_dir's entry is unpersisted on
-# switch) bounds executor storage AND lets the three queries share one
-# in-memory copy.
-_SILVER_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# The queries that need silver twice (A6 watermark scalar + the main
+# plan) previously each called .cache() on a FRESH frame — up to three
+# duplicate cached copies of the same data per suite run, none ever
+# unpersisted. One session fixture bounds executor storage AND lets
+# the three queries share one in-memory copy.
+@fixture("silver")
 def cached_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _SILVER_MEMO:
-        for (sid, sd), old in list(_SILVER_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _SILVER_MEMO[(sid, sd)]
-        t0 = build_t0()
-        # truncate_lineage (localCheckpoint), NOT persist+materialize:
-        # building the columnar InMemoryRelation for this relation
-        # measured 16.7 s vs 4.6 s for the checkpoint at sf0.1 (99k
-        # rows!), and checkpointed scans are also faster (0.47 vs
-        # 1.04 s for a full-column agg). Eager by construction, so the
-        # one-time build is a metered `fixture:silver` line item
-        # instead of hiding inside the first consumer's discarded
-        # run-1 timing.
-        df = truncate_lineage(silver_trades(raw_trades(spark, sf_dir)), spark)
-        _SILVER_MEMO[key] = df
-        record_build("silver", sf_dir, t0)
-    return _SILVER_MEMO[key]
+    # truncate_lineage (localCheckpoint), NOT persist+materialize:
+    # building the columnar InMemoryRelation for this relation
+    # measured 16.7 s vs 4.6 s for the checkpoint at sf0.1 (99k
+    # rows!), and checkpointed scans are also faster (0.47 vs
+    # 1.04 s for a full-column agg). Eager by construction, so the
+    # one-time build is a metered `fixture:silver` line item
+    # instead of hiding inside the first consumer's discarded
+    # run-1 timing.
+    return truncate_lineage(silver_trades(raw_trades(spark, sf_dir)), spark)
 
 
-# (session key, sf_dir) -> the silver watermark scalar. The scalar is
-# a pure function of the cached_silver fixture, but each consumer ran
-# its own MAX(trade_time) job per CALL — 3 queries x best-of-3 bench
-# runs = 9 driver jobs per suite for one deterministic value (r14
-# optimization round, guide §2.4 "don't compute things twice"). Memo
-# lifetime matches the silver fixture's.
-_WM_MEMO: dict[tuple[str, str], object] = {}
-
-
-def watermark_now(s: DataFrame, spark: SparkSession | None = None,
-                  sf_dir: str | None = None):
+# The watermark is a pure function of the cached_silver fixture, but
+# each consumer ran its own MAX(trade_time) job per CALL — 3 queries x
+# best-of-3 bench runs = 9 driver jobs per suite for one deterministic
+# value (r14 optimization round, guide §2.4 "don't compute things
+# twice").
+@fixture("silver_watermark")
+def silver_watermark(spark: SparkSession, sf_dir: str):
     """The deterministic injected "now" (SURVEY §2.8.7): MAX(trade_time)
-    as a driver scalar. On an EMPTY relation the max is NULL, and
-    `lit(None) - INTERVAL` fails analysis — a daily pipeline run over an
-    empty partition must degrade to an empty result, not crash, so fall
-    back to the epoch. Every consumer only uses the scalar inside
-    `trade_time >= now - INTERVAL ...` filters over the same (empty)
-    relation, so any fallback value yields the same empty output; the
-    DuckDB oracles get NULL-propagation (no rows) — equivalent.
-
-    With (spark, sf_dir) supplied the scalar is memoized per
-    (session, sf_dir) — valid only when `s` IS the cached_silver
-    fixture for that key (all in-repo callers)."""
+    of silver as a driver scalar. On an EMPTY relation the max is NULL,
+    and `lit(None) - INTERVAL` fails analysis — a daily pipeline run
+    over an empty partition must degrade to an empty result, not crash,
+    so fall back to the epoch. Every consumer only uses the scalar
+    inside `trade_time >= now - INTERVAL ...` filters over the same
+    (empty) relation, so any fallback value yields the same empty
+    output; the DuckDB oracles get NULL-propagation (no rows) —
+    equivalent."""
     import datetime as _dt
 
-    key = None
-    if spark is not None and sf_dir is not None:
-        key = (session_key(spark), sf_dir)
-        if key in _WM_MEMO:
-            return _WM_MEMO[key]
-        for (sid, other) in list(_WM_MEMO):
-            if sid == key[0]:
-                del _WM_MEMO[(sid, other)]
-    now = s.agg(F.max("trade_time")).first()[0]
-    now = now if now is not None else _dt.datetime(1970, 1, 1)
-    if key is not None:
-        _WM_MEMO[key] = now
-    return now
+    now = cached_silver(spark, sf_dir).agg(F.max("trade_time")).first()[0]
+    return now if now is not None else _dt.datetime(1970, 1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -586,7 +550,7 @@ def price_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-lengths so the synthetic event spacing always yields a
     previous candle, preserving the reference's operator shape."""
     s = cached_silver(spark, sf_dir)
-    now = watermark_now(s, spark, sf_dir)  # A6 scalar watermark (memoized)
+    now = silver_watermark(spark, sf_dir)  # A6 scalar watermark
 
     w2 = Window.partitionBy("product_id").orderBy(
         F.col("trade_time").desc(), F.col("trade_id").desc()
@@ -681,7 +645,7 @@ def price_latest_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation reduces cardinality before any window/join touches it.
     """
     s = cached_silver(spark, sf_dir)
-    now = watermark_now(s, spark, sf_dir)  # A6 scalar watermark (memoized)
+    now = silver_watermark(spark, sf_dir)  # A6 scalar watermark
     ordkey = F.struct("trade_time", "trade_id")
     in24h = F.col("trade_time") >= F.lit(now) - F.expr("INTERVAL 24 HOURS")
 
@@ -768,7 +732,7 @@ def incremental_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: the watermark .first() and the main aggregation both read
     # silver — without it the W1 window dedup executes twice.
     s = cached_silver(spark, sf_dir)
-    wm = watermark_now(s, spark, sf_dir)
+    wm = silver_watermark(spark, sf_dir)
     return (
         s.filter(F.col("trade_time") >= F.lit(wm) - F.expr("INTERVAL 48 HOURS"))
         .groupBy("product_id", F.date_trunc("hour", "trade_time").alias("b"))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 import crypto_lakehouse_spark.queries.reference_ops  # noqa: F401  (registers oracle we reuse)
 import crypto_lakehouse_spark.queries.text_ops  # noqa: F401  (registers oracle we reuse)
 from crypto_lakehouse_spark.io import load_table, register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.queries.registry import REGISTRY, query
 from crypto_lakehouse_spark.queries.text_ops import _STOP
 
@@ -361,9 +362,7 @@ FROM e CROSS JOIN m CROSS JOIN g
 # The bucketed tables are materialized once per (session, sf_dir) in
 # scratch-dir catalogs (the engine's stand-in for the curated
 # bucketed layer a warehouse maintains).
-_BUCKET_MEMO: dict[tuple[str, str], str] = {}
-
-
+@fixture("bucketed_tables")
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     """Materialize bucketed orders/lineitem once per session; returns
     the database name."""
@@ -372,50 +371,37 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
     import uuid
 
-    from crypto_lakehouse_spark.io import session_key
-
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _BUCKET_MEMO:
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
-        )
-
-        t0 = build_t0()
-        db = f"buck_{uuid.uuid4().hex[:8]}"
-        loc = tempfile.mkdtemp(prefix="bucketed_")
-        atexit.register(shutil.rmtree, loc, ignore_errors=True)
-        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-        # repartition(8, key) BEFORE the bucketed write (r14, guide
-        # §6 "aim for few large output files"): without it every scan
-        # task writes its own copy of each bucket file (measured 256
-        # files for lineitem at sf0.1); co-partitioned input yields
-        # exactly 8 files, a faster write (2.1 -> 1.3 s) and faster
-        # bucketed reads. Bucket-file assignment stays the writer's
-        # per-row hash either way — correctness does not depend on the
-        # repartition matching it.
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderstatus", "o_totalprice")
-            .repartition(8, "o_orderkey")
-            .write.mode("overwrite")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(f"{db}.orders_b")
-        )
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity", "l_extendedprice")
-            .repartition(8, "l_orderkey")
-            .write.mode("overwrite")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(f"{db}.lineitem_b")
-        )
-        _BUCKET_MEMO[key] = db
-        record_build("bucketed_tables", sf_dir, t0)
-    return _BUCKET_MEMO[key]
+    db = f"buck_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix="bucketed_")
+    atexit.register(shutil.rmtree, loc, ignore_errors=True)
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
+    # repartition(8, key) BEFORE the bucketed write (r14, guide
+    # §6 "aim for few large output files"): without it every scan
+    # task writes its own copy of each bucket file (measured 256
+    # files for lineitem at sf0.1); co-partitioned input yields
+    # exactly 8 files, a faster write (2.1 -> 1.3 s) and faster
+    # bucketed reads. Bucket-file assignment stays the writer's
+    # per-row hash either way — correctness does not depend on the
+    # repartition matching it.
+    (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+        .repartition(8, "o_orderkey")
+        .write.mode("overwrite")
+        .bucketBy(8, "o_orderkey")
+        .sortBy("o_orderkey")
+        .saveAsTable(f"{db}.orders_b")
+    )
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_quantity", "l_extendedprice")
+        .repartition(8, "l_orderkey")
+        .write.mode("overwrite")
+        .bucketBy(8, "l_orderkey")
+        .sortBy("l_orderkey")
+        .saveAsTable(f"{db}.lineitem_b")
+    )
+    return db
 
 
 @query(
@@ -539,45 +525,24 @@ SELECT event_id, x0 AS x, y0 AS y, d FROM {_HILBERT_LAST}
 # Hilbert-key fixture memo: BOTH consumers (the cell-extent query and
 # the locality eval) run the identical chain; under Spark CTE inlining
 # each downstream reference would re-execute it (the locality eval's
-# first cut re-ran the events scan 4-5x). Same discipline as every
-# other fixture memo in this repo.
+# first cut re-ran the events scan 4-5x). A session fixture, like the
+# other shared relations in this repo.
 _HK_VIEW = "hilbert_keys_mat"
-_HK_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def _cached_hilbert_keys(spark: SparkSession, sf_dir: str) -> str:
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
+@fixture("hilbert_keys", view=_HK_VIEW)
+def _cached_hilbert_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+
+    register_views(spark, sf_dir, ["events"])
+    return truncate_lineage(
+        spark.sql(
+            _HILBERT_KEYS.replace("epoch_us(", "unix_micros(")
+            .replace("//", "DIV")
+            .replace("%%DIV%%", "DIV")
+        ),
+        spark,
     )
-
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _HK_MEMO:
-        for (sid, other), old in list(_HK_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _HK_MEMO[(sid, other)]
-        register_views(spark, sf_dir, ["events"])
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
-        )
-
-        t0 = build_t0()
-        df = truncate_lineage(
-            spark.sql(
-                _HILBERT_KEYS.replace("epoch_us(", "unix_micros(")
-                .replace("//", "DIV")
-                .replace("%%DIV%%", "DIV")
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(_HK_VIEW)
-        _HK_MEMO[key] = df
-        record_build("hilbert_keys", sf_dir, t0)
-    return _HK_VIEW
 
 
 _HILBERT_CELLS_TAIL = """

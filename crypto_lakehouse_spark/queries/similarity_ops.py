@@ -24,8 +24,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from crypto_lakehouse_spark.io import register_views, session_key
-from crypto_lakehouse_spark.queries.fixture_meter import build_t0, record_build
+from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
 from crypto_lakehouse_spark.queries.registry import query
 
 # Driver-memory contract for centroid/seed collect() sites. Every
@@ -802,35 +802,22 @@ ORDER BY rank
 # materialization boundaries move — and all three consumers' DuckDB
 # oracles keep the full inline chain, so each green hash proves the
 # fixture path end to end.
-_PQ_IDX_MEMO: dict[
-    tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]
-] = {}
 PQ_CB_VIEW = "pq_cb_mat"
 PQ_ENCD_VIEW = "pq_encd_mat"
 PQ_QSUB_VIEW = "pq_qsub_mat"
 
 
-def cached_pq_index(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the PQ codebook / encodings / query-subvector
-    relations once per (session, sf_dir); registers the three views."""
-    from crypto_lakehouse_spark.io import session_key as _sk
-
+@fixture("pq_index", view=(PQ_CB_VIEW, PQ_ENCD_VIEW, PQ_QSUB_VIEW))
+def cached_pq_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The PQ codebook / encodings / query-subvector relations."""
     from crypto_lakehouse_spark.operators.checkpointing import (
         release_lineage,
         truncate_lineage,
     )
 
-    skey = _sk(spark)
-    key = (skey, sf_dir)
-    if key in _PQ_IDX_MEMO:
-        return
-    for (sid, other), olds in list(_PQ_IDX_MEMO.items()):
-        if sid == skey:
-            for old in olds:
-                release_lineage(old)
-            del _PQ_IDX_MEMO[(sid, other)]
     register_views(spark, sf_dir, ["embeddings"])
-    t0 = build_t0()
     subs = truncate_lineage(
         spark.sql(
             f"""
@@ -853,6 +840,7 @@ SELECT vec_id, m, sv FROM subs"""
         ),
         spark,
     )
+    # The encode step reads the codebook view, so register it now.
     cb.createOrReplaceTempView(PQ_CB_VIEW)
     encd = truncate_lineage(
         spark.sql(
@@ -868,15 +856,12 @@ SELECT vec_id, m, code FROM (
         ),
         spark,
     )
-    encd.createOrReplaceTempView(PQ_ENCD_VIEW)
     qsub = truncate_lineage(
         spark.sql("SELECT m, sv FROM pq_subs_tmp WHERE vec_id = 0"),
         spark,
     )
-    qsub.createOrReplaceTempView(PQ_QSUB_VIEW)
     release_lineage(subs)
-    _PQ_IDX_MEMO[key] = (cb, encd, qsub)
-    record_build("pq_index", sf_dir, t0)
+    return cb, encd, qsub
 
 
 # terms -> adc over the materialized index views: byte-identical
@@ -1138,28 +1123,40 @@ def _seq_norm_rows(V):
     return V / np.sqrt(acc)[:, None]
 
 
-# SemDeDup corpus-count memo (r14): both variants run the identical
+def _sem_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The SemDeDup inputs (emb, corpus): the non-NULL embeddings as
+    double vectors, and the corpus with every tenth vector re-emitted
+    scaled by 1.5 at vec_id + 100000. NULL embeddings cannot
+    participate in vector kernels; excluded identically in the oracle
+    (WHERE embedding IS NOT NULL) — the SQL-twin analog of NULL
+    propagation."""
+    from pyspark.sql import functions as F
+
+    register_views(spark, sf_dir, ["embeddings"])
+    emb = spark.table("embeddings").filter("embedding IS NOT NULL").select(
+        "vec_id",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+    )
+    corpus = emb.unionByName(
+        emb.filter("vec_id % 10 = 0").select(
+            (F.col("vec_id") + 100000).alias("vec_id"),
+            F.expr("transform(v, x -> x * CAST(1.5 AS DOUBLE))").alias("v"),
+        )
+    )
+    return emb, corpus
+
+
+# SemDeDup corpus-count fixture (r14): both variants ran the identical
 # `corpus.count()` driver job per CALL (the k = ceil(sqrt N) knob), 3
-# bench runs x 2 queries = 6 jobs for one deterministic integer. The
-# count is memoized per (session, sf_dir); everything else stays
-# inline — a materialized normalized-corpus fixture was TRIED and
-# REVERTED (measured net-negative: per-query kernels read the
-# checkpointed array rows ~0.2 s slower than the parquet-float scan
-# they replaced, on top of the build's fixture row; see
-# OPTIMIZATION_r14.md).
-_SEM_N_MEMO: dict[tuple[str, str], int] = {}
-
-
-def _sem_corpus_count(spark: SparkSession, sf_dir: str, corpus) -> int:
-    from crypto_lakehouse_spark.io import session_key as _sk
-
-    key = (_sk(spark), sf_dir)
-    if key not in _SEM_N_MEMO:
-        for (sid, other) in list(_SEM_N_MEMO):
-            if sid == key[0]:
-                del _SEM_N_MEMO[(sid, other)]
-        _SEM_N_MEMO[key] = corpus.count()
-    return _SEM_N_MEMO[key]
+# bench runs x 2 queries = 6 jobs for one deterministic integer. Only
+# the count is a fixture; everything else stays inline — a
+# materialized normalized-corpus fixture was TRIED and REVERTED
+# (measured net-negative: per-query kernels read the checkpointed
+# array rows ~0.2 s slower than the parquet-float scan they replaced,
+# on top of the build's fixture row; see OPTIMIZATION_r14.md).
+@fixture("sem_corpus_n")
+def _sem_corpus_count(spark: SparkSession, sf_dir: str) -> int:
+    return _sem_corpus(spark, sf_dir)[1].count()
 
 
 def _cluster_pairs(key, pdf):
@@ -1223,21 +1220,8 @@ def semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ["embeddings"])
-    # NULL embeddings cannot participate in vector kernels; excluded
-    # identically in the oracle (WHERE embedding IS NOT NULL) — the
-    # SQL-twin analog of NULL propagation.
-    emb = spark.table("embeddings").filter("embedding IS NOT NULL").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    corpus = emb.unionByName(
-        emb.filter("vec_id % 10 = 0").select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.expr("transform(v, x -> x * CAST(1.5 AS DOUBLE))").alias("v"),
-        )
-    )
-    n = _sem_corpus_count(spark, sf_dir, corpus)
+    emb, corpus = _sem_corpus(spark, sf_dir)
+    n = _sem_corpus_count(spark, sf_dir)
     k = max(16, math.ceil(math.sqrt(n)))
     # Copies live at +100000, so centroid seeds (corpus vec_id < k)
     # come from the base relation — same rows the oracle's
@@ -1298,7 +1282,7 @@ def semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unmaterialized plans would re-run the Arrow assignment and the
     # per-cluster pairwise kernel per reference (and CTE-wrapped
     # cached views miss the CacheManager in Spark 4.1 anyway — see
-    # dedup_ops._SHINGLE_MEMO).
+    # the fixture_meter module docstring).
     assigned = truncate_lineage(
         corpus.mapInPandas(
             _assign, "vec_id long, cid long, u array<double>"
@@ -1450,21 +1434,8 @@ def semdedup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    register_views(spark, sf_dir, ["embeddings"])
-    # NULL embeddings cannot participate in vector kernels; excluded
-    # identically in the oracle (WHERE embedding IS NOT NULL) — the
-    # SQL-twin analog of NULL propagation.
-    emb = spark.table("embeddings").filter("embedding IS NOT NULL").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    corpus = emb.unionByName(
-        emb.filter("vec_id % 10 = 0").select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.expr("transform(v, x -> x * CAST(1.5 AS DOUBLE))").alias("v"),
-        )
-    )
-    n = _sem_corpus_count(spark, sf_dir, corpus)
+    emb, corpus = _sem_corpus(spark, sf_dir)
+    n = _sem_corpus_count(spark, sf_dir)
     k = max(16, math.ceil(math.sqrt(n)))
     k1 = max(4, math.ceil(math.sqrt(k)))
     k2 = max(4, k // k1)
@@ -2076,9 +2047,6 @@ LEFT JOIN cand_sz cs ON cs.vec_id = hb.vec_id
 """
 
 
-_NN_ROUND_PREV: dict[str, list[DataFrame]] = {}
-
-
 def _nn_descent_round_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One NN-descent round with recall self-eval (block comment
     above). r13 optimization round: the single-statement form's CTE
@@ -2091,55 +2059,36 @@ def _nn_descent_round_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one statement over the views. The DuckDB oracle keeps the
     single-statement form, so the green hash proves the staged
     execution computes the identical result."""
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["embeddings"])
     cos = _nn_descent_cos(_DOT_SPARK)
-    ck = lambda df: truncate_lineage(df, spark)  # noqa: E731
-    frames: list[DataFrame] = []
 
-    corpus = ck(spark.sql(_nn_descent_corpus(_D_SPARK)))
-    corpus.createOrReplaceTempView("nnd_corpus_mat")
-    frames.append(corpus)
+    hold_view(spark, "nnd_corpus_mat", spark.sql(_nn_descent_corpus(_D_SPARK)))
     corpus_cte = "corpus AS (SELECT vec_id, label, vec FROM nnd_corpus_mat)"
-
-    init_p = ck(
+    hold_view(
+        spark,
+        "nnd_initp_mat",
         spark.sql(
             f"WITH {corpus_cte},\n{_NN_PANEL},\n{_nn_descent_init_p(cos)}\n"
             "SELECT vec_id, nbr FROM init_p"
-        )
+        ),
     )
-    init_p.createOrReplaceTempView("nnd_initp_mat")
-    frames.append(init_p)
     initp_cte = "init_p AS (SELECT vec_id, nbr FROM nnd_initp_mat)"
-
-    cand = ck(
+    hold_view(
+        spark,
+        "nnd_cand_mat",
         spark.sql(
             f"WITH {corpus_cte},\n{initp_cte},\n{_nn_descent_cand(cos)}\n"
             "SELECT vec_id, nbr FROM cand"
-        )
+        ),
     )
-    cand.createOrReplaceTempView("nnd_cand_mat")
-    frames.append(cand)
-
-    truth = ck(
+    hold_view(
+        spark,
+        "nnd_truth_mat",
         spark.sql(
             f"WITH {corpus_cte},\n{_NN_PANEL},\n{_nn_descent_truth(cos)}\n"
             "SELECT vec_id, nbr FROM truth"
-        )
+        ),
     )
-    truth.createOrReplaceTempView("nnd_truth_mat")
-    frames.append(truth)
-
-    skey = session_key(spark)
-    for old in _NN_ROUND_PREV.pop(skey, []):
-        release_lineage(old)
-    _NN_ROUND_PREV[skey] = frames
-
     return spark.sql(
         f"""WITH {corpus_cte},
 {_NN_PANEL},

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
 from crypto_lakehouse_spark.queries.registry import query
 
 
@@ -457,46 +458,25 @@ WITH base AS (
 # both queries; the oracles keep the inline form, so the hashes prove
 # the fixture path exact.
 _CELLS_VIEW = "type_weekday_cells_mat"
-_CELLS_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def cached_type_weekday_cells(spark: SparkSession, sf_dir: str) -> str:
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
+@fixture("type_weekday_cells", view=_CELLS_VIEW)
+def cached_type_weekday_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
 
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _CELLS_MEMO:
-        for (sid, other), old in list(_CELLS_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _CELLS_MEMO[(sid, other)]
-        register_views(spark, sf_dir, ["events"])
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
-        )
-
-        t0 = build_t0()
-        df = truncate_lineage(
-            spark.sql(
-                """
+    register_views(spark, sf_dir, ["events"])
+    return truncate_lineage(
+        spark.sql(
+            """
 SELECT event_type,
        CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT) % 7 AS wd,
        COUNT(*) AS c
 FROM events
 GROUP BY event_type,
          CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT) % 7"""
-            ),
-            spark,
-        )
-        df.createOrReplaceTempView(_CELLS_VIEW)
-        _CELLS_MEMO[key] = df
-        record_build("type_weekday_cells", sf_dir, t0)
-    return _CELLS_VIEW
+        ),
+        spark,
+    )
 
 
 def _mi_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,26 +963,11 @@ ORDER BY source_a, source_b
 # inlines CTEs, so the two union branches would otherwise each
 # re-scan documents); the DuckDB oracle marks it MATERIALIZED for the
 # same reason.
-_MWU_PREV: dict[str, DataFrame] = {}
-
-
 def mann_whitney_u_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paired-dialect SQL over the materialized (value, source) count
     grid (semantics in the module docstring)."""
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    grid = truncate_lineage(spark.sql(_MWU_GRID_SQL), spark)
-    skey = session_key(spark)
-    prev = _MWU_PREV.get(skey)
-    if prev is not None:
-        release_lineage(prev)
-    _MWU_PREV[skey] = grid
-    grid.createOrReplaceTempView("mwu_grid_mat")
+    hold_view(spark, "mwu_grid_mat", spark.sql(_MWU_GRID_SQL))
     return spark.sql(
         "WITH sc AS (SELECT source, v, c FROM mwu_grid_mat),\n" + _MWU_TAIL
     )
@@ -1234,9 +1199,6 @@ bc AS (SELECT source, w1, w2, COUNT(*) AS c FROM bigrams
 {_CONDENT_AFTER_BC.lstrip()}"""
 
 
-_CONDENT_PREV: dict[str, DataFrame] = {}
-
-
 def _condent_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram conditional entropy per source (block comment above).
     r13 optimization round: the inlined `bc` CTE was re-executed by
@@ -1244,14 +1206,10 @@ def _condent_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 documents scans in the before-plan); the Spark side now
     materializes bc once and derives the margins from the view.
     Unchanged DuckDB oracle proves equivalence."""
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    bc = truncate_lineage(
+    hold_view(
+        spark,
+        "condent_bc_mat",
         spark.sql(
             """
 SELECT source, w1, w2, COUNT(*) AS c FROM (
@@ -1264,14 +1222,7 @@ SELECT source, w1, w2, COUNT(*) AS c FROM (
     WHERE size(ws) >= 2
 ) GROUP BY source, w1, w2"""
         ),
-        spark,
     )
-    bc.createOrReplaceTempView("condent_bc_mat")
-    skey = session_key(spark)
-    prev = _CONDENT_PREV.pop(skey, None)
-    if prev is not None:
-        release_lineage(prev)
-    _CONDENT_PREV[skey] = bc
     return spark.sql(
         "WITH bc AS (SELECT source, w1, w2, c FROM condent_bc_mat),\n"
         + _CONDENT_AFTER_BC.lstrip()

@@ -22,33 +22,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark.functions import fmt_date
-from crypto_lakehouse_spark.io import session_key
-from crypto_lakehouse_spark.operators.checkpointing import (
-    release_lineage,
-    truncate_lineage,
+from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
+from crypto_lakehouse_spark.queries.reference_ops import (
+    _ORACLE_CANDLES,
+    _candles,
+    cached_silver,
 )
-from crypto_lakehouse_spark.queries.reference_ops import _candles, _ORACLE_CANDLES
 from crypto_lakehouse_spark.operators.trades import ORACLE_TRADES_CTE
 from crypto_lakehouse_spark.queries.registry import query
 
 _DAILY_ORACLE = ORACLE_TRADES_CTE + "," + _ORACLE_CANDLES.format(bucket="day")
 
-# Daily-candle FIXTURE memo. Nine TA queries consume the same gold
+# Daily-candle session fixture. Nine TA queries consume the same gold
 # daily-candle relation; without this each re-derives silver trades
 # (dedup window) + the candle windows/agg/join from raw parquet — at
 # 100 TB that is nine full bronze passes where the medallion design
 # materializes gold ONCE (the reference's dbt daily tables are exactly
-# this materialization). Same discipline as dedup_ops' shingle memo:
-# truncate_lineage (not bare persist — Spark 4.1 CTE-over-cached-view
-# CacheManager miss, see dedup_ops.py:59-72), keyed on
-# (io.session_key, sf_dir), superseded sf_dirs released eagerly.
-# The reference-core OHLCV queries (ohlcv_1m/1h, daily_metrics) keep
-# the raw plan: there the candle build IS the operator under test.
-_DAILY_CANDLES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# this materialization). truncate_lineage, not bare persist: see the
+# fixture_meter module docstring (Spark 4.1 CTE-over-cached-view
+# CacheManager miss). The reference-core OHLCV queries (ohlcv_1m/1h,
+# daily_metrics) keep the raw plan: there the candle build IS the
+# operator under test.
+@fixture("daily_candles")
 def _daily_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized gold daily-candle fixture for `sf_dir` (memo
+    """Materialized gold daily-candle fixture for `sf_dir` (block
     comment above); rows identical to `_candles(spark, sf_dir,
     "day")`, which the DuckDB oracles recompute inline.
 
@@ -62,52 +60,30 @@ def _daily_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes prove the fused build row-identical. The reference-shaped
     plan remains the declared operator in ohlcv_1m/ohlcv_1h/
     daily_metrics — this is only the shared fixture's build."""
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _DAILY_CANDLES_MEMO:
-        for (sid, other), old in list(_DAILY_CANDLES_MEMO.items()):
-            if sid == skey:
-                release_lineage(old)
-                del _DAILY_CANDLES_MEMO[(sid, other)]
-        from pyspark.sql import functions as F
-
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
+    s = cached_silver(spark, sf_dir)
+    ordk = F.struct("trade_time", "trade_id")
+    fused = (
+        s.select(
+            "product_id",
+            "trade_id",
+            "trade_time",
+            "price",
+            "size",
+            (F.col("price") * F.col("size")).alias("trade_value"),
+            F.date_trunc("day", "trade_time").alias("bucket"),
         )
-        from crypto_lakehouse_spark.queries.reference_ops import (
-            cached_silver,
+        .groupBy("product_id", "bucket")
+        .agg(
+            F.max("price").alias("high"),
+            F.min("price").alias("low"),
+            F.sum("size").alias("volume"),
+            F.count("*").alias("trade_count"),
+            F.sum("trade_value").alias("pv"),
+            F.min_by("price", ordk).alias("open"),
+            F.max_by("price", ordk).alias("close"),
         )
-
-        # Build the silver dependency BEFORE taking t0 so its cost is
-        # charged to fixture:silver, not double-counted here.
-        s = cached_silver(spark, sf_dir)
-        t0 = build_t0()
-        ordk = F.struct("trade_time", "trade_id")
-        fused = (
-            s.select(
-                "product_id",
-                "trade_id",
-                "trade_time",
-                "price",
-                "size",
-                (F.col("price") * F.col("size")).alias("trade_value"),
-                F.date_trunc("day", "trade_time").alias("bucket"),
-            )
-            .groupBy("product_id", "bucket")
-            .agg(
-                F.max("price").alias("high"),
-                F.min("price").alias("low"),
-                F.sum("size").alias("volume"),
-                F.count("*").alias("trade_count"),
-                F.sum("trade_value").alias("pv"),
-                F.min_by("price", ordk).alias("open"),
-                F.max_by("price", ordk).alias("close"),
-            )
-        )
-        _DAILY_CANDLES_MEMO[key] = truncate_lineage(fused, spark)
-        record_build("daily_candles", sf_dir, t0)
-    return _DAILY_CANDLES_MEMO[key]
+    )
+    return truncate_lineage(fused, spark)
 
 
 # --- Garman-Klass realized volatility ---------------------------------------

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import hold_view
 from crypto_lakehouse_spark.queries.registry import query
 
 # Stopword lists for the language-ID heuristic (deterministic tiny
@@ -930,9 +931,6 @@ ORDER BY doc_id, rank
 """
 
 
-_TFIDF_KW_PREV: dict[str, DataFrame] = {}
-
-
 def _tfidf_kw_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 tf-idf keywords per doc (block comment above). r13
     optimization round: the single-statement form re-ran the token
@@ -940,28 +938,17 @@ def _tfidf_kw_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df, nn, scored — 6 documents scans in the captured before-plan);
     the Spark side now materializes `tf` once and derives df/nn/scored
     from the view. Unchanged DuckDB oracle proves equivalence."""
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
-
     register_views(spark, sf_dir, ["documents"])
-    tf = truncate_lineage(
+    hold_view(
+        spark,
+        "tfidf_kw_tf_mat",
         spark.sql(
             """
 SELECT doc_id, t, COUNT(*) AS c FROM (
     SELECT doc_id, explode(split(text, ' ')) AS t FROM documents
 ) GROUP BY doc_id, t"""
         ),
-        spark,
     )
-    tf.createOrReplaceTempView("tfidf_kw_tf_mat")
-    skey = session_key(spark)
-    prev = _TFIDF_KW_PREV.pop(skey, None)
-    if prev is not None:
-        release_lineage(prev)
-    _TFIDF_KW_PREV[skey] = tf
     return spark.sql(
         """
 WITH tf AS (SELECT doc_id, t, c FROM tfidf_kw_tf_mat),

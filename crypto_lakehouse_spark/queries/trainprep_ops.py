@@ -67,6 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.queries.registry import query
 
 
@@ -491,57 +492,41 @@ GROUP BY c.source
 ORDER BY c.source
 """
 
-_FZ_SIG_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _contamination_minhash_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded MinHash decontamination (block comments above) over
-    once-computed, lineage-pinned signature relations."""
-    from crypto_lakehouse_spark.io import session_key
-    from crypto_lakehouse_spark.operators.checkpointing import (
-        release_lineage,
-        truncate_lineage,
-    )
+@fixture("contamination_fz_sigs", view=("fz_csig", "fz_bsig"))
+def _contamination_fz_sigs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus and benchmark MinHash signature relations, computed
+    once and lineage-pinned."""
+    from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
     from crypto_lakehouse_spark.queries.dedup_ops import (
         SHINGLE_VIEW,
         cached_shingles,
     )
 
     cached_shingles(spark, sf_dir)
-    register_views(spark, sf_dir, ["documents"])
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    if key not in _FZ_SIG_MEMO:
-        for (sid, _), (oc, ob) in list(_FZ_SIG_MEMO.items()):
-            if sid == skey:
-                release_lineage(oc)
-                release_lineage(ob)
-                del _FZ_SIG_MEMO[(sid, _)]
-        from crypto_lakehouse_spark.queries.fixture_meter import (
-            build_t0,
-            record_build,
-        )
+    csig = truncate_lineage(
+        spark.sql(
+            f"SELECT doc_id, {_FZ_MINS} FROM {SHINGLE_VIEW} "
+            "WHERE doc_id % 17 <> 0 GROUP BY doc_id"
+        ),
+        spark,
+    )
+    bsig = truncate_lineage(
+        spark.sql(
+            f"SELECT doc_id, {_FZ_MINS} FROM {SHINGLE_VIEW} "
+            "WHERE doc_id % 17 = 0 GROUP BY doc_id"
+        ),
+        spark,
+    )
+    return csig, bsig
 
-        t0 = build_t0()
-        csig = truncate_lineage(
-            spark.sql(
-                f"SELECT doc_id, {_FZ_MINS} FROM {SHINGLE_VIEW} "
-                "WHERE doc_id % 17 <> 0 GROUP BY doc_id"
-            ),
-            spark,
-        )
-        bsig = truncate_lineage(
-            spark.sql(
-                f"SELECT doc_id, {_FZ_MINS} FROM {SHINGLE_VIEW} "
-                "WHERE doc_id % 17 = 0 GROUP BY doc_id"
-            ),
-            spark,
-        )
-        _FZ_SIG_MEMO[key] = (csig, bsig)
-        record_build("contamination_fz_sigs", sf_dir, t0)
-    csig, bsig = _FZ_SIG_MEMO[key]
-    csig.createOrReplaceTempView("fz_csig")
-    bsig.createOrReplaceTempView("fz_bsig")
+
+def _contamination_minhash_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded MinHash decontamination (block comments above) over the
+    signature fixture."""
+    _contamination_fz_sigs(spark, sf_dir)
+    register_views(spark, sf_dir, ["documents"])
     return spark.sql(_FZ_TAIL)
 
 

@@ -10,7 +10,7 @@ crashers in 7 distinct classes; each class's fix and the queries that
 pin it:
 
 - NULL scalar watermark (`lit(None) - INTERVAL` analysis error):
-  reference_ops.watermark_now epoch fallback — price_latest.
+  reference_ops.silver_watermark epoch fallback — price_latest.
 - numpy kernels seeded from an empty collect (IndexError):
   early-return typed-empty — semdedup_clustered, semdedup_hierarchical,
   contamination_semantic, int8_quantization_error.

@@ -1,6 +1,7 @@
-"""Session-memo keying + layout-cache hygiene (round-5 hardening).
+"""Session-memo keying, the session-fixture primitive, and layout-cache
+hygiene.
 
-Two failure modes pinned here:
+Failure modes pinned here:
 
 - memo aliasing: keying per-session caches on `id(spark)` lets a GC'd
   session's address be reused by a new session, which then inherits
@@ -11,6 +12,10 @@ Two failure modes pinned here:
   live in a per-user 0700 directory the engine verified it owns, and
   stale entries (source regenerated → mtime/size key changed) must be
   pruned instead of accumulating forever.
+- hand-copied fixture memos drifting apart: every session fixture goes
+  through `queries.fixture_meter.fixture`, which rejects a duplicate
+  name or view, charges each build only its own time, and releases
+  every checkpoint of a superseded sf_dir.
 """
 
 from __future__ import annotations
@@ -197,3 +202,102 @@ def test_query_conf_keys_reset_between_queries(spark):
     assert spark.conf.get(key, None) == str(64 * 1024 * 1024)
     REGISTRY["gini_doc_length_by_source"].spark_fn(spark, sf)
     assert spark.conf.get(key, None) is None
+
+
+def _view_rdd_id(spark, view: str) -> int:
+    """Id of the checkpointed RDD behind a temp view (the LogicalRDD
+    leaf of its analyzed plan)."""
+    plan = spark.table(view)._jdf.queryExecution().analyzed()
+    return plan.collectLeaves().head().rdd().id()
+
+
+def test_fixture_name_and_view_must_be_unique():
+    """A second fixture under a bound name or view raises when the
+    decorator runs, not when two builders later clobber one entry."""
+    from crypto_lakehouse_spark.queries import dedup_ops  # noqa: F401
+    from crypto_lakehouse_spark.queries.fixture_meter import fixture
+
+    fixture("uniq_probe", view="uniq_probe_view")
+    with pytest.raises(ValueError):
+        fixture("uniq_probe")
+    with pytest.raises(ValueError):
+        fixture("uniq_probe_other", view="uniq_probe_view")
+    with pytest.raises(ValueError):
+        fixture("uniq_probe_pair", view=("uniq_probe_a", "uniq_probe_a"))
+    with pytest.raises(ValueError):
+        fixture("ranked_shingles", view="shingle_ranked_persisted")
+    # a rejected registration binds nothing
+    fixture("uniq_probe_other")
+
+
+def test_nested_fixture_build_charged_its_own_time():
+    """An outer build that triggers an inner build is charged only its
+    own time; the inner build's time goes to the inner fixture."""
+    import time
+    import types
+
+    from crypto_lakehouse_spark.queries.fixture_meter import builds_for, fixture
+
+    @fixture("nested_probe_inner")
+    def inner(spark, sf_dir):
+        time.sleep(0.3)
+        return 1
+
+    @fixture("nested_probe_outer")
+    def outer(spark, sf_dir):
+        time.sleep(0.2)
+        return inner(spark, sf_dir) + 1
+
+    stub = types.SimpleNamespace()  # session_key only stamps an attribute
+    sf = "nested_probe_sf"
+    assert outer(stub, sf) == 2
+    secs = builds_for(sf)
+    assert secs["nested_probe_outer"] == pytest.approx(0.2, abs=0.1)
+    assert secs["nested_probe_inner"] == pytest.approx(0.3, abs=0.1)
+    assert outer(stub, sf) == 2
+    assert builds_for(sf) == secs, "a repeat call must not rebuild"
+
+
+def test_tuple_fixture_releases_every_checkpoint_on_sf_switch(spark):
+    """cc_edges holds two checkpoints (the t=3/10 prefix and the edge
+    list); an sf_dir switch must release both, so the persistent-RDD
+    count does not grow when the session moves to another sf_dir."""
+    from crypto_lakehouse_spark.queries.dedup_ops import cached_cc_edges
+
+    session = spark.newSession()
+    jsc = spark.sparkContext._jsc
+    views = cached_cc_edges(session, SRC)
+    old = {_view_rdd_id(session, v) for v in views}
+    n_after_sf = jsc.getPersistentRDDs().size()
+    assert all(jsc.getPersistentRDDs().containsKey(i) for i in old)
+    assert cached_cc_edges(session, "/root/testdata/sf0.01") == views
+    assert not any(jsc.getPersistentRDDs().containsKey(i) for i in old)
+    # The JVM's ContextCleaner may drop unrelated garbage meanwhile, so
+    # the count can only shrink, never grow.
+    assert jsc.getPersistentRDDs().size() <= n_after_sf
+
+
+def test_no_module_level_memo_dicts_in_queries():
+    """Session caching lives in queries/fixture_meter.py only: no query
+    module may bind a module-level `_*_MEMO` or `_*_PREV` again."""
+    import ast
+    import pathlib
+    import re
+
+    import crypto_lakehouse_spark.queries as queries_pkg
+
+    hits = []
+    for path in sorted(pathlib.Path(queries_pkg.__file__).parent.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            hits += [
+                f"{path.name}:{node.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and re.fullmatch(r"_\w*_(MEMO|PREV)", t.id)
+            ]
+    assert not hits, "use queries.fixture_meter.fixture / hold_view: " + ", ".join(hits)

@@ -478,8 +478,8 @@ def test_minhash_estimate_error_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # Checkpointed shingle fixture scans as a materialized RDD (it is
-    # lineage-truncated, not merely persisted — see
-    # dedup_ops._SHINGLE_MEMO on the Spark 4.1 CTE/cache trap).
+    # lineage-truncated, not merely persisted — see the
+    # fixture_meter module docstring on the Spark 4.1 CTE/cache trap).
     assert "Scan ExistingRDD" in plan  # materialized shingles reused
 
 

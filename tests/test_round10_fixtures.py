@@ -1,6 +1,6 @@
 """Round-10-continuation fixture + operator hardening.
 
-Pins for the three new session memos (daily candles, graph edge list,
+Pins for three session fixtures (daily candles, graph edge list,
 corpus word frequencies), the k-core loop's fixpoint early-exit, the
 Hilbert key's bijectivity, and the WAV codec's container behavior —
 the properties the differential oracles exercise only implicitly.
@@ -10,39 +10,50 @@ from __future__ import annotations
 
 import pytest
 
-from crypto_lakehouse_spark.io import session_key
-
 SF = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
 
 
+def _view_rdd_id(spark, view: str) -> int:
+    """Id of the checkpointed RDD behind a temp view (the LogicalRDD
+    leaf of its analyzed plan)."""
+    plan = spark.table(view)._jdf.queryExecution().analyzed()
+    return plan.collectLeaves().head().rdd().id()
+
+
 def test_daily_candles_memo_hits_and_evicts(spark):
     from crypto_lakehouse_spark.queries import ta_ops
+    from crypto_lakehouse_spark.queries.fixture_meter import builds_for
+    from crypto_lakehouse_spark.queries.reference_ops import _candles
 
     a = ta_ops._daily_candles(spark, SF)
     assert ta_ops._daily_candles(spark, SF) is a, "same sf_dir must memo-hit"
-    key = (session_key(spark), SF)
-    assert key in ta_ops._DAILY_CANDLES_MEMO
+    built = builds_for(SF)["daily_candles"]
     b = ta_ops._daily_candles(spark, SF2)
     assert b is not a
-    assert key not in ta_ops._DAILY_CANDLES_MEMO, (
+    # rows identical to the raw plan (the fixture is a materialization,
+    # not a semantic change)
+    assert b.count() == _candles(spark, SF2, "day").count()
+    # Back to SF: the SF2 build evicted the SF entry, so this rebuilds.
+    c = ta_ops._daily_candles(spark, SF)
+    assert c is not a
+    assert builds_for(SF)["daily_candles"] > built, (
         "switching sf_dir must evict the superseded fixture"
     )
-    # rows identical to the raw plan (the memo is a materialization,
-    # not a semantic change)
-    from crypto_lakehouse_spark.queries.reference_ops import _candles
-
-    assert b.count() == _candles(spark, SF2, "day").count()
+    assert c.count() == _candles(spark, SF, "day").count()
 
 
 def test_graph_edges_fixture_memo(spark):
     from crypto_lakehouse_spark.queries import graph_ops
+    from crypto_lakehouse_spark.queries.fixture_meter import builds_for
 
     view = graph_ops._cached_edges(spark, SF)
     assert view == graph_ops._EDGES_VIEW
-    df1 = graph_ops._EDGES_MEMO[(session_key(spark), SF)]
-    graph_ops._cached_edges(spark, SF)
-    assert graph_ops._EDGES_MEMO[(session_key(spark), SF)] is df1
+    rdd1 = _view_rdd_id(spark, view)
+    built = builds_for(SF)["graph_edges"]
+    assert graph_ops._cached_edges(spark, SF) == view
+    assert _view_rdd_id(spark, view) == rdd1, "same sf_dir must memo-hit"
+    assert builds_for(SF)["graph_edges"] == built
     n = spark.table(view).count()
     assert n > 0
     # the fixture is lineage-truncated: its analyzed plan is the
@@ -143,18 +154,20 @@ def test_wav_roundtrip_is_value_exact(spark):
 
 def test_wordpiece_best_checkpoint_rotates(spark):
     """Each wordpiece call materializes a fresh greedy-choice relation
-    and the previous call's checkpoint handle is replaced (released on
-    the next call — the returned frame still references the current
+    and the previous call's checkpoint is replaced (released on the
+    next call — the returned frame still references the current
     one)."""
     from crypto_lakehouse_spark.queries import lmdata_ops
 
     fn = lmdata_ops._wordpiece_recursive
     fn(spark, SF).collect()
-    skey = session_key(spark)
-    h1 = lmdata_ops._WORDPIECE_BEST_PREV[skey]
+    h1 = _view_rdd_id(spark, "wordpiece_best_mat")
     fn(spark, SF).collect()
-    h2 = lmdata_ops._WORDPIECE_BEST_PREV[skey]
-    assert h2 is not h1, "best handle must rotate per call"
+    h2 = _view_rdd_id(spark, "wordpiece_best_mat")
+    assert h2 != h1, "best handle must rotate per call"
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    assert persistent.containsKey(h2)
+    assert not persistent.containsKey(h1), "previous handle must be released"
 
 
 def test_purged_split_boundaries(spark):
