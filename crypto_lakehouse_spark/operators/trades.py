@@ -75,6 +75,10 @@ def silver_trades(raw: DataFrame) -> DataFrame:
     and validity filters (P3/P4: not-null key, price>0, size>0).
     Runs as one shuffle on trade_id; at scale the window partitions by
     the dedup key so state is bounded per key, never global.
+
+    The one W1 implementation: the registered queries and fixtures run
+    it over `raw_trades`, the medallion pipeline
+    (`Lakehouse.bronze_to_silver`) over typed bronze rows.
     """
     w = Window.partitionBy("trade_id").orderBy("ingested_at", "_kafka_offset")
     return (

@@ -7,13 +7,22 @@ entry points (SURVEY §3): streaming ingest
 daily_metrics, price_latest) — as one engine over LakehouseTable
 storage with partition-overwrite MERGE.
 
-Every stage is incremental by construction:
+Bronze, silver and the OHLCV tables are incremental by construction:
 - bronze: append-only, partitioned by ingestion date;
 - silver: lookback-filtered scan of bronze (P5), dedup W1, typed
   casts, MERGE on trade_id — only touched _trade_date partitions
   rewrite;
-- gold: lookback watermark (A6) + MERGE on (product_id,
+- ohlcv_1m/1h: lookback watermark (A6) + MERGE on (product_id,
   window_start) — the dbt incremental-merge strategy (S7) without dbt.
+
+The other two gold tables are not: daily_metrics re-aggregates all of
+silver on every call before its MERGE, and price_latest is a full
+rebuild (the dbt table materialization).
+
+The transforms themselves — W1 dedup (`operators.trades`), fused
+candles and latest prices (`operators.gold`) — are the ones the
+registered queries and session fixtures run; this module adds only
+the bronze projection, the gold column finish and the storage.
 
 Each stage returns the rows its own call wrote (for a MERGE, the rows
 of its source), counted on the write side; none of them re-reads the
@@ -31,10 +40,10 @@ import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark import schemas
-from crypto_lakehouse_spark.operators.trades import LATE_ARRIVAL_THRESHOLD_MS
+from crypto_lakehouse_spark.operators.gold import candles, latest_prices
+from crypto_lakehouse_spark.operators.trades import silver_trades
 from crypto_lakehouse_spark.schemas import TRADE_JSON_SCHEMA
 from crypto_lakehouse_spark.tables import LakehouseTable
 
@@ -130,36 +139,34 @@ class Lakehouse:
                     & (F.col("_ingested_at") >= cutoff)
                 )
 
-        w = Window.partitionBy("trade_id").orderBy("_ingested_at", "_kafka_offset")
+        # W1 dedups on the bronze STRING trade_id; the key is cast only
+        # after it. The winner depends on (ingested_at, _kafka_offset)
+        # alone, so the other columns can be typed first.
+        typed = b.select(
+            "trade_id",
+            "product_id",
+            F.col("price").cast("decimal(18,8)").alias("price"),
+            F.col("size").cast("decimal(18,8)").alias("size"),
+            "side",
+            F.to_timestamp("time").alias("trade_time"),
+            F.col("_ingested_at").alias("ingested_at"),
+            "_kafka_offset",
+        )
         silver = (
-            b.filter(F.col("trade_id").isNotNull())
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            silver_trades(typed)
+            .filter(F.col("trade_time").isNotNull() & F.col("side").isin("buy", "sell"))
+            # silver's stored column order, which its _schema.json records
             .select(
                 F.col("trade_id").cast("long").alias("trade_id"),
-                F.col("product_id"),
-                F.col("price").cast("decimal(18,8)").alias("price"),
-                F.col("size").cast("decimal(18,8)").alias("size"),
-                F.col("side"),
-                F.to_timestamp("time").alias("trade_time"),
-                F.col("_ingested_at").alias("ingested_at"),
-            )
-            .withColumn(
+                "product_id",
+                "price",
+                "size",
+                "side",
+                "trade_time",
+                "ingested_at",
                 "_source_latency_ms",
-                ((F.unix_timestamp("ingested_at") - F.unix_timestamp("trade_time")) * 1000).cast(
-                    "long"
-                ),
-            )
-            .withColumn(
                 "_is_late_arrival",
-                F.col("_source_latency_ms") > F.lit(LATE_ARRIVAL_THRESHOLD_MS),
-            )
-            .withColumn("_trade_date", F.to_date("trade_time"))
-            .filter(
-                F.col("trade_time").isNotNull()
-                & (F.col("price") > 0)
-                & (F.col("size") > 0)
-                & F.col("side").isin("buy", "sell")
+                "_trade_date",
             )
         )
         # Keyed on trade_id alone, so MERGE keeps its moved-key check:
@@ -171,26 +178,13 @@ class Lakehouse:
     # gold builds (reference dbt marts)
     # ------------------------------------------------------------------
     def _candles(self, source: DataFrame, bucket: str) -> DataFrame:
-        """Single-pass OHLCV (SURVEY §7 'built-in vs custom': the fused
-        min_by/max_by plan — one shuffle, no self-join; proven
-        equivalent to the reference's W4+J1 shape by the oracle-checked
-        `ohlcv_1m` query in queries/reference_ops.py)."""
-        ordkey = F.struct("trade_time", "trade_id")
-        g = source.groupBy(
-            "product_id", F.date_trunc(bucket, "trade_time").alias("window_start")
-        ).agg(
-            F.min_by("price", ordkey).alias("open"),
-            F.max("price").alias("high"),
-            F.min("price").alias("low"),
-            F.max_by("price", ordkey).alias("close"),
-            F.sum("size").alias("volume"),
-            F.count("*").alias("trade_count"),
-            F.sum(F.col("price") * F.col("size")).alias("pv"),
-        )
-        return g.select(
+        """Gold candle rows: the shared fused build
+        (`operators.gold.candles`) with window_end, decimal(18,8)
+        casts, vwap and the partition date."""
+        return candles(source, bucket).select(
             "product_id",
-            "window_start",
-            (F.col("window_start") + F.expr(f"INTERVAL 1 {bucket.upper()}")).alias("window_end"),
+            F.col("bucket").alias("window_start"),
+            (F.col("bucket") + F.expr(f"INTERVAL 1 {bucket.upper()}")).alias("window_end"),
             F.col("open").cast("decimal(18,8)").alias("open"),
             F.col("high").cast("decimal(18,8)").alias("high"),
             F.col("low").cast("decimal(18,8)").alias("low"),
@@ -200,7 +194,7 @@ class Lakehouse:
             (F.col("pv") / F.nullif(F.col("volume"), F.lit(0)))
             .cast("decimal(18,8)")
             .alias("vwap"),
-            F.to_date("window_start").alias("_partition_date"),
+            F.to_date("bucket").alias("_partition_date"),
         )
 
     def build_ohlcv(self, bucket: str = "minute", lookback: str | None = "2 HOURS") -> int:
@@ -216,11 +210,11 @@ class Lakehouse:
             if wm is not None:
                 cutoff = F.lit(wm) - F.expr(f"INTERVAL {lookback}")
                 s = s.filter(F.col("trade_time") >= cutoff)
-        candles = self._candles(s, bucket)
+        out = self._candles(s, bucket)
         # _partition_date is to_date(window_start), so adding it leaves
         # the key set unchanged; with the partition column inside the
         # keys, a key cannot move partitions and MERGE skips that check.
-        return table.merge(candles, keys=["product_id", "window_start", "_partition_date"])
+        return table.merge(out, keys=["product_id", "window_start", "_partition_date"])
 
     def build_daily_metrics(self) -> int:
         """daily_metrics from silver (formulas per SURVEY §2.8.1-2).
@@ -250,25 +244,14 @@ class Lakehouse:
         s = self.silver.read()
         if now is None:
             now = s.agg(F.max("trade_time")).first()[0]
-        w2 = Window.partitionBy("product_id").orderBy(
-            F.col("trade_time").desc(), F.col("trade_id").desc()
-        )
-        latest = (
-            s.withColumn("rn", F.row_number().over(w2))
-            .filter(F.col("rn") == 1)
-            .select("product_id", "price", F.col("trade_time").alias("updated_at"))
-        )
-        stats24 = (
-            s.filter(F.col("trade_time") >= F.lit(now) - F.expr("INTERVAL 24 HOURS"))
-            .groupBy("product_id")
-            .agg(
-                F.max("price").alias("high_24h"),
-                F.min("price").alias("low_24h"),
-                F.sum("size").cast("decimal(18,8)").alias("volume_24h"),
-            )
-        )
-        out = latest.join(F.broadcast(stats24), "product_id", "left").withColumn(
-            "snapshot_time", F.lit(now)
+        out = latest_prices(s, now).select(
+            "product_id",
+            "price",
+            F.col("trade_time").alias("updated_at"),
+            "high_24h",
+            "low_24h",
+            F.col("volume_24h").cast("decimal(18,8)").alias("volume_24h"),
+            F.lit(now).alias("snapshot_time"),
         )
         return self.gold["price_latest"].overwrite(out)
 

@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 from crypto_lakehouse_spark.functions import ddiv, fmt_date, fmt_ts
 from crypto_lakehouse_spark.io import load_table, register_views
 from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+from crypto_lakehouse_spark.operators.gold import candles, latest_prices
 from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.operators.trades import (
     ORACLE_TRADES_CTE,
@@ -310,37 +311,14 @@ def ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "ohlcv", "aggregation", "optimized"),
 )
 def ohlcv_1m_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass OHLCV via `min_by`/`max_by` on the (trade_time,
-    trade_id) struct — the optimized rewrite SURVEY §7 proposes for the
-    reference's W4+J1 plan (ohlcv_1m.sql:27-91). One hash aggregation,
+    """Single-pass OHLCV: the shared fused candle build
+    (`operators.gold.candles`, the rewrite SURVEY §7 proposes for the
+    reference's W4+J1 plan, ohlcv_1m.sql:27-91). One hash aggregation,
     one shuffle on (product_id, bucket) instead of window + distinct +
-    self-join (~5x fewer exchanges; tests/test_plans.py asserts it).
-    Declared against the SAME reference-shaped oracle, so the
-    differential check proves plan equivalence."""
-    s = cached_silver(spark, sf_dir)
-    ordk = F.struct("trade_time", "trade_id")
-    c = (
-        s.select(
-            "product_id",
-            "trade_id",
-            "trade_time",
-            "price",
-            "size",
-            (F.col("price") * F.col("size")).alias("trade_value"),
-            F.date_trunc("minute", "trade_time").alias("bucket"),
-        )
-        .groupBy("product_id", "bucket")
-        .agg(
-            F.min_by("price", ordk).alias("open"),
-            F.max_by("price", ordk).alias("close"),
-            F.max("price").alias("high"),
-            F.min("price").alias("low"),
-            F.sum("size").alias("volume"),
-            F.count("*").alias("trade_count"),
-            F.sum("trade_value").alias("pv"),
-        )
-    )
-    return _finish_candles(c, "MINUTE")
+    self-join (tests/test_plans.py asserts it). Declared against the
+    SAME reference-shaped oracle, so the differential check proves plan
+    equivalence."""
+    return _finish_candles(candles(cached_silver(spark, sf_dir), "minute"), "MINUTE")
 
 
 @query(
@@ -632,9 +610,8 @@ def price_latest_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the scale path):
 
     - latest price + 24h stats in ONE full-table aggregation
-      (max_by for the W2 top-1, conditional aggs for the 24h window —
-      LEFT-JOIN-null semantics preserved because when() yields all-null
-      groups for products with no recent trades);
+      (`operators.gold.latest_prices`, shared with the pipeline's
+      price_latest table);
     - prev-minute/hour closes by aggregating candles FIRST
       (groupBy bucket, max_by close) and ranking the tiny bucket set,
       instead of distinct-buckets + window + join-back-to-silver + agg.
@@ -646,16 +623,8 @@ def price_latest_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     s = cached_silver(spark, sf_dir)
     now = silver_watermark(spark, sf_dir)  # A6 scalar watermark
+    latest = latest_prices(s, now)
     ordkey = F.struct("trade_time", "trade_id")
-    in24h = F.col("trade_time") >= F.lit(now) - F.expr("INTERVAL 24 HOURS")
-
-    latest = s.groupBy("product_id").agg(
-        F.max_by("price", ordkey).alias("price"),
-        F.max("trade_time").alias("trade_time"),
-        F.max(F.when(in24h, F.col("price"))).alias("high_24h"),
-        F.min(F.when(in24h, F.col("price"))).alias("low_24h"),
-        F.sum(F.when(in24h, F.col("size"))).alias("volume_24h"),
-    )
 
     def prev_close(bucket: str, lookback: str):
         # Same bucket-window predicate as the reference shape: filter

@@ -23,12 +23,9 @@ from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark.functions import fmt_date
 from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
+from crypto_lakehouse_spark.operators.gold import candles
 from crypto_lakehouse_spark.queries.fixture_meter import fixture
-from crypto_lakehouse_spark.queries.reference_ops import (
-    _ORACLE_CANDLES,
-    _candles,
-    cached_silver,
-)
+from crypto_lakehouse_spark.queries.reference_ops import _ORACLE_CANDLES, cached_silver
 from crypto_lakehouse_spark.operators.trades import ORACLE_TRADES_CTE
 from crypto_lakehouse_spark.queries.registry import query
 
@@ -47,43 +44,11 @@ _DAILY_ORACLE = ORACLE_TRADES_CTE + "," + _ORACLE_CANDLES.format(bucket="day")
 @fixture("daily_candles")
 def _daily_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized gold daily-candle fixture for `sf_dir` (block
-    comment above); rows identical to `_candles(spark, sf_dir,
-    "day")`, which the DuckDB oracles recompute inline.
-
-    r14 optimization round: the fixture BUILD uses the fused
-    single-aggregation candle plan (`min_by`/`max_by` on the
-    (trade_time, trade_id) struct — the exact rewrite ohlcv_1m_fused
-    proves against the reference-shaped oracle at minute granularity):
-    one shuffle instead of window + DISTINCT + self-join. Same column
-    order and types as `_candles`; every consumer's DuckDB oracle
-    still derives daily candles from the reference W4+J1 shape, so the
-    hashes prove the fused build row-identical. The reference-shaped
-    plan remains the declared operator in ohlcv_1m/ohlcv_1h/
-    daily_metrics — this is only the shared fixture's build."""
-    s = cached_silver(spark, sf_dir)
-    ordk = F.struct("trade_time", "trade_id")
-    fused = (
-        s.select(
-            "product_id",
-            "trade_id",
-            "trade_time",
-            "price",
-            "size",
-            (F.col("price") * F.col("size")).alias("trade_value"),
-            F.date_trunc("day", "trade_time").alias("bucket"),
-        )
-        .groupBy("product_id", "bucket")
-        .agg(
-            F.max("price").alias("high"),
-            F.min("price").alias("low"),
-            F.sum("size").alias("volume"),
-            F.count("*").alias("trade_count"),
-            F.sum("trade_value").alias("pv"),
-            F.min_by("price", ordk).alias("open"),
-            F.max_by("price", ordk).alias("close"),
-        )
-    )
-    return truncate_lineage(fused, spark)
+    comment above): the shared fused candle build
+    (`operators.gold.candles`). Same rows, column order and types as
+    the reference-shaped `reference_ops._candles(spark, sf_dir,
+    "day")`, which every consumer's DuckDB oracle recomputes inline."""
+    return truncate_lineage(candles(cached_silver(spark, sf_dir), "day"), spark)
 
 
 # --- Garman-Klass realized volatility ---------------------------------------

@@ -1,25 +1,20 @@
-"""Explicit schemas + DDL for the medallion layers (SURVEY §1.3:
-fixed, explicit schemas, never inferred).
+"""Parse schema and partition layouts for the medallion layers
+(SURVEY §1.3: fixed, explicit schemas, never inferred).
 
 Bronze keeps raw string fields + full payload (schema-on-read escape
 hatch, reference streaming_bronze_writer.py:69-89); silver is typed
 and deduplicated (bronze_to_silver.py:49-69); gold carries the OHLCV
-column specs (ohlcv_1m.sql:79-91).
+column specs (ohlcv_1m.sql:79-91). The column list of each stored
+table is the one its writer (pipeline/lakehouse.py) produces; the
+table's `_schema.json` sidecar records it at write time, and
+`LakehouseTable.read()` reads with that recorded schema
+(tests/test_lakehouse.py::test_recorded_schema_matches_files pins it
+against the files).
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    BooleanType,
-    DateType,
-    DecimalType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 # Parse schema for raw trade JSON — all strings, convert in silver
 # (reference TRADE_SCHEMA, streaming_bronze_writer.py:47-59).
@@ -35,53 +30,6 @@ TRADE_JSON_SCHEMA = StructType(
         StructField("size", StringType()),
         StructField("price", StringType()),
         StructField("side", StringType()),
-    ]
-)
-
-BRONZE_SCHEMA = StructType(
-    [
-        StructField("_ingested_at", TimestampType()),
-        StructField("_raw_payload", StringType()),
-        StructField("_kafka_offset", LongType()),
-        StructField("_kafka_partition", IntegerType()),
-        StructField("trade_id", StringType()),
-        StructField("product_id", StringType()),
-        StructField("price", StringType()),
-        StructField("size", StringType()),
-        StructField("side", StringType()),
-        StructField("time", StringType()),
-        StructField("_ingestion_date", DateType()),
-    ]
-)
-
-SILVER_SCHEMA = StructType(
-    [
-        StructField("trade_id", LongType()),
-        StructField("product_id", StringType()),
-        StructField("price", DecimalType(18, 8)),
-        StructField("size", DecimalType(18, 8)),
-        StructField("side", StringType()),
-        StructField("trade_time", TimestampType()),
-        StructField("ingested_at", TimestampType()),
-        StructField("_is_late_arrival", BooleanType()),
-        StructField("_source_latency_ms", LongType()),
-        StructField("_trade_date", DateType()),
-    ]
-)
-
-OHLCV_SCHEMA = StructType(
-    [
-        StructField("product_id", StringType()),
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-        StructField("open", DecimalType(18, 8)),
-        StructField("high", DecimalType(18, 8)),
-        StructField("low", DecimalType(18, 8)),
-        StructField("close", DecimalType(18, 8)),
-        StructField("volume", DecimalType(18, 8)),
-        StructField("trade_count", LongType()),
-        StructField("vwap", DecimalType(18, 8)),
-        StructField("_partition_date", DateType()),
     ]
 )
 

@@ -52,6 +52,16 @@ def _scratch_dir(prefix: str) -> str:
     _SCRATCH.append(d)
     return d
 
+
+def _stage_file(df: DataFrame, dest: str, n: int) -> None:
+    """Write `df` as the single parquet file `<dest>/<n:03d>.parquet`:
+    one file per replayed micro-batch (with maxFilesPerTrigger=1, file
+    n is batch n)."""
+    tmp = _scratch_dir("stage_chunk_")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
+    os.rename(os.path.join(tmp, part), os.path.join(dest, f"{n:03d}.parquet"))
+
 def _median_micros(ev: DataFrame) -> int:
     """Median event time as epoch micros, used to split the replay
     timeline into deterministic halves. Empty relation (a legal empty
@@ -208,14 +218,8 @@ def run_kafka_wire_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = _scratch_dir("kafka_wire_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("kw_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(wire.filter(F.col("offset") % 2 == 0), 0)
-    _stage(wire.filter(F.col("offset") % 2 == 1), 1)
+    _stage_file(wire.filter(F.col("offset") % 2 == 0), feed, 0)
+    _stage_file(wire.filter(F.col("offset") % 2 == 1), feed, 1)
 
     raw = (
         spark.readStream.schema(KAFKA_WIRE_SCHEMA)
@@ -273,21 +277,24 @@ def run_streaming_ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming equivalence (T5) on the reference's actual workload, not
     a toy counter.
 
-    Streaming open/close use min_by/max_by over the (trade_time,
-    trade_id) struct — the declarative, order-insensitive equivalent
-    of the batch plan's full-frame FIRST/LAST_VALUE window with the
-    same tie-break, so the results are value-identical no matter how
-    rows land in micro-batches. high/low/volume/pv are plain algebraic
-    aggregates; vwap divides the exact decimal pv at emission,
-    identical to _finish_candles. The silver relation is staged (the
-    dedup step is covered by the streaming_dedup_* queries; chaining
-    both stateful stages here would just retest them), split into 3
-    micro-batches by trade_id so every window's state is built
-    incrementally across triggers. Complete output mode keeps the
-    bounded window x product key space; at 100 TB this becomes
-    watermark + append into a keyed sink with the same plan shape.
+    The aggregates are the shared fused candle build
+    (`operators.gold.candle_aggs`): open/close are min_by/max_by over
+    the (trade_time, trade_id) struct — the declarative,
+    order-insensitive equivalent of the batch plan's full-frame
+    FIRST/LAST_VALUE window with the same tie-break, so the results are
+    value-identical no matter how rows land in micro-batches.
+    high/low/volume/pv are plain algebraic aggregates; vwap divides
+    the exact decimal pv at emission, identical to _finish_candles.
+    The silver relation is staged (the dedup step is covered by the
+    streaming_dedup_* queries; chaining both stateful stages here would
+    just retest them), split into 3 micro-batches by trade_id so every
+    window's state is built incrementally across triggers. Complete
+    output mode keeps the bounded window x product key space; at 100 TB
+    this becomes watermark + append into a keyed sink with the same
+    plan shape.
     """
     from crypto_lakehouse_spark.functions import ddiv, fmt_ts
+    from crypto_lakehouse_spark.operators.gold import candle_aggs
     from crypto_lakehouse_spark.operators.trades import (
         raw_trades,
         silver_trades,
@@ -298,18 +305,8 @@ def run_streaming_ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = _scratch_dir("ohlcv_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("oc_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet")
-        )
-
     for chunk in range(3):
-        _stage(s.filter(F.col("trade_id") % 3 == chunk), chunk)
+        _stage_file(s.filter(F.col("trade_id") % 3 == chunk), feed, chunk)
 
     stream = (
         spark.readStream.schema(_stream_schema(spark, feed))
@@ -317,24 +314,8 @@ def run_streaming_ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(feed)
     )
     agg = (
-        stream.withColumn("trade_value", F.col("price") * F.col("size"))
-        .groupBy(
-            F.window("trade_time", "1 minute").alias("w"),
-            F.col("product_id"),
-        )
-        .agg(
-            F.expr("min_by(price, struct(trade_time, trade_id))").alias(
-                "open"
-            ),
-            F.expr("max_by(price, struct(trade_time, trade_id))").alias(
-                "close"
-            ),
-            F.max("price").alias("high"),
-            F.min("price").alias("low"),
-            F.sum("size").alias("volume"),
-            F.count("*").alias("trade_count"),
-            F.sum("trade_value").alias("pv"),
-        )
+        stream.groupBy(F.window("trade_time", "1 minute").alias("w"), F.col("product_id"))
+        .agg(*candle_aggs())
         .select(
             "product_id",
             fmt_ts("w.start").alias("window_start"),
@@ -434,15 +415,9 @@ def run_watermarked_counts(
     mid = F.timestamp_micros(F.lit(mid_us))
     feed = _scratch_dir("wm_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("wm_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(ev.filter(F.col("ts") <= mid), 0)
-    _stage(ev.filter(F.col("ts") > mid), 1)
-    _stage(ev.orderBy("ts", "event_id").limit(late_rows), 2)
+    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
+    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
+    _stage_file(ev.orderBy("ts", "event_id").limit(late_rows), feed, 2)
 
     stream = (
         spark.readStream.schema(_stream_schema(spark, feed))
@@ -573,17 +548,11 @@ def run_stream_ingest(
     fresh = not os.listdir(stage) if os.path.isdir(stage) else True
     os.makedirs(stage, exist_ok=True)
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("ingest_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(stage, f"{n:03d}.parquet"))
-
     if fresh:
         feed = trade_feed(spark, sf_dir)
         # Two deterministic micro-batches, split on offset parity.
-        _stage(feed.filter(F.col("offset") % 2 == 0), 0)
-        _stage(feed.filter(F.col("offset") % 2 == 1), 1)
+        _stage_file(feed.filter(F.col("offset") % 2 == 0), stage, 0)
+        _stage_file(feed.filter(F.col("offset") % 2 == 1), stage, 1)
 
     stream = (
         spark.readStream.schema(
@@ -685,14 +654,8 @@ def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     feed = _scratch_dir("ddw_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("ddw_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(ev, 0)
-    _stage(ev.filter(F.col("event_id") % 13 == 0), 1)  # re-delivery batch
+    _stage_file(ev, feed, 0)
+    _stage_file(ev.filter(F.col("event_id") % 13 == 0), feed, 1)  # re-delivery batch
 
     stream = (
         spark.readStream.schema(_stream_schema(spark, feed))
@@ -872,19 +835,11 @@ def run_join_then_window(
 
     feed = _scratch_dir("jw_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("jw_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
     mid_us = _median_micros(ev)
     mid = F.timestamp_micros(F.lit(mid_us))
-    _stage(ev.filter(F.col("ts") <= mid), 0)
-    _stage(ev.filter(F.col("ts") > mid), 1)
-    _stage(flush, 2)
+    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
+    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
+    _stage_file(flush, feed, 2)
 
     def _source() -> DataFrame:
         return (
@@ -1004,15 +959,9 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = _scratch_dir("cdc_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("cdc_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(orders, 0)
-    _stage(u1, 1)
-    _stage(u2, 2)
+    _stage_file(orders, feed, 0)
+    _stage_file(u1, feed, 1)
+    _stage_file(u2, feed, 2)
 
     table = LakehouseTable(
         spark,
@@ -1078,14 +1027,8 @@ def run_streaming_session_window(
     mid = F.timestamp_micros(F.lit(mid_us))
     feed = _scratch_dir("sess_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("sess_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(ev.filter(F.col("ts") <= mid), 0)
-    _stage(ev.filter(F.col("ts") > mid), 1)
+    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
+    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
 
     stream = (
         spark.readStream.schema(_stream_schema(spark, feed))
@@ -1233,14 +1176,8 @@ def run_stream_stream_left_join(
     mid = F.timestamp_micros(F.lit(mid_us))
     feed = _scratch_dir("ssl_feed_")
 
-    def _stage(df: DataFrame, n: int) -> None:
-        tmp = _scratch_dir("ssl_chunk_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(feed, f"{n:03d}.parquet"))
-
-    _stage(ev.filter(F.col("ts") <= mid), 0)
-    _stage(ev.filter(F.col("ts") > mid), 1)
+    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
+    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
 
     def _src() -> DataFrame:
         return (

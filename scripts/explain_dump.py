@@ -1,7 +1,9 @@
-"""Dump .explain("formatted") for named queries to plans/r13/.
+"""Dump .explain("formatted") for named queries to plans/<round>/.
 
 Usage: python scripts/explain_dump.py <suffix> name [name...]
-Writes plans/r13/<name>_<suffix>.txt (suffix = "before" / "after").
+Writes plans/<round>/<name>_<suffix>.txt (suffix = "before" / "after"),
+where <round> is $SPARK_GRAFT_PLANS_ROUND (default r14). Queries run
+over the scale-factor directory in $SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations

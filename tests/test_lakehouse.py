@@ -73,6 +73,64 @@ def test_price_latest_one_row_per_product(lakehouse):
     assert p.filter(F.col("price").isNull()).count() == 0
 
 
+def test_price_latest_values(spark, tmp_path):
+    """Each price_latest row on a hand-built silver: a trade_time tie
+    goes to the higher trade_id (not to the higher trade_id at an
+    earlier time), a product whose trades are all older than 24 h keeps
+    its latest price with NULL 24 h stats, and the 24 h stats count only
+    trades at or after `now` - 24 h."""
+    from datetime import datetime, timedelta
+    from decimal import Decimal as D
+
+    lh = Lakehouse(spark, str(tmp_path / "warehouse"))
+    now = datetime(2024, 3, 2, 12, 0, 0)
+    t_tie = now - timedelta(minutes=5)
+
+    def trade(trade_id, product, price, size, t):
+        return (trade_id, product, D(price), D(size), "buy", t, t, 0, False, t.date())
+
+    rows = [
+        trade(10, "TIE", "5", "1", t_tie),
+        trade(11, "TIE", "7", "2", t_tie),
+        trade(12, "TIE", "9", "3", t_tie - timedelta(hours=1)),
+        trade(20, "OLD", "3", "1", now - timedelta(hours=30)),
+        trade(21, "OLD", "4", "1", now - timedelta(hours=48)),
+        trade(30, "PLAIN", "8", "1.5", now - timedelta(hours=2)),
+        trade(31, "PLAIN", "6", "2.5", now - timedelta(hours=1)),
+        trade(32, "PLAIN", "100", "9", now - timedelta(hours=25)),
+    ]
+    lh.silver.overwrite(
+        spark.createDataFrame(
+            rows,
+            "trade_id BIGINT, product_id STRING, price DECIMAL(18,8), size DECIMAL(18,8), "
+            "side STRING, trade_time TIMESTAMP, ingested_at TIMESTAMP, "
+            "_source_latency_ms BIGINT, _is_late_arrival BOOLEAN, _trade_date DATE",
+        )
+    )
+    assert lh.build_price_latest(now=now) == 3
+    got = {
+        r.product_id: r.asDict()
+        for r in lh.gold["price_latest"].read().collect()
+    }
+    assert got == {
+        "TIE": {
+            "product_id": "TIE", "price": D("7"), "updated_at": t_tie,
+            "high_24h": D("9"), "low_24h": D("5"), "volume_24h": D("6"),
+            "snapshot_time": now,
+        },
+        "OLD": {
+            "product_id": "OLD", "price": D("3"), "updated_at": now - timedelta(hours=30),
+            "high_24h": None, "low_24h": None, "volume_24h": None,
+            "snapshot_time": now,
+        },
+        "PLAIN": {
+            "product_id": "PLAIN", "price": D("6"), "updated_at": now - timedelta(hours=1),
+            "high_24h": D("8"), "low_24h": D("6"), "volume_24h": D("4"),
+            "snapshot_time": now,
+        },
+    }
+
+
 def test_incremental_rerun_is_idempotent(lakehouse):
     before = lakehouse.silver.read().count()
     lakehouse.bronze_to_silver(lookback_hours=2)

@@ -349,3 +349,25 @@ def test_centroid_driver_budget_contract():
     _assert_centroid_budget(500_000, 64)  # ~250 MB: still inside
     with _pytest.raises(MemoryError, match="broadcast-join"):
         _assert_centroid_budget(600_000, 64)
+
+
+def test_trade_transforms_defined_only_in_operators():
+    """W1 dedup (`operators/trades.py`), fused candles and latest
+    prices (`operators/gold.py`) have one implementation each: no module
+    outside `operators/` may partition by trade_id or take `min_by` of
+    the price (also inside an `F.expr` string) again."""
+    import pathlib
+    import re
+
+    import crypto_lakehouse_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pattern = re.compile(r'partitionBy\("trade_id"\)|min_by\(\s*"?price')
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path.parent.name != "operators"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, "use crypto_lakehouse_spark.operators: " + ", ".join(hits)

@@ -21,6 +21,12 @@ def _view_rdd_id(spark, view: str) -> int:
     return plan.collectLeaves().head().rdd().id()
 
 
+def _assert_same_rows(got, want) -> None:
+    assert got.columns == want.columns
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_daily_candles_memo_hits_and_evicts(spark):
     from crypto_lakehouse_spark.queries import ta_ops
     from crypto_lakehouse_spark.queries.fixture_meter import builds_for
@@ -31,16 +37,16 @@ def test_daily_candles_memo_hits_and_evicts(spark):
     built = builds_for(SF)["daily_candles"]
     b = ta_ops._daily_candles(spark, SF2)
     assert b is not a
-    # rows identical to the raw plan (the fixture is a materialization,
-    # not a semantic change)
-    assert b.count() == _candles(spark, SF2, "day").count()
+    # rows identical to the reference-shaped plan (the fused build is a
+    # materialization, not a semantic change)
+    _assert_same_rows(b, _candles(spark, SF2, "day"))
     # Back to SF: the SF2 build evicted the SF entry, so this rebuilds.
     c = ta_ops._daily_candles(spark, SF)
     assert c is not a
     assert builds_for(SF)["daily_candles"] > built, (
         "switching sf_dir must evict the superseded fixture"
     )
-    assert c.count() == _candles(spark, SF, "day").count()
+    _assert_same_rows(c, _candles(spark, SF, "day"))
 
 
 def test_graph_edges_fixture_memo(spark):
