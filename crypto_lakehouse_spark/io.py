@@ -36,6 +36,7 @@ gate never fires and neither path activates.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
 import shutil
@@ -79,6 +80,26 @@ def session_key(spark: SparkSession) -> str:
         k = uuid.uuid4().hex
         spark._clh_session_uid = k
     return k
+
+
+# Process-scoped scratch dirs (replay feeds, checkpoints, per-call
+# warehouses, staged formats): every one is registered here and swept
+# at exit, so long driver/bench sessions don't accumulate temp dirs.
+_SCRATCH: list[str] = []
+
+
+@atexit.register
+def _cleanup_scratch() -> None:
+    for d in _SCRATCH:
+        shutil.rmtree(d, ignore_errors=True)
+    _SCRATCH.clear()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir, removed when the process exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(d)
+    return d
 
 
 # (session key, sf_dir, table) -> DataFrame. Re-reading parquet repeats

@@ -14,31 +14,19 @@ because the wire format is epoch-micros BIGINT (see text_formats.py).
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_lakehouse_spark.io import load_table, session_key
+from crypto_lakehouse_spark.io import load_table, scratch_dir, session_key
 from crypto_lakehouse_spark.queries.registry import query
 from crypto_lakehouse_spark.sources.text_formats import (
     read_events_csv,
     read_events_jsonl,
 )
 
-# (session key, sf_dir, fmt) -> staged directory. Staged dirs are
-# process-scoped scratch: registered for atexit removal so long
-# driver/bench sessions don't accumulate them on disk.
+# (session key, sf_dir, fmt) -> staged directory (an `io.scratch_dir`,
+# swept at process exit).
 _STAGED: dict[tuple[str, str, str], str] = {}
-
-
-@atexit.register
-def _cleanup_staged() -> None:
-    for d in _STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED.clear()
 
 
 def _stage_events(spark: SparkSession, sf_dir: str, fmt: str) -> str:
@@ -51,7 +39,7 @@ def _stage_events(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         "event_type",
         "value",
     )
-    out = tempfile.mkdtemp(prefix=f"events_{fmt}_")
+    out = scratch_dir(f"events_{fmt}_")
     if fmt == "csv":
         ev.write.mode("overwrite").option("header", "true").csv(out)
     elif fmt == "orc":
@@ -291,15 +279,13 @@ def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     written through format('arrow_parquet') and read back natively
     must hash-match the original table's aggregate — proving the
     Arrow write path loses nothing."""
-    import tempfile as _tf
-
     from crypto_lakehouse_spark.sources.pyarrow_source import register
 
     register(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    out = _tf.mkdtemp(prefix="pyds_write_q_") + "/t"
+    out = scratch_dir("pyds_write_q_") + "/t"
     ev.write.format("arrow_parquet").option("path", out).mode("append").save()
     return (
         spark.read.parquet(out)

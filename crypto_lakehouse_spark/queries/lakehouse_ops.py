@@ -26,33 +26,11 @@ read-side plans.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
-# Per-call temp warehouses, atexit-swept (same registry pattern as
-# streaming/file_stream._SCRATCH) so bench/driver loops don't
-# accumulate them on disk.
-_SCRATCH: list[str] = []
-
-
-@atexit.register
-def _cleanup_scratch() -> None:
-    for d in _SCRATCH:
-        shutil.rmtree(d, ignore_errors=True)
-    _SCRATCH.clear()
-
-
-def _scratch_dir(prefix: str) -> str:
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SCRATCH.append(d)
-    return d
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crypto_lakehouse_spark.functions import fmt_ts
-from crypto_lakehouse_spark.io import register_views
+from crypto_lakehouse_spark.io import register_views, scratch_dir
 from crypto_lakehouse_spark.operators.trades import ORACLE_TRADES_CTE
 from crypto_lakehouse_spark.queries.registry import query
 
@@ -122,7 +100,7 @@ def merge_upsert_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = LakehouseTable(
         spark,
-        _scratch_dir("merge_q_") + "/t",
+        scratch_dir("merge_q_") + "/t",
         partition_by=["o_orderstatus"],
     )
     t.overwrite(target)
@@ -190,7 +168,7 @@ def medallion_gold_ohlcv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_lakehouse_spark.pipeline.lakehouse import Lakehouse
     from crypto_lakehouse_spark.sources.trade_feed import trade_feed
 
-    lh = Lakehouse(spark, _scratch_dir("wh_medallion_"))
+    lh = Lakehouse(spark, scratch_dir("wh_medallion_"))
     lh.ingest_feed(trade_feed(spark, sf_dir))
     lh.bronze_to_silver(lookback_hours=None)
     lh.build_ohlcv("minute", lookback=None)
@@ -258,7 +236,7 @@ def versioned_time_travel_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = spark.sql(
         "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 = 0"
     )
-    t = VersionedTable(spark, _scratch_dir("vt_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("vt_q_") + "/t")
     assert t.append(base) == 0
     assert t.merge(spark.sql(_VT_SRC_SQL), keys=["o_orderkey"]) == 1
 
@@ -327,7 +305,7 @@ def merge_delete_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = LakehouseTable(
         spark,
-        _scratch_dir("merge_del_q_") + "/t",
+        scratch_dir("merge_del_q_") + "/t",
         partition_by=["o_orderpriority"],
     )
     t.overwrite(target)
@@ -400,8 +378,6 @@ def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_changes(keys, 0, 1) emits inserts and both update images —
     proven against the relational snapshot-diff derivation. See
     pipeline/versioned.table_changes for the one-join scale shape."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
@@ -413,7 +389,7 @@ def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders WHERE o_orderkey % 3 = 0
         """
     )
-    t = VersionedTable(spark, _scratch_dir("cdf_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("cdf_q_") + "/t")
     t.overwrite(target)                                   # v0
     t.merge(spark.sql(_MERGE_SRC_SQL), keys=["o_orderkey"])  # v1
     return (
@@ -617,8 +593,6 @@ def versioned_history_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every version). Wall-clock timestamps and physical file
     counts are excluded from the report — only the deterministic
     ledger is value-checked."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
@@ -634,7 +608,7 @@ def versioned_history_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     upd = base.withColumn("o_totalprice", F.col("o_totalprice") + 1)
 
-    t = VersionedTable(spark, _scratch_dir("hist_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("hist_q_") + "/t")
     t.overwrite(base)       # v0
     t.append(extra)         # v1
     t.merge(upd, keys=["o_orderkey"])  # v2 (updates only: row count stable)
@@ -686,7 +660,7 @@ def zorder_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") / F.lit(60_000_000)).cast("bigint").alias("tmin"),
         "value",
     )
-    t = VersionedTable(spark, _scratch_dir("zorder_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("zorder_q_") + "/t")
     t.overwrite(events.repartition(8))
     t.optimize(target_file_mb=0.2, cluster_by=["tmin", "value"])
     lo_t, hi_t = 28_414_080, 28_421_280
@@ -751,7 +725,7 @@ def versioned_delete_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = VersionedTable(
         spark,
-        _scratch_dir("vdel_q_") + "/t",
+        scratch_dir("vdel_q_") + "/t",
         partition_by=["o_orderpriority"],
     )
     t.overwrite(orders.repartition(4))
@@ -819,7 +793,7 @@ def versioned_update_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = VersionedTable(
         spark,
-        _scratch_dir("vupd_q_") + "/t",
+        scratch_dir("vupd_q_") + "/t",
         partition_by=["o_orderpriority"],
     )
     t.overwrite(orders.repartition(4))
@@ -893,7 +867,7 @@ def cdf_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("o_orderstatus").alias("status"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("price"),
     )
-    t = VersionedTable(spark, _scratch_dir("ivm_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("ivm_q_") + "/t")
     t.overwrite(orders.repartition(4))  # v0
     upd = orders.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey",
@@ -998,7 +972,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,4)").cast("double").alias("o_totalprice"),
     )
     t = VersionedTable(
-        spark, _scratch_dir("bloom_q_") + "/t", bloom_columns=["key"]
+        spark, scratch_dir("bloom_q_") + "/t", bloom_columns=["key"]
     )
     t.overwrite(orders.repartition(16))
     import hashlib
@@ -1042,7 +1016,7 @@ def timestamp_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,4)").alias("o_totalprice"),
     )
-    t = VersionedTable(spark, _scratch_dir("tstt_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("tstt_q_") + "/t")
     t.overwrite(orders.repartition(4))  # v0
     mid = _time.time()
     _time.sleep(0.05)
@@ -1132,7 +1106,7 @@ def row_tracking_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("o_orderkey % 4 = 0")
     )
     t = VersionedTable(
-        spark, _scratch_dir("rowtrack_q_") + "/t", row_tracking=True
+        spark, scratch_dir("rowtrack_q_") + "/t", row_tracking=True
     )
     t.overwrite(orders.coalesce(1).sortWithinPartitions("o_orderkey"))
     n0 = t._load(0)["row_tracking"]["next"]
@@ -1247,7 +1221,7 @@ def cdf_by_row_id_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("o_orderkey % 4 = 0")
     )
     t = VersionedTable(
-        spark, _scratch_dir("cdfrow_q_") + "/t", row_tracking=True
+        spark, scratch_dir("cdfrow_q_") + "/t", row_tracking=True
     )
     t.overwrite(orders.coalesce(1).sortWithinPartitions("o_orderkey"))
     t.delete(
@@ -1327,7 +1301,7 @@ def equality_delete_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = VersionedTable(
         spark,
-        _scratch_dir("eqdel_q_") + "/t",
+        scratch_dir("eqdel_q_") + "/t",
         partition_by=["o_orderpriority"],
     )
     t.overwrite(orders.repartition(4))
@@ -1393,7 +1367,7 @@ def metadata_only_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = VersionedTable(
         spark,
-        _scratch_dir("metastats_q_") + "/t",
+        scratch_dir("metastats_q_") + "/t",
         partition_by=["o_orderpriority"],
     )
     t.overwrite(orders.repartition(4))
@@ -1441,7 +1415,7 @@ def incremental_cluster_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    t = VersionedTable(spark, _scratch_dir("inccl_q_") + "/t")
+    t = VersionedTable(spark, scratch_dir("inccl_q_") + "/t")
     t.overwrite(ev.filter("event_id % 2 = 0").repartition(4))
     t.optimize_incremental(cluster_by=["value", "user_id"], target_file_mb=0.2)
     t.append(ev.filter("event_id % 2 = 1").repartition(4))
@@ -1499,7 +1473,7 @@ def generated_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = VersionedTable(
         spark,
-        _scratch_dir("genpart_q_") + "/t",
+        scratch_dir("genpart_q_") + "/t",
         partition_by=["event_date"],
         generated_columns={
             "event_date": {"expr": "CAST(ts AS DATE)", "type": "date"}

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 import crypto_lakehouse_spark.queries.reference_ops  # noqa: F401  (registers oracle we reuse)
 import crypto_lakehouse_spark.queries.text_ops  # noqa: F401  (registers oracle we reuse)
-from crypto_lakehouse_spark.io import load_table, register_views
+from crypto_lakehouse_spark.io import load_table, register_views, scratch_dir
 from crypto_lakehouse_spark.queries.fixture_meter import fixture
 from crypto_lakehouse_spark.queries.registry import REGISTRY, query
 from crypto_lakehouse_spark.queries.text_ops import _STOP
@@ -366,14 +366,10 @@ FROM e CROSS JOIN m CROSS JOIN g
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     """Materialize bucketed orders/lineitem once per session; returns
     the database name."""
-    import atexit
-    import shutil
-    import tempfile
     import uuid
 
     db = f"buck_{uuid.uuid4().hex[:8]}"
-    loc = tempfile.mkdtemp(prefix="bucketed_")
-    atexit.register(shutil.rmtree, loc, ignore_errors=True)
+    loc = scratch_dir("bucketed_")
     spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
     # repartition(8, key) BEFORE the bucketed write (r14, guide
     # §6 "aim for few large output files"): without it every scan

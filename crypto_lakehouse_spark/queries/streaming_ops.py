@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from crypto_lakehouse_spark.io import scratch_dir
 from crypto_lakehouse_spark.queries.registry import REGISTRY, query
 from crypto_lakehouse_spark.session import configure_session
 from crypto_lakehouse_spark.streaming.file_stream import (
@@ -123,10 +124,8 @@ def stream_ingest_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     go to the DLQ. The oracle re-derives the exact bronze contents from
     the events table; string-typed bronze columns are cast back to
     numeric so the comparison is engine-neutral."""
-    import tempfile as _tf
-
     configure_session(spark)
-    lh, metrics = run_stream_ingest(spark, sf_dir, _tf.mkdtemp(prefix="wh_ingest_"))
+    lh, metrics = run_stream_ingest(spark, sf_dir, scratch_dir("wh_ingest_"))
     # Silent-empty-ingest guard: a batch that HAD input rows must land
     # bronze rows. A genuinely empty source (legal empty partition) is
     # not a silent loss — engine_input_rows says so per batch.

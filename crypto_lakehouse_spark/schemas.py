@@ -17,7 +17,13 @@ from __future__ import annotations
 from pyspark.sql.types import StringType, StructField, StructType
 
 # Parse schema for raw trade JSON — all strings, convert in silver
-# (reference TRADE_SCHEMA, streaming_bronze_writer.py:47-59).
+# (reference TRADE_SCHEMA, streaming_bronze_writer.py:47-59). The
+# Coinbase wire emits trade_id/sequence as quoted strings, and Jackson
+# will NOT coerce a quoted string into a numeric field — a BIGINT
+# trade_id here silently nulls every row (caught by the
+# kafka_wire_parse differential, round 5). Numeric typing happens
+# downstream in silver, mirroring the reference's bronze-keeps-strings
+# contract.
 TRADE_JSON_SCHEMA = StructType(
     [
         StructField("type", StringType()),

@@ -17,14 +17,18 @@ Semantics carried over from the reference:
 - append-only bronze sink with checkpoint (T2/T3);
 - non-trade filtering by null key (T7) and DLQ routing of invalid
   rows via foreachBatch (T9, engine-side analog of the producer DLQ).
+
+Every replayed query runs the same stage -> replay -> drain harness:
+`stage_time_chunks` (or `_stage_file` per batch) writes one parquet
+file per micro-batch into a scratch dir, `replay` reads them back one
+file per trigger, and `drain` runs the query to completion into a
+memory sink (`drain_until` polls one for sources that stay unbounded).
+Scratch dirs come from `io.scratch_dir`, swept at process exit.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import threading
 import time
 import uuid
@@ -32,46 +36,110 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-# Staging/feed/checkpoint dirs are process-scoped scratch; register
-# every one for atexit removal so long driver/bench sessions don't
-# accumulate temp dirs (same pattern as queries/formats_ops._STAGED).
-_SCRATCH: list[str] = []
-
-
-@atexit.register
-def _cleanup_scratch() -> None:
-    for d in _SCRATCH:
-        shutil.rmtree(d, ignore_errors=True)
-    _SCRATCH.clear()
-
-
-def _scratch_dir(prefix: str) -> str:
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SCRATCH.append(d)
-    return d
+from crypto_lakehouse_spark.io import load_table, normalize_timestamps, scratch_dir
+from crypto_lakehouse_spark.schemas import TRADE_JSON_SCHEMA
 
 
 def _stage_file(df: DataFrame, dest: str, n: int) -> None:
     """Write `df` as the single parquet file `<dest>/<n:03d>.parquet`:
     one file per replayed micro-batch (with maxFilesPerTrigger=1, file
     n is batch n)."""
-    tmp = _scratch_dir("stage_chunk_")
+    tmp = scratch_dir("stage_chunk_")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
     os.rename(os.path.join(tmp, part), os.path.join(dest, f"{n:03d}.parquet"))
 
-def _median_micros(ev: DataFrame) -> int:
-    """Median event time as epoch micros, used to split the replay
-    timeline into deterministic halves. Empty relation (a legal empty
-    partition) has no quantile — return epoch 0 so every half-filter
-    stages an empty chunk and the stream drains to an empty result
-    instead of IndexError-ing on approxQuantile's empty list."""
-    qs = ev.select(F.unix_micros("ts").alias("us")).approxQuantile(
-        "us", [0.5], 0.0
+
+def stage_time_chunks(df: DataFrame, ts: str, n: int) -> str:
+    """Stage `df` as `n` contiguous `ts` ranges, one `_stage_file` each
+    (`000.parquet` ...), in a fresh scratch dir; returns the dir.
+
+    Chunk i holds b[i-1] < ts <= b[i], where the b are exact quantiles
+    (relative error 0.0) taken over epoch micros for a TIMESTAMP column
+    and over the values themselves for a numeric one. An empty relation
+    (a legal empty partition) has no quantiles, so every chunk is
+    staged empty and the stream drains to an empty result instead of
+    IndexError-ing on approxQuantile's empty list."""
+    is_ts = dict(df.dtypes)[ts] == "timestamp"
+    key = F.unix_micros(ts) if is_ts else F.col(ts)
+    bounds = df.select(key.alias("_k")).approxQuantile(
+        "_k", [i / n for i in range(1, n)], 0.0
     )
-    return int(qs[0]) if qs else 0
+    bound = (lambda b: F.timestamp_micros(F.lit(int(b)))) if is_ts else F.lit
+    feed = scratch_dir("replay_feed_")
+    for i in range(n):
+        chunk = df
+        if bounds and i > 0:
+            chunk = chunk.filter(F.col(ts) > bound(bounds[i - 1]))
+        if bounds and i < n - 1:
+            chunk = chunk.filter(F.col(ts) <= bound(bounds[i]))
+        _stage_file(chunk, feed, i)
+    return feed
+
+
+def replay(spark: SparkSession, feed: str, schema=None) -> DataFrame:
+    """File-source stream over a staged feed, one file per micro-batch
+    (file n is batch n). The schema defaults to the staged files' own
+    footers (`_stream_schema`); pass a declared one to skip that read."""
+    return (
+        spark.readStream.schema(schema or _stream_schema(spark, feed))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+def _memory_sink(
+    df: DataFrame, mode: str, **trigger
+) -> tuple[StreamingQuery, DataFrame]:
+    """Start `df` into a uuid-named memory sink with a scratch
+    checkpoint; returns the running query and the sink table."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(f"sink_{uuid.uuid4().hex[:8]}")
+        .outputMode(mode)
+        .option("checkpointLocation", scratch_dir("ckpt_"))
+        .trigger(**trigger)
+        .start()
+    )
+    return q, df.sparkSession.table(q.name)
+
+
+def drain(df: DataFrame, mode: str) -> DataFrame:
+    """Run `df` to completion (availableNow) into a memory sink and
+    return the sink table."""
+    q, sink = _memory_sink(df, mode, availableNow=True)
+    q.awaitTermination()
+    return sink
+
+
+def drain_until(
+    q: StreamingQuery, sink: DataFrame, count_col: str, total: int
+) -> DataFrame:
+    """Poll a running memory sink until SUM(`count_col`) equals
+    `total`, then stop the query and return the sink table — the drain
+    for sources that stay unbounded from Spark's perspective
+    (availableNow caps at the FIRST latestOffset and would replay only
+    one chunk)."""
+    deadline = time.time() + 120
+    done = None
+    while time.time() < deadline:
+        done = sink.agg(F.sum(count_col)).collect()[0][0]
+        done = 0 if done is None else done  # SUM over no rows is NULL
+        if done == total:
+            break
+        time.sleep(0.3)
+    q.stop()
+    if done != total:
+        # Fail loudly (ADVICE r5): a silent fall-through here returns a
+        # partial aggregate that only surfaces as a distant value-hash
+        # mismatch in the differential.
+        raise TimeoutError(
+            f"stream drained {done} of {total} rows within 120 s "
+            f"(memory sink {q.name!r})"
+        )
+    return sink
 
 
 def _stream_schema(spark: SparkSession, path: str):
@@ -92,10 +160,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file source requires a directory; the read-only testdata file
     is staged into a temp dir via symlink (zero-copy).
     """
-    from crypto_lakehouse_spark.io import normalize_timestamps
-
     src = f"{sf_dir}/events.parquet"
-    stage = _scratch_dir("stream_src_")
+    stage = scratch_dir("stream_src_")
     os.symlink(src, f"{stage}/events.parquet")
     raw = (
         spark.readStream.schema(_stream_schema(spark, src))
@@ -111,19 +177,6 @@ KAFKA_WIRE_SCHEMA = (
     "key BINARY, value BINARY, topic STRING, partition INT, offset BIGINT, "
     "timestamp TIMESTAMP, timestampType INT"
 )
-
-# All-STRING parse schema, exactly as the reference declares it
-# (streaming_bronze_writer.py:48-58): the Coinbase wire emits trade_id/
-# sequence as quoted strings, and Jackson will NOT coerce a quoted
-# string into a numeric field — a BIGINT trade_id here silently nulls
-# every row (caught by the kafka_wire_parse differential, round 5).
-# Numeric typing happens downstream in silver, mirroring the
-# reference's bronze-keeps-strings contract.
-TRADE_JSON_SCHEMA = (
-    "trade_id STRING, product_id STRING, price STRING, size STRING, "
-    "side STRING, time STRING"
-)
-
 
 def kafka_reader(
     spark: SparkSession,
@@ -216,36 +269,20 @@ def run_kafka_wire_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ingested_at").alias("timestamp"),
         F.lit(0).alias("timestampType"),
     )
-    feed = _scratch_dir("kafka_wire_")
+    feed = scratch_dir("kafka_wire_")
 
     _stage_file(wire.filter(F.col("offset") % 2 == 0), feed, 0)
     _stage_file(wire.filter(F.col("offset") % 2 == 1), feed, 1)
 
-    raw = (
-        spark.readStream.schema(KAFKA_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    parsed = parse_kafka_feed(raw).select(
+    parsed = parse_kafka_feed(replay(spark, feed, KAFKA_WIRE_SCHEMA)).select(
         "product_id",
         "price",
         "time",
         "_kafka_offset",
         "_kafka_partition",
     )
-    name = f"kafka_wire_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
-    q = (
-        parsed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(parsed, "append")
         .groupBy("product_id")
         .agg(
             F.count("*").alias("n_messages"),
@@ -303,18 +340,14 @@ def run_streaming_ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = silver_trades(raw_trades(spark, sf_dir)).select(
         "product_id", "trade_id", "trade_time", "price", "size"
     )
-    feed = _scratch_dir("ohlcv_feed_")
+    feed = scratch_dir("ohlcv_feed_")
 
     for chunk in range(3):
         _stage_file(s.filter(F.col("trade_id") % 3 == chunk), feed, chunk)
 
-    stream = (
-        spark.readStream.schema(_stream_schema(spark, feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     agg = (
-        stream.groupBy(F.window("trade_time", "1 minute").alias("w"), F.col("product_id"))
+        replay(spark, feed)
+        .groupBy(F.window("trade_time", "1 minute").alias("w"), F.col("product_id"))
         .agg(*candle_aggs())
         .select(
             "product_id",
@@ -329,18 +362,7 @@ def run_streaming_ohlcv_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
             ddiv(F.col("pv"), F.col("volume")).alias("vwap"),
         )
     )
-    name = f"ohlcv_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def run_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,8 +375,6 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale this would be update mode + watermark into a keyed sink;
     the plan (partial aggs -> stateful window agg) is identical.
     """
-    name = f"win_counts_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
     stream = events_stream(spark, sf_dir)
     agg = (
         stream.groupBy(
@@ -372,16 +392,7 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value_sum").cast("double").alias("value_sum"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def run_watermarked_counts(
@@ -401,31 +412,18 @@ def run_watermarked_counts(
     therefore expressible as batch SQL over the original table — the
     oracle proves the watermark semantics, not just row plumbing.
     """
-    from crypto_lakehouse_spark.io import load_table
-
     # Batch-load (normalized ts) then re-stage: the staged chunks are
     # written by THIS session, so the replay schema is derived from the
     # staged files themselves — no assumption about the driver encoding.
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    # approxQuantile needs a numeric column; quantile the epoch-micros
-    # view of ts and split on the exact timestamp it maps back to.
-    mid_us = _median_micros(ev)
-    mid = F.timestamp_micros(F.lit(mid_us))
-    feed = _scratch_dir("wm_feed_")
-
-    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
-    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
+    feed = stage_time_chunks(ev, "ts", 2)
     _stage_file(ev.orderBy("ts", "event_id").limit(late_rows), feed, 2)
 
-    stream = (
-        spark.readStream.schema(_stream_schema(spark, feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     agg = (
-        stream.withWatermark("ts", delay)
+        replay(spark, feed)
+        .withWatermark("ts", delay)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
@@ -438,18 +436,7 @@ def run_watermarked_counts(
             F.col("value_sum").cast("double").alias("value_sum"),
         )
     )
-    name = f"wm_counts_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "append")
 
 
 class IngestMetricsListener(StreamingQueryListener):
@@ -544,7 +531,7 @@ def run_stream_ingest(
     from crypto_lakehouse_spark.pipeline.lakehouse import Lakehouse
     from crypto_lakehouse_spark.sources.trade_feed import trade_feed
 
-    stage = stage_dir or _scratch_dir("ingest_feed_")
+    stage = stage_dir or scratch_dir("ingest_feed_")
     fresh = not os.listdir(stage) if os.path.isdir(stage) else True
     os.makedirs(stage, exist_ok=True)
 
@@ -555,11 +542,11 @@ def run_stream_ingest(
         _stage_file(feed.filter(F.col("offset") % 2 == 1), stage, 1)
 
     stream = (
-        spark.readStream.schema(
-            "key STRING, value STRING, offset BIGINT, partition INT, ingested_at TIMESTAMP"
+        replay(
+            spark,
+            stage,
+            "key STRING, value STRING, offset BIGINT, partition INT, ingested_at TIMESTAMP",
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
         # Engine-side per-batch metric: computed DURING the batch by the
         # JVM (zero extra actions), surfaced via the listener below.
         .observe("ingest", F.count(F.lit(1)).alias("rows"), F.count("key").alias("keyed_rows"))
@@ -576,7 +563,7 @@ def run_stream_ingest(
             # run inside the micro-batch — the continuous-medallion mode.
             each_batch(lh, batch_id)
 
-    ckpt = ckpt_dir or _scratch_dir("ckpt_ingest_")
+    ckpt = ckpt_dir or scratch_dir("ckpt_ingest_")
     listener = IngestMetricsListener()
     spark.streams.addListener(listener)
     try:
@@ -618,24 +605,13 @@ def run_stream_ingest(
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates (T6 extension): exactly-once event ids
     within the stream, then per-type counts. availableNow drain."""
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
     stream = events_stream(spark, sf_dir)
     agg = (
         stream.dropDuplicates(["event_id"])
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("event_type")
+    return drain(agg, "complete").orderBy("event_type")
 
 
 def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,35 +625,19 @@ def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the batch COUNT(DISTINCT) oracle exact. (With a short
     delay, suppression of old duplicates would be best-effort — that
     mode is the scale behavior, not a differential-checkable one.)"""
-    from crypto_lakehouse_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    feed = _scratch_dir("ddw_feed_")
+    feed = scratch_dir("ddw_feed_")
 
     _stage_file(ev, feed, 0)
     _stage_file(ev.filter(F.col("event_id") % 13 == 0), feed, 1)  # re-delivery batch
 
-    stream = (
-        spark.readStream.schema(_stream_schema(spark, feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    deduped = stream.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark(
-        ["event_id"]
+    deduped = (
+        replay(spark, feed)
+        .withWatermark("ts", "30 days")
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    name = f"ddw_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("event_type")
+    return drain(agg, "complete").orderBy("event_type")
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,10 +655,6 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow drain into a memory sink; the batch join over the
     same two tables is the oracle."""
-    from crypto_lakehouse_spark.io import load_table
-
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
     nation = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nk"), "n_name"
     )
@@ -710,17 +666,8 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"),
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(
             "n_name",
             "n_events",
@@ -742,8 +689,6 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow full replay every match is emitted exactly once in
     append mode, which is why batch equivalence holds.
     """
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("ckpt_")
     clicks = (
         events_stream(spark, sf_dir)
         .where("event_type = 'click'")
@@ -777,16 +722,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("purchase_value").cast("double").alias("purchase_value"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("purchase_id", "click_id")
+    return drain(joined, "append").orderBy("purchase_id", "click_id")
 
 
 def run_join_then_window(
@@ -819,8 +755,6 @@ def run_join_then_window(
     exactly-once contract the crash-replay test pins across BOTH
     stateful operators' recovered state.
     """
-    from crypto_lakehouse_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value", "user_id"
     )
@@ -833,23 +767,11 @@ def run_join_then_window(
         ev.schema,
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 HOURS"))
 
-    feed = _scratch_dir("jw_feed_")
-
-    mid_us = _median_micros(ev)
-    mid = F.timestamp_micros(F.lit(mid_us))
-    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
-    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
+    feed = stage_time_chunks(ev, "ts", 2)
     _stage_file(flush, feed, 2)
 
-    def _source() -> DataFrame:
-        return (
-            spark.readStream.schema(_stream_schema(spark, feed))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-
     clicks = (
-        _source()
+        replay(spark, feed)
         .where("event_type = 'click'")
         .select(
             F.col("user_id").alias("c_user"),
@@ -858,7 +780,7 @@ def run_join_then_window(
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        _source()
+        replay(spark, feed)
         .where("event_type = 'purchase'")
         .select(
             "user_id",
@@ -895,8 +817,8 @@ def run_join_then_window(
     # parquet sink's _spark_metadata commit manifest gives end-to-end
     # exactly-once across the kill/restart — the property the
     # crash-replay test pins.
-    out_dir = _scratch_dir("jw_out_")
-    ckpt = _scratch_dir("ckpt_jw_")
+    out_dir = scratch_dir("jw_out_")
+    ckpt = scratch_dir("ckpt_jw_")
 
     def _start():
         return (
@@ -941,7 +863,6 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per key wins, which is what the latest-state SQL oracle
     re-derives relationally.
     """
-    from crypto_lakehouse_spark.io import load_table
     from crypto_lakehouse_spark.tables import LakehouseTable
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
@@ -957,7 +878,7 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_totalprice", F.col("o_totalprice") + 250)
     )
 
-    feed = _scratch_dir("cdc_feed_")
+    feed = scratch_dir("cdc_feed_")
 
     _stage_file(orders, feed, 0)
     _stage_file(u1, feed, 1)
@@ -965,21 +886,17 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table = LakehouseTable(
         spark,
-        os.path.join(_scratch_dir("cdc_tbl_"), "orders_silver"),
+        os.path.join(scratch_dir("cdc_tbl_"), "orders_silver"),
         partition_by=["o_orderpriority"],
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         table.merge(batch_df.select(*cols), keys=["o_orderkey"])
 
-    stream = (
-        spark.readStream.schema(_stream_schema(spark, feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", _scratch_dir("ckpt_cdc_"))
+        replay(spark, feed)
+        .writeStream.foreachBatch(_process)
+        .option("checkpointLocation", scratch_dir("ckpt_cdc_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1020,23 +937,12 @@ def run_streaming_session_window(
     watermark (max_ts - delay); the oracle filters the batch session
     derivation the same way.
     """
-    from crypto_lakehouse_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    mid_us = _median_micros(ev)
-    mid = F.timestamp_micros(F.lit(mid_us))
-    feed = _scratch_dir("sess_feed_")
+    feed = stage_time_chunks(ev, "ts", 2)
 
-    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
-    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
-
-    stream = (
-        spark.readStream.schema(_stream_schema(spark, feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     agg = (
-        stream.withWatermark("ts", delay)
+        replay(spark, feed)
+        .withWatermark("ts", delay)
         .groupBy("user_id", F.session_window("ts", gap).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -1050,17 +956,7 @@ def run_streaming_session_window(
             "n_events",
         )
     )
-    name = f"sess_win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch_dir("ckpt_sess_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "session_start")
+    return drain(agg, "append").orderBy("user_id", "session_start")
 
 
 def run_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1078,8 +974,6 @@ def run_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count, then stop — the Python-source equivalent of
     availableNow (which caps at the FIRST latestOffset and would
     replay only one chunk)."""
-    import time as _time
-
     import pyarrow.parquet as _pq
 
     from crypto_lakehouse_spark.sources.pyarrow_source import register
@@ -1110,36 +1004,9 @@ def run_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"),
         )
     )
-    name = f"pyds_agg_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", _scratch_dir("ckpt_pydss_"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = _time.time() + 120
-    done = None
-    while _time.time() < deadline:
-        done = (
-            spark.table(name).agg(F.sum("n_events").alias("n")).collect()[0]["n"]
-        )
-        done = 0 if done is None else done  # SUM over no rows is NULL
-        if done == total:
-            break
-        _time.sleep(0.3)
-    q.stop()
-    if done != total:
-        # Fail loudly (ADVICE r5): a silent fall-through here returns a
-        # partial aggregate that only surfaces as a distant value-hash
-        # mismatch in the differential.
-        raise TimeoutError(
-            f"python-datasource stream drained {done} of {total} rows "
-            f"within 120 s (memory sink {name!r})"
-        )
+    q, sink = _memory_sink(agg, "complete", processingTime="0 seconds")
     return (
-        spark.table(name)
+        drain_until(q, sink, "n_events", total)
         .select(
             "event_type",
             "n_events",
@@ -1167,27 +1034,13 @@ def run_stream_stream_left_join(
     last-possible-match instant (click_ts + 5min) is at or below that
     watermark — which is what the batch oracle derives.
     """
-    from crypto_lakehouse_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    mid_us = _median_micros(ev)
-    mid = F.timestamp_micros(F.lit(mid_us))
-    feed = _scratch_dir("ssl_feed_")
-
-    _stage_file(ev.filter(F.col("ts") <= mid), feed, 0)
-    _stage_file(ev.filter(F.col("ts") > mid), feed, 1)
-
-    def _src() -> DataFrame:
-        return (
-            spark.readStream.schema(_stream_schema(spark, feed))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
+    feed = stage_time_chunks(ev, "ts", 2)
 
     clicks = (
-        _src()
+        replay(spark, feed)
         .where("event_type = 'click'")
         .select(
             F.col("user_id").alias("c_user"),
@@ -1197,7 +1050,7 @@ def run_stream_stream_left_join(
         .withWatermark("click_ts", delay)
     )
     purchases = (
-        _src()
+        replay(spark, feed)
         .where("event_type = 'purchase'")
         .select(
             "user_id",
@@ -1219,17 +1072,7 @@ def run_stream_stream_left_join(
         "purchase_id",
         F.col("purchase_value").cast("double").alias("purchase_value"),
     )
-    name = f"ssl_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch_dir("ckpt_ssl_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("click_id", "purchase_id")
+    return drain(joined, "append").orderBy("click_id", "purchase_id")
 
 
 def run_versioned_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1241,11 +1084,6 @@ def run_versioned_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     version-offset planning, live tailing of new commits, and the
     Arrow read path in one pass. Offsets are table versions; each
     micro-batch is exactly the files its versions added."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from crypto_lakehouse_spark.io import load_table
     from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
     from crypto_lakehouse_spark.sources.versioned_stream import register
 
@@ -1257,7 +1095,7 @@ def run_versioned_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     total = orders.count()
 
-    t = VersionedTable(spark, _scratch_dir("vstream_tbl_") + "/t")
+    t = VersionedTable(spark, scratch_dir("vstream_tbl_") + "/t")
     t.append(chunks[0])  # v0 exists before the stream starts
 
     df = (
@@ -1270,37 +1108,13 @@ def run_versioned_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_orderkey").alias("min_key"),
         F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("price_sum"),
     )
-    name = f"vstream_agg_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", _scratch_dir("ckpt_vstream_"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    q, sink = _memory_sink(agg, "complete", processingTime="0 seconds")
     # Commit two more versions while the stream is live — the source
     # must tail them from the manifest log.
     t.append(chunks[1])
     t.append(chunks[2])
-    deadline = _time.time() + 120
-    done = None
-    while _time.time() < deadline:
-        done = (
-            spark.table(name).agg(F.sum("n_orders").alias("n")).collect()[0]["n"]
-        )
-        done = 0 if done is None else done  # SUM over no rows is NULL
-        if done == total:
-            break
-        _time.sleep(0.3)
-    q.stop()
-    if done != total:
-        raise TimeoutError(
-            f"versioned-table stream drained {done} of {total} rows "
-            f"within 120 s (memory sink {name!r})"
-        )
     return (
-        spark.table(name)
+        drain_until(q, sink, "n_orders", total)
         .select(
             F.col("o_orderstatus").alias("status"),
             "n_orders",

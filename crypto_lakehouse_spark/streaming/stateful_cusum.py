@@ -16,10 +16,10 @@ integer constants, and the chart uses the prefix identity
 (no reset variant — the same closed form the batch
 cusum_mean_shift_daily uses, which is what makes the recursion
 expressible as two batch window passes for the oracle). The stream is
-replayed as N event-time-ordered chunks with maxFilesPerTrigger=1
-(same harness as the stateful sessionizer), so state genuinely
-carries across micro-batches and the fold order equals the batch
-window order (ts, event_id).
+replayed as N event-time-ordered chunks, one per micro-batch
+(`file_stream.stage_time_chunks`, the stateful sessionizer's
+harness), so state genuinely carries across micro-batches and the
+fold order equals the batch window order (ts, event_id).
 
 Scale shape: state is O(|event types|) integers; each batch's work is
 one sort + one linear fold per key — the unbounded-stream path. Each
@@ -29,8 +29,6 @@ max-n row (monotone in n by construction).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -38,6 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
+
+from crypto_lakehouse_spark.streaming.file_stream import drain, replay
+from crypto_lakehouse_spark.streaming.stateful_sessions import (
+    stage_time_ordered_chunks,
+)
 
 
 # Micro-unit slack and alarm threshold (0.5 and 5.0 value units).
@@ -101,10 +104,6 @@ def _stage_typed_chunks(
     micro-value) — the shared staging protocol of
     stateful_sessions.stage_time_ordered_chunks with the CUSUM
     projection."""
-    from crypto_lakehouse_spark.streaming.stateful_sessions import (
-        stage_time_ordered_chunks,
-    )
-
     return stage_time_ordered_chunks(
         spark,
         sf_dir,
@@ -125,32 +124,14 @@ def run_streaming_cusum(
     returns one final totals row per event_type (the max-n emission —
     n is monotone across batches)."""
     feed = _stage_typed_chunks(spark, sf_dir, n_chunks)
-    stream = (
-        spark.readStream.schema(
-            "event_id BIGINT, ts_us BIGINT, event_type STRING, vi BIGINT"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    out = stream.groupBy("event_type").applyInPandasWithState(
+    out = replay(spark, feed).groupBy("event_type").applyInPandasWithState(
         _cusum_group,
         OUTPUT_SCHEMA,
         STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    name = f"cusum_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_cusum_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table(name)
+    sink = drain(out, "append")
     w = F.row_number().over(
         Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     )

@@ -11,16 +11,14 @@ unbounded-stream scale path: state is O(active users), emission is
 append-only.
 
 Deterministic test harness: the events table is staged into N
-time-ordered parquet chunks and replayed with maxFilesPerTrigger=1,
-so state genuinely carries across micro-batches; results are compared
-against the batch `sessionize` operator (closed sessions must agree).
+time-ordered parquet chunks (`file_stream.stage_time_chunks`) and
+replayed one file per micro-batch, so state genuinely carries across
+micro-batches; results are compared against the batch `sessionize`
+operator (closed sessions must agree).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -30,6 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from crypto_lakehouse_spark.io import load_table
+from crypto_lakehouse_spark.streaming.file_stream import (
+    drain,
+    replay,
+    stage_time_chunks,
+)
 
 OUTPUT_SCHEMA = (
     "user_id BIGINT, session_seq BIGINT, session_start_us BIGINT, "
@@ -94,42 +97,19 @@ def stage_time_ordered_chunks(
     n_chunks: int = 4,
     extra_cols: list | None = None,
 ) -> str:
-    """Split events into N contiguous time ranges, one parquet file
-    each, named in replay order (file source processes them in
-    lexicographic order with maxFilesPerTrigger=1).
+    """Events as (event_id, ts_us, *extra_cols) staged into N
+    contiguous ts_us ranges (`file_stream.stage_time_chunks`).
 
     `extra_cols` selects the payload columns carried alongside
     (event_id, ts_us) — defaults to the sessionizer's (user_id,
     value); the stateful CUSUM passes its own projection instead of
     duplicating this staging protocol (review finding)."""
-    stage = tempfile.mkdtemp(prefix="replay_chunks_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         *(extra_cols if extra_cols is not None else ["user_id", "value"]),
     )
-    bounds = ev.approxQuantile("ts_us", [i / n_chunks for i in range(1, n_chunks)], 0.0)
-    lo = None
-    for i in range(n_chunks):
-        hi = bounds[i] if i < len(bounds) else None
-        chunk = ev
-        if lo is not None:
-            chunk = chunk.filter(F.col("ts_us") > lo)
-        if hi is not None:
-            chunk = chunk.filter(F.col("ts_us") <= hi)
-        chunk.coalesce(1).write.mode("overwrite").parquet(f"{stage}/chunk_{i:03d}")
-        lo = hi
-    # flatten: move part files up so the source dir lists plain files
-    final = tempfile.mkdtemp(prefix="replay_feed_")
-    for i in range(n_chunks):
-        d = f"{stage}/chunk_{i:03d}"
-        parts = [p for p in sorted(os.listdir(d)) if p.endswith(".parquet")]
-        if not parts:  # loud, not StopIteration: a 0-part chunk write
-            raise RuntimeError(f"chunk {d} produced no parquet part file")
-        os.rename(
-            os.path.join(d, parts[0]), os.path.join(final, f"{i:03d}.parquet")
-        )
-    return final
+    return stage_time_chunks(ev, "ts_us", n_chunks)
 
 
 def run_stateful_sessionization(
@@ -139,31 +119,15 @@ def run_stateful_sessionization(
     returns CLOSED sessions (open sessions remain in state — on a live
     stream they'd emit via timeout)."""
     feed = stage_time_ordered_chunks(spark, sf_dir, n_chunks)
-    stream = (
-        spark.readStream.schema("event_id BIGINT, ts_us BIGINT, user_id BIGINT, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     gap_seconds = gap_minutes * 60
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = replay(spark, feed).groupBy("user_id").applyInPandasWithState(
         lambda key, pdfs, state: _sessionize_group(key, pdfs, state, gap_seconds),
         OUTPUT_SCHEMA,
         STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sessions_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out, "append")
 
 
 # --- transformWithStateInPandas twin (Spark 4 arbitrary-state API) ---------
@@ -264,26 +228,10 @@ def run_tws_sessionization(
     """transformWithStateInPandas replay — same contract as
     run_stateful_sessionization (closed sessions only)."""
     feed = stage_time_ordered_chunks(spark, sf_dir, n_chunks)
-    stream = (
-        spark.readStream.schema("event_id BIGINT, ts_us BIGINT, user_id BIGINT, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    out = stream.groupBy("user_id").transformWithStateInPandas(
+    out = replay(spark, feed).groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=SessionProcessor(gap_minutes * 60),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="append",
         timeMode="none",
     )
-    name = f"sessions_tws_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sessions_tws_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out, "append")

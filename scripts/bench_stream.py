@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from crypto_lakehouse_spark.session import get_spark_session
 from crypto_lakehouse_spark.streaming.file_stream import (
-    _stream_schema,
+    drain,
+    replay,
     run_stream_ingest,
 )
 
@@ -47,7 +48,8 @@ def bench_stateful(spark, root: str) -> dict:
     the stateless ingest path above. Events are staged once into
     STATEFUL_CHUNKS files drained one per micro-batch; each timed run
     gets a fresh checkpoint + memory sink so the wall clock covers the
-    full stateful drain."""
+    full stateful drain (checkpoints are `io.scratch_dir`s, swept at
+    exit)."""
     from crypto_lakehouse_spark.io import load_table
 
     stage = os.path.join(root, "stateful_stage")
@@ -80,16 +82,10 @@ def bench_stateful(spark, root: str) -> dict:
                 )
                 n += 1
 
-    def drain(i: int) -> float:
-        ckpt = os.path.join(root, f"stateful_ckpt_{i}")
-        name = f"bench_stateful_{i}"
-        stream = (
-            spark.readStream.schema(_stream_schema(spark, stage))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    def timed_drain() -> float:
         agg = (
-            stream.withWatermark("ts", "30 minutes")
+            replay(spark, stage)
+            .withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
             .agg(
                 F.count("*").alias("n_events"),
@@ -99,21 +95,11 @@ def bench_stateful(spark, root: str) -> dict:
             )
         )
         t0 = time.perf_counter()
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dt = time.perf_counter() - t0
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return dt
+        drain(agg, "append")
+        return time.perf_counter() - t0
 
-    drain(999)  # warm-up (codegen + scan caches), untimed
-    best = min(drain(i) for i in range(RUNS))
+    timed_drain()  # warm-up (codegen + scan caches), untimed
+    best = min(timed_drain() for _ in range(RUNS))
     return {
         "metric": "stream_stateful_window_rows_per_sec",
         "value": round(total_rows / best, 1),

@@ -35,15 +35,10 @@ def main() -> int:
     print(f"\n{len(names) - len(failed)}/{len(names)} passed")
     if failed:
         print("failed:", " ".join(failed))
-    if not sys.argv[2:]:
-        # Full sweep: regenerate the operator-family index so
-        # OPERATORS.md always reflects the checked registry.
-        from gen_operators_md import write as write_operators_md
-
-        print("regenerated", write_operators_md())
-    elif operators_md_stale():
-        # Partial runs still assert index freshness (VERDICT r9 item
-        # 6: two widening waves once shipped without regenerating).
+    if operators_md_stale():
+        # Every run asserts index freshness (VERDICT r9 item 6: two
+        # widening waves once shipped without regenerating); only the
+        # generator rewrites the committed file.
         print(
             "STALE OPERATORS.md: header count != registry count "
             f"({len(REGISTRY)} registered) — run "

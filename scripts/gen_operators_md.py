@@ -1,7 +1,7 @@
 """Generate OPERATORS.md — a one-page operator-family index over the
 query registry (VERDICT r6 item 8), so coverage can be audited without
-reading 16 query modules. Regenerated by scripts/dev_check.py after a
-full sweep; run directly any time:  python scripts/gen_operators_md.py
+reading 16 query modules. scripts/dev_check.py fails when it is stale;
+regenerate with:  python scripts/gen_operators_md.py
 """
 
 from __future__ import annotations
@@ -45,8 +45,8 @@ def generate() -> str:
     lines = [
         "# Operator index",
         "",
-        "GENERATED by `scripts/gen_operators_md.py` (re-run by a full",
-        "`scripts/dev_check.py` sweep) — do not edit by hand.",
+        "GENERATED by `scripts/gen_operators_md.py` (`scripts/dev_check.py`",
+        "fails when it is stale) — do not edit by hand.",
         "",
         f"{len(REGISTRY)} registered queries across {len(families)}",
         "operator families. Columns: **oracle** = driver-side DuckDB",

@@ -26,11 +26,12 @@ pin it:
   versioned_update_result (also ValueError: empty snapshot),
   zorder_clustered_scan (also MIN/MAX-of-nothing floats).
 - approxQuantile on an empty relation returns [] (IndexError):
-  file_stream._median_micros — streaming_watermarked_counts,
-  streaming_session_window, streaming_stream_stream_left_join.
+  file_stream.stage_time_chunks stages every chunk empty —
+  streaming_watermarked_counts, streaming_session_window,
+  streaming_stream_stream_left_join.
 - memory-sink drain comparing SUM-over-no-rows (NULL) to 0 (hang then
-  TimeoutError): NULL coalesced — python_datasource_stream_agg,
-  versioned_table_stream_agg.
+  TimeoutError): NULL coalesced in file_stream.drain_until —
+  python_datasource_stream_agg, versioned_table_stream_agg.
 - version-chain assumptions (manifest vN expected but the empty
   MERGE/DELETE skipped its commit): walk t.versions() —
   cdf_incremental_view_maintenance.
