@@ -110,7 +110,12 @@ def drain(df: DataFrame, mode: str) -> DataFrame:
     """Run `df` to completion (availableNow) into a memory sink and
     return the sink table."""
     q, sink = _memory_sink(df, mode, availableNow=True)
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        # The view would keep the sink's rows in memory for the rest of
+        # the session; the returned frame keeps its resolved plan.
+        sink.sparkSession.catalog.dropTempView(q.name)
     return sink
 
 
@@ -118,19 +123,22 @@ def drain_until(
     q: StreamingQuery, sink: DataFrame, count_col: str, total: int
 ) -> DataFrame:
     """Poll a running memory sink until SUM(`count_col`) equals
-    `total`, then stop the query and return the sink table — the drain
-    for sources that stay unbounded from Spark's perspective
-    (availableNow caps at the FIRST latestOffset and would replay only
-    one chunk)."""
+    `total`, then stop the query, drop its view (as `drain` does) and
+    return the sink table — the drain for sources that stay unbounded
+    from Spark's perspective (availableNow caps at the FIRST
+    latestOffset and would replay only one chunk)."""
     deadline = time.time() + 120
     done = None
-    while time.time() < deadline:
-        done = sink.agg(F.sum(count_col)).collect()[0][0]
-        done = 0 if done is None else done  # SUM over no rows is NULL
-        if done == total:
-            break
-        time.sleep(0.3)
-    q.stop()
+    try:
+        while time.time() < deadline:
+            done = sink.agg(F.sum(count_col)).collect()[0][0]
+            done = 0 if done is None else done  # SUM over no rows is NULL
+            if done == total:
+                break
+            time.sleep(0.3)
+    finally:
+        q.stop()
+        sink.sparkSession.catalog.dropTempView(q.name)
     if done != total:
         # Fail loudly (ADVICE r5): a silent fall-through here returns a
         # partial aggregate that only surfaces as a distant value-hash

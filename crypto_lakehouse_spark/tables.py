@@ -1,4 +1,5 @@
-"""Parquet-native lakehouse table layer.
+"""Parquet-native lakehouse table layer, and the one implementation of
+the MERGE contract that both parquet table layers share.
 
 The reference stores bronze/silver/gold in Iceberg with MERGE upserts
 (bronze_to_silver.py:156-188) and partition layouts chosen for pruning
@@ -15,23 +16,27 @@ are untouched bytes. Matched rows are replaced by the source row
 (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *, reference
 bronze_to_silver.py:171-186).
 
-Requirements shared with Delta's MERGE: source must be unique on the
-merge keys (SURVEY §2.8.6) — enforced here with a fail-fast check
-(Delta throws on multiple matches; so do we). And because the merge is
-partition-pruned, a matched key must never move between partitions
-(e.g. a corrected timestamp crossing a date boundary when partitioned
-by date but merged on id): that too is enforced fail-fast unless the
-partition columns are part of the merge keys, which makes it
-structurally impossible.
-
-The MERGE computes its source once, as Delta's MERGE does
-(merge.materializeSource): the source is materialized with an eager
-local checkpoint, and the uniqueness check, touched-partition
-discovery, the moved-key check and the rewrite all read that one copy.
-The touched partition values are collected (an incremental batch
-touches a handful) and prune the target as a literal, NULL-safe
-partition predicate, so the moved-key check scans
-only the untouched partitions.
+The source side of that contract is three module-level functions,
+called by `LakehouseTable.merge` and by `VersionedTable.merge` /
+`merge_dv` (pipeline/versioned.py):
+- `merge_source` computes the source once, as Delta's MERGE does
+  (merge.materializeSource): an eager local checkpoint that every
+  later step reads, released on exit. One aggregate over that copy
+  gives the row count, the touched partitions and the uniqueness
+  check: the source must be unique on the merge keys (SURVEY §2.8.6;
+  Delta throws on multiple matches, so do we; a NULL key counts as a
+  value).
+- `partition_predicate` turns the touched partition values into a
+  literal predicate that prunes the target scan. NULL matches NULL: a
+  NULL partition value is a legal partition on disk.
+- `prune_to_partitions` applies it. Because the merge is
+  partition-pruned, a matched key must never move between partitions
+  (e.g. a corrected timestamp crossing a date boundary when
+  partitioned by date but merged on id); that is enforced fail-fast
+  over the untouched partitions unless the partition columns are part
+  of the merge keys, which makes it structurally impossible.
+`backfill_added_columns` is the one read-side backfill of columns
+declared by `add_column`, also shared by both layers.
 
 Every write records the table's schema in a `_schema.json` sidecar,
 and `read()` passes it to the parquet reader instead of inferring one
@@ -47,10 +52,12 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 from functools import reduce
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -80,6 +87,126 @@ def _escape_path_name(value) -> str:
     )
 
 
+def backfill_added_columns(df: DataFrame, added: dict) -> DataFrame:
+    """Surface columns declared by `add_column` ({name: {"type",
+    "default"}}) on a scanned frame: a column missing from every file is
+    a pure metadata column; one present but NULL in files written
+    before it was added reads as the declared default (an explicit NULL
+    written later also reads as the default)."""
+    for name, spec in added.items():
+        default = F.lit(spec["default"]).cast(spec["type"])
+        if name not in df.columns:
+            df = df.withColumn(name, default)
+        elif spec["default"] is not None:
+            df = df.withColumn(
+                name, F.coalesce(F.col(name).cast(spec["type"]), default)
+            )
+        else:
+            df = df.withColumn(name, F.col(name).cast(spec["type"]))
+    return df
+
+
+@contextmanager
+def merge_source(
+    source: DataFrame, keys: list[str], partition_by: list[str]
+) -> Iterator[tuple[DataFrame, int, list[Row]]]:
+    """Compute a MERGE source once and check it is unique on `keys`.
+
+    Yields (the materialized source, its row count, the distinct rows
+    of its `partition_by` columns). The copy is an eager local
+    checkpoint (MEMORY_AND_DISK) released on exit, so the checks, the
+    target pruning and the rewrite never recompute the source."""
+    source = source.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    try:
+        # One pass: the size, whether it is unique on the keys (a struct
+        # counts NULL keys as a value, as groupBy does), and the
+        # partitions it touches.
+        stats = source.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.struct(*keys)).alias("n_keys"),
+            *(
+                [F.collect_set(F.struct(*partition_by)).alias("parts")]
+                if partition_by
+                else []
+            ),
+        ).first()
+        if stats["n"] != stats["n_keys"]:
+            raise ValueError(
+                f"MERGE source is not unique on keys {keys} "
+                "(same contract as Delta: multiple source matches are an error)"
+            )
+        yield source, stats["n"], stats["parts"] if partition_by else []
+    finally:
+        release_lineage(source)
+
+
+def partition_predicate(partition_by: list[str], parts: list[Row]) -> Column:
+    """Literal predicate selecting the partitions whose values are in
+    `parts` (rows of the `partition_by` columns). A NULL partition
+    value is a legal partition (__HIVE_DEFAULT_PARTITION__ on disk)
+    and plain equality would never match it: the pruned rewrite would
+    then drop the NULL partition's unmatched target rows. So NULL
+    matches NULL here, and the predicate is never NULL itself: its
+    negation selects exactly the untouched partitions."""
+    if len(partition_by) == 1:
+        (c,) = partition_by
+        values = [row[c] for row in parts]
+        pred = F.col(c).isin([v for v in values if v is not None])
+        if None in values:
+            pred = pred | F.col(c).isNull()
+        return F.coalesce(pred, F.lit(False))
+    return reduce(
+        lambda a, b: a | b,
+        (
+            reduce(
+                lambda a, b: a & b,
+                (F.col(c).eqNullSafe(F.lit(row[c])) for c in partition_by),
+            )
+            for row in parts
+        ),
+        F.lit(False),
+    )
+
+
+def prune_to_partitions(
+    target: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    partition_by: list[str],
+    parts: list[Row],
+) -> DataFrame:
+    """Restrict `target` to the partitions in `parts` (partition
+    pruning on the scan, not a full read); an unpartitioned target is
+    returned as is.
+
+    A matched key whose partition column changed would sit in an
+    untouched partition and survive the pruned rewrite as a stale
+    duplicate, so a source key found in the untouched partitions
+    raises. Including the partition columns in `keys` makes that
+    structurally impossible, and the check is then skipped."""
+    if not partition_by:
+        return target
+    touched = partition_predicate(partition_by, parts)
+    if not set(partition_by) <= set(keys):
+        moved = (
+            target.filter(~touched)
+            .join(source.select(*keys), keys, "left_semi")
+            .limit(1)
+            .count()
+        )
+        if moved:
+            raise ValueError(
+                f"MERGE source matches target key(s) outside the "
+                f"source's partitions (partition_by="
+                f"{partition_by}, keys={keys}): a "
+                "partition-pruned merge would leave the stale row "
+                "behind. Include the partition columns in the "
+                "merge keys, or route the correction as a "
+                "delete+insert."
+            )
+    return target.filter(touched)
+
+
 class LakehouseTable:
     """A partitioned parquet table with append / overwrite / merge."""
 
@@ -107,17 +234,21 @@ class LakehouseTable:
             json.dump(doc, f)
         os.rename(tmp, os.path.join(directory, _SCHEMA_SIDECAR))
 
-    def _record_schema(self, df: DataFrame, directory: str | None = None) -> None:
+    def _record_schema(
+        self, df: DataFrame, doc: dict, directory: str | None = None
+    ) -> None:
         # Delta records the schema in its log; the parquet-native
         # equivalent is this sidecar entry, written on every write path
         # (into `directory` when the write is staged elsewhere first).
+        # `doc` is the sidecar as read before the write: a full
+        # overwrite deletes the file along with the table, and the
+        # `add_column` declarations must survive it.
         # read() uses it in place of footer inference. It also covers a
         # PARTITIONED write of 0 rows, which emits no files at all
         # (dynamic partitioning has no partition values to
         # materialize): an empty first batch (a real occurrence in a
         # scheduled pipeline) then yields an empty, correctly-typed
         # table instead of UNABLE_TO_INFER_SCHEMA.
-        doc = self._sidecar()
         doc["table_schema"] = df.schema.jsonValue()
         self._write_sidecar(doc, directory)
 
@@ -149,20 +280,7 @@ class LakehouseTable:
             df = self.spark.createDataFrame(
                 [], StructType.fromJson(stored)
             )
-        for name, spec in added.items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(spec["default"]).cast(spec["type"]))
-            elif spec["default"] is not None:
-                df = df.withColumn(
-                    name,
-                    F.coalesce(
-                        F.col(name).cast(spec["type"]),
-                        F.lit(spec["default"]).cast(spec["type"]),
-                    ),
-                )
-            else:
-                df = df.withColumn(name, F.col(name).cast(spec["type"]))
-        return df
+        return backfill_added_columns(df, added)
 
     # -- schema evolution ---------------------------------------------------
     def add_column(self, name: str, dtype: str, default=None) -> None:
@@ -181,16 +299,24 @@ class LakehouseTable:
         self._write_sidecar(doc)
 
     # -- writes ------------------------------------------------------------
-    def _write(self, df: DataFrame, mode: str) -> int:
+    def _write(self, df: DataFrame, mode: str, partitions: str = "static") -> int:
         """Write `df` with this table's partitioning; returns the rows
         written, counted by an observation on the write itself (no
-        extra Spark job)."""
+        extra Spark job). `partitions` is the partitionOverwriteMode of
+        an overwrite, given per write so that the session's setting
+        never decides it: "static" replaces the table, "dynamic" only
+        the partitions present in `df`."""
+        doc = self._sidecar()
         obs = Observation()
-        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+        w = (
+            df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode(mode)
+            .option("partitionOverwriteMode", partitions)
+        )
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
         w.parquet(self.path)
-        self._record_schema(df)
+        self._record_schema(df, doc)
         self._refresh()
         return obs.get["rows"]
 
@@ -204,50 +330,24 @@ class LakehouseTable:
         return self._write(df, "append")
 
     def overwrite(self, df: DataFrame) -> int:
-        """Replace the table with `df`; returns the rows written."""
+        """Replace the whole table, every partition included, with `df`;
+        returns the rows written."""
         return self._write(df, "overwrite")
 
     def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition overwrite: replaces only the partitions
-        present in `df`; returns the rows written. Requires
-        partitionOverwriteMode=dynamic (set by the session factory)."""
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        return self._write(df, "overwrite")
+        present in `df`; returns the rows written."""
+        return self._write(df, "overwrite", "dynamic")
 
     # -- merge -------------------------------------------------------------
-    def _partition_predicate(self, parts: list) -> Column:
-        """Literal predicate selecting the partitions whose values are
-        in `parts` (rows of the partition columns). A NULL partition
-        value is a legal partition (__HIVE_DEFAULT_PARTITION__ on disk)
-        and plain equality would never match it: the pruned rewrite
-        would then drop the NULL partition's unmatched target rows. So
-        NULL matches NULL here, and the predicate is never NULL itself:
-        its negation selects exactly the untouched partitions."""
-        if len(self.partition_by) == 1:
-            (c,) = self.partition_by
-            values = [row[c] for row in parts]
-            pred = F.col(c).isin([v for v in values if v is not None])
-            if None in values:
-                pred = pred | F.col(c).isNull()
-            return F.coalesce(pred, F.lit(False))
-        return reduce(
-            lambda a, b: a | b,
-            (
-                reduce(
-                    lambda a, b: a & b,
-                    (F.col(c).eqNullSafe(F.lit(row[c])) for c in self.partition_by),
-                )
-                for row in parts
-            ),
-            F.lit(False),
-        )
-
     def merge(
         self, source: DataFrame, keys: list[str], delete_match: str | None = None
     ) -> int:
         """Upsert `source` by `keys` (MERGE WHEN MATCHED UPDATE SET * /
         WHEN NOT MATCHED INSERT *). Rewrites only touched partitions.
-        Returns the number of source rows.
+        Returns the number of source rows. The source side (computed
+        once, uniqueness, partition pruning, moved keys) is
+        `merge_source` and `prune_to_partitions`.
 
         `delete_match` adds Delta's third clause — WHEN MATCHED AND
         <predicate> THEN DELETE: source rows satisfying the predicate
@@ -257,119 +357,66 @@ class LakehouseTable:
         stays partition-pruned: a deleted key's partition is touched
         by definition (the target row lives there).
         """
-        # Every step below reads the source, so compute it once.
-        source = source.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._merge_materialized(source, keys, delete_match)
-        finally:
-            release_lineage(source)
-
-    def _merge_materialized(
-        self, source: DataFrame, keys: list[str], delete_match: str | None
-    ) -> int:
-        # One pass over the source: its size, whether it is unique on
-        # the keys (a struct counts NULL keys as a value, as groupBy
-        # does), and the partitions it touches.
-        stats = source.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.struct(*keys)).alias("n_keys"),
-            *(
-                [F.collect_set(F.struct(*self.partition_by)).alias("parts")]
-                if self.partition_by
-                else []
-            ),
-        ).first()
-        if stats["n"] != stats["n_keys"]:
-            raise ValueError(
-                f"MERGE source is not unique on keys {keys} "
-                "(same contract as Delta: multiple source matches are an error)"
-            )
-        if delete_match is not None:
-            upserts = source.filter(~F.expr(delete_match))
-        else:
-            upserts = source
-        if not self.exists():
-            self.overwrite(upserts)
-            return stats["n"]
-
-        target = self.read().select(*source.columns)  # align column order
-        source_keys = source.select(*keys)
-        if self.partition_by:
-            # Prune the target read to the touched partitions: partition
-            # pruning on the parquet scan, not a full read.
-            touched = self._partition_predicate(stats["parts"])
-            if not set(self.partition_by) <= set(keys):
-                # A matched key whose partition column changed would
-                # sit in an UNtouched partition and survive the pruned
-                # rewrite as a stale duplicate. Fail fast; including
-                # the partition columns in `keys` makes this
-                # structurally impossible (check skipped).
-                moved = (
-                    target.filter(~touched)
-                    .join(source_keys, keys, "left_semi")
-                    .limit(1)
-                    .count()
-                )
-                if moved:
-                    raise ValueError(
-                        f"MERGE source matches target key(s) outside the "
-                        f"source's partitions (partition_by="
-                        f"{self.partition_by}, keys={keys}): a "
-                        "partition-pruned merge would leave the stale row "
-                        "behind. Include the partition columns in the "
-                        "merge keys, or route the correction as a "
-                        "delete+insert."
-                    )
-            target = target.filter(touched)
-        # Anti-join against ALL source keys (updates AND deletes): a
-        # matched target row is either replaced by its upsert row or
-        # dropped by its delete row; only `upserts` re-enter.
-        keep = target.join(source_keys, keys, "left_anti")
-        merged = keep.unionByName(upserts)
-        if self.partition_by:
-            # Dynamic overwrite only replaces partitions PRESENT in the
-            # output: a partition whose every row was deleted would
-            # silently survive. Find source-touched partitions that end
-            # up empty and drop their directories explicitly (Delta
-            # records the same as remove-actions in its log).
+        with merge_source(source, keys, self.partition_by) as (source, n, parts):
             if delete_match is not None:
-                present = set(merged.select(*self.partition_by).distinct().collect())
-                emptied = [p for p in stats["parts"] if p not in present]
+                upserts = source.filter(~F.expr(delete_match))
             else:
-                emptied = []
-            self.overwrite_partitions(merged)
-            for row in emptied:
-                rel = "/".join(
-                    f"{c}={_escape_path_name(row[c])}" for c in self.partition_by
-                )
-                full = os.path.join(self.path, rel)
-                if not os.path.isdir(full):
-                    # Fail loudly: a missed directory here means the
-                    # fully-deleted partition's rows would survive
-                    # reads — the silent-no-op bug ADVICE r5 flagged.
-                    raise RuntimeError(
-                        f"MERGE delete emptied partition {rel!r} but no "
-                        f"such directory exists under {self.path}; "
-                        f"on-disk partition dirs: "
-                        f"{sorted(os.listdir(self.path))[:20]}"
+                upserts = source
+            if not self.exists():
+                self.overwrite(upserts)
+                return n
+
+            target = self.read().select(*source.columns)  # align column order
+            target = prune_to_partitions(target, source, keys, self.partition_by, parts)
+            # Anti-join against ALL source keys (updates AND deletes): a
+            # matched target row is either replaced by its upsert row or
+            # dropped by its delete row; only `upserts` re-enter.
+            keep = target.join(source.select(*keys), keys, "left_anti")
+            merged = keep.unionByName(upserts)
+            if self.partition_by:
+                # Dynamic overwrite only replaces partitions PRESENT in the
+                # output: a partition whose every row was deleted would
+                # silently survive. Find source-touched partitions that end
+                # up empty and drop their directories explicitly (Delta
+                # records the same as remove-actions in its log).
+                if delete_match is not None:
+                    present = set(merged.select(*self.partition_by).distinct().collect())
+                    emptied = [p for p in parts if p not in present]
+                else:
+                    emptied = []
+                self.overwrite_partitions(merged)
+                for row in emptied:
+                    rel = "/".join(
+                        f"{c}={_escape_path_name(row[c])}" for c in self.partition_by
                     )
-                shutil.rmtree(full)
-            if emptied:
+                    full = os.path.join(self.path, rel)
+                    if not os.path.isdir(full):
+                        # Fail loudly: a missed directory here means the
+                        # fully-deleted partition's rows would survive
+                        # reads — the silent-no-op bug ADVICE r5 flagged.
+                        raise RuntimeError(
+                            f"MERGE delete emptied partition {rel!r} but no "
+                            f"such directory exists under {self.path}; "
+                            f"on-disk partition dirs: "
+                            f"{sorted(os.listdir(self.path))[:20]}"
+                        )
+                    shutil.rmtree(full)
+                if emptied:
+                    self._refresh()
+            else:
+                # Unpartitioned: stage then swap (full rewrite is inherent).
+                # The staged directory carries the sidecar, or the swap
+                # would drop the recorded schema and added columns.
+                tmp = f"{self.path}__staging_{int(time.time() * 1000)}"
+                merged.write.mode("overwrite").parquet(tmp)
+                self._record_schema(merged, self._sidecar(), tmp)
+                bak = f"{self.path}__old"
+                shutil.rmtree(bak, ignore_errors=True)
+                os.rename(self.path, bak)
+                os.rename(tmp, self.path)
+                shutil.rmtree(bak, ignore_errors=True)
                 self._refresh()
-        else:
-            # Unpartitioned: stage then swap (full rewrite is inherent).
-            # The staged directory carries the sidecar, or the swap
-            # would drop the recorded schema and added columns.
-            tmp = f"{self.path}__staging_{int(time.time() * 1000)}"
-            merged.write.mode("overwrite").parquet(tmp)
-            self._record_schema(merged, tmp)
-            bak = f"{self.path}__old"
-            shutil.rmtree(bak, ignore_errors=True)
-            os.rename(self.path, bak)
-            os.rename(tmp, self.path)
-            shutil.rmtree(bak, ignore_errors=True)
-            self._refresh()
-        return stats["n"]
+        return n
 
     # -- maintenance (reference compaction.py analog) ----------------------
     def compact(self, target_files_per_partition: int = 1) -> None:

@@ -66,6 +66,24 @@ def test_stage_time_chunks_empty_input_drains_empty(spark):
     assert drain(replay(spark, feed), "append").count() == 0
 
 
+def test_drains_drop_their_memory_sinks(spark):
+    """A drained memory sink leaves no temp view behind (its rows would
+    stay in memory for the session), and the returned frame still reads
+    its rows."""
+    df = spark.range(10).select(
+        F.col("id").alias("event_id"), F.timestamp_micros("id").alias("ts")
+    )
+    feed = stage_time_chunks(df, "ts", 2)
+
+    def sinks():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("sink_")}
+
+    before = sinks()
+    frames = [drain(replay(spark, feed), "append") for _ in range(3)]
+    assert sinks() - before == set()
+    assert [f.count() for f in frames] == [10, 10, 10]
+
+
 def test_streaming_harness_defined_once():
     """The memory sink and the one-file-per-batch replay source live
     only in `streaming/file_stream.py`; temp dirs are made only in
