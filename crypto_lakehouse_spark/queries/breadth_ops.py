@@ -30,26 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
-from crypto_lakehouse_spark.queries.registry import query
-
-
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tables: list[str],
-    tags: tuple[str, ...],
-) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
 # --- full outer join -------------------------------------------------------
@@ -74,7 +55,7 @@ FULL OUTER JOIN supp s ON c.nationkey = s.nationkey
 ORDER BY nationkey
 """
 
-_pair(
+sql_query(
     "full_outer_nation_accounts",
     _FULL_OUTER,
     _FULL_OUTER,
@@ -99,7 +80,7 @@ WINDOW w AS (PARTITION BY o_orderstatus
 ORDER BY o_orderkey
 """
 
-_pair(
+sql_query(
     "distribution_window_funcs",
     _DIST_WIN,
     _DIST_WIN,
@@ -127,7 +108,7 @@ ORDER BY tf DESC, token
 LIMIT 50
 """
 
-_pair(
+sql_query(
     "vocab_top_tokens",
     _VOCAB_SPARK,
     _VOCAB_DUCK,
@@ -224,7 +205,7 @@ GROUP BY event_type, key
 ORDER BY event_type, key
 """
 
-_pair(
+sql_query(
     "props_map_entries",
     _MAP_SPARK,
     _MAP_DUCK,
@@ -256,7 +237,7 @@ SELECT 'intersect_all', nk, COUNT(*) FROM (
 ORDER BY op, nk
 """
 
-_pair(
+sql_query(
     "set_ops_all_variants",
     _SETALL,
     _SETALL,
@@ -282,7 +263,7 @@ FROM events
 ORDER BY event_id
 """
 
-_pair(
+sql_query(
     "redact_numeric_props",
     _REDACT_SPARK,
     _REDACT_DUCK,
@@ -307,7 +288,7 @@ GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
 ORDER BY seg_total, nation_total, c_mktsegment, c_nationkey
 """
 
-_pair(
+sql_query(
     "grouping_sets_customers",
     _GSETS,
     _GSETS,
@@ -361,7 +342,7 @@ ORDER BY o_orderkey
 # The DuckDB oracle KEEPS the recursive CTE, so the green hash is the
 # machine proof of the closed form; the recursive-CTE execution path
 # itself remains exercised by the wordpiece/unigram walk operators.
-_pair(
+sql_query(
     "recursive_amortization",
     """
 SELECT o_orderkey,
@@ -413,7 +394,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-_pair(
+sql_query(
     "props_variant_stats",
     _VARIANT_SPARK,
     _VARIANT_DUCK,
@@ -472,7 +453,7 @@ GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
 
-_pair(
+sql_query(
     "pipe_syntax_pricing_summary",
     _PIPE_Q1_SPARK,
     _PIPE_Q1_DUCK,
@@ -497,7 +478,7 @@ LATERAL (SELECT doc_id, n_chars FROM documents d
 ORDER BY s.source, t.n_chars DESC, t.doc_id
 """
 
-_pair(
+sql_query(
     "lateral_topk_per_source",
     _LATERAL_SQL,
     _LATERAL_SQL,
@@ -537,7 +518,7 @@ SELECT o_orderpriority, metric, val FROM (
 ORDER BY o_orderpriority, metric
 """
 
-_pair(
+sql_query(
     "unpivot_order_metrics",
     _UNPIVOT_SPARK,
     _UNPIVOT_DUCK,
@@ -564,7 +545,7 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
 
-_pair(
+sql_query(
     "filter_clause_order_stats",
     _FILTER_AGG,
     _FILTER_AGG,
@@ -612,7 +593,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-_pair(
+sql_query(
     "regexp_extract_numbers",
     _EXTRACT_SPARK,
     _EXTRACT_DUCK,
@@ -667,7 +648,7 @@ FROM per
 ORDER BY l_orderkey
 """
 
-_pair(
+sql_query(
     "array_hof_sweep",
     _HOF_SPARK,
     _HOF_DUCK,
@@ -700,7 +681,7 @@ JOIN (SELECT r_name, NULLIF(r_regionkey, 0) AS rk FROM region) r
 ORDER BY nation, region
 """
 
-_pair(
+sql_query(
     "null_safe_region_join",
     _NULLSAFE_SPARK,
     _NULLSAFE_DUCK,
@@ -735,7 +716,7 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
 
-_pair(
+sql_query(
     "listagg_order_statuses",
     _LISTAGG_SPARK,
     _LISTAGG_DUCK,
@@ -792,7 +773,7 @@ WHERE rank <= 10
 ORDER BY rank
 """
 
-_pair(
+sql_query(
     "approx_top_k_tokens",
     _ATK_SPARK,
     _ATK_DUCK,
@@ -838,7 +819,6 @@ def _sql_udf_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_sql_udf_price_bands.__name__ = "sql_udf_price_bands"
 query(
     "sql_udf_price_bands",
     oracle=f"""
@@ -931,7 +911,7 @@ _CMS_DUCK = _cms_sql(
     "CAST(('0x' || {h}) AS BIGINT)",
 ).format(rows=f"SELECT unnest(range(0, {_CMS_D})) AS r")
 
-_pair(
+sql_query(
     "countmin_sketch_error",
     _CMS_SPARK,
     _CMS_DUCK,

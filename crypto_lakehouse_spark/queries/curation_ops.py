@@ -37,6 +37,8 @@ All hashing md5-based (portable Spark<->DuckDB, see dedup_ops).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
@@ -72,26 +74,10 @@ _MINHASH_FROM_VIEW = (
     )
     + "\n    FROM minhash GROUP BY doc_id\n)"
 )
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tags: tuple[str, ...],
-    tables: list[str] | None = None,
-) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables or ["documents"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics in the module docstring). "
-        f"Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 # --- paragraph-level dedup with reassembly --------------------------------

@@ -30,25 +30,17 @@ pattern (operators/trades.py).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import fixture
-from crypto_lakehouse_spark.queries.registry import WIDE_SHUFFLE, query
+from crypto_lakehouse_spark.queries.registry import WIDE_SHUFFLE, query, sql_query
 
 
-def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["documents"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 # --- persisted shingle relation -------------------------------------------
@@ -78,20 +70,9 @@ def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _truncate_lineage(spark.sql(_SHINGLE_SELECT_SPARK), spark)
 
 
-def _pair_shingled(name: str, spark_tail: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    """Register a query whose Spark side reads the persisted shingle
-    view; the DuckDB oracle recomputes shingles inline (same rows)."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cached_shingles(spark, sf_dir)
-        return spark.sql(spark_tail)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Self-join over the persisted shingle relation (module "
-        f"docstring has the scale notes). Spark SQL:\n{spark_tail}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+# The Spark side reads the persisted shingle view; the DuckDB oracle
+# recomputes shingles inline (same rows).
+_pair_shingled = partial(sql_query, prepare=cached_shingles)
 
 
 # --- exact dedup ----------------------------------------------------------
@@ -419,7 +400,6 @@ truth AS (
     )
 
 
-_lsh_band_sweep_eval.__name__ = "lsh_band_sweep_eval"
 query(
     "lsh_band_sweep_eval",
     oracle="WITH "

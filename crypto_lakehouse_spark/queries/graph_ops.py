@@ -28,6 +28,8 @@ checkpointing exactly as dup_clusters_cc does.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
@@ -36,23 +38,10 @@ from crypto_lakehouse_spark.operators.checkpointing import (
     release_lineage,
     truncate_lineage,
 )
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 _SCALE = 10**18
 _D = "0.85"
-
-
-def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["lineitem", "orders"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Graph operator (scale notes in the module docstring). "
-        f"Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
 
 
 # Shared EDGE-LIST fixture. Six graph queries derive the identical
@@ -80,23 +69,9 @@ def _cached_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_edges(
-    name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]
-) -> None:
-    """Like _pair, but the Spark side reads the materialized edge
-    fixture (the SQL references graph_edges_mat); the DuckDB oracle
-    recomputes the edges CTE inline."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _cached_edges(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Graph operator over the materialized edge fixture (scale "
-        f"notes in the module docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+# The Spark side reads the edge fixture (graph_edges_mat); the DuckDB
+# oracle recomputes the edges CTE inline.
+_pair_edges = partial(sql_query, prepare=_cached_edges)
 
 
 def _pagerank_sql(edges_body: str, div: str) -> str:
@@ -289,7 +264,6 @@ FROM r3 ORDER BY node
     return head.format(scale=_PR_SCALE) + "," + ",".join(iters) + tail
 
 
-_pagerank_iterated.__name__ = "pagerank_iterated"
 query(
     "pagerank_iterated",
     oracle=_pr_oracle(),
@@ -458,7 +432,6 @@ ORDER BY node
 """
 
 
-_pagerank_converged.__name__ = "pagerank_converged"
 query(
     "pagerank_converged",
     oracle=_pr_converged_oracle(),
@@ -582,7 +555,6 @@ ORDER BY l_suppkey, rank
 """)
 
 
-_copurchase_fn.__name__ = "copurchase_supplier_topk"
 query(
     "copurchase_supplier_topk",
     oracle=_COPURCHASE_SQL,
@@ -729,7 +701,6 @@ ORDER BY l_suppkey
 """)
 
 
-_triangle_fn.__name__ = "triangle_census_copurchase"
 query(
     "triangle_census_copurchase",
     oracle=_TRIANGLE_SQL,
@@ -963,7 +934,6 @@ e{i + 1} AS MATERIALIZED (
     return head + "," + ",".join(parts) + "\n" + rows + "\nORDER BY peel_round"
 
 
-_kcore_peel.__name__ = "kcore_peel_bounded"
 query(
     "kcore_peel_bounded",
     oracle=_kcore_oracle(),

@@ -64,6 +64,8 @@ on reported doubles, every ORDER BY carries a unique tie-break.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
@@ -72,20 +74,10 @@ from crypto_lakehouse_spark.operators.checkpointing import (
     release_lineage,
     truncate_lineage,
 )
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
-def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["documents"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "LM-data operator (scale notes in the module docstring). "
-        f"Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 # --- unigram-LM document scoring (perplexity proxy) ------------------------
@@ -178,7 +170,6 @@ ORDER BY doc_id
     )
 
 
-_lm_doc_score_fn.__name__ = "ngram_lm_doc_score"
 query(
     "ngram_lm_doc_score",
     oracle=_LM_DUCK,
@@ -322,7 +313,6 @@ ORDER BY doc_id
     )
 
 
-_bigram_lm_fn.__name__ = "bigram_lm_doc_score"
 query(
     "bigram_lm_doc_score",
     oracle=_BIGRAM_DUCK,
@@ -940,7 +930,6 @@ ORDER BY d.source
     )
 
 
-_dsir_fn.__name__ = "dsir_importance_resample"
 query(
     "dsir_importance_resample",
     oracle=_dsir(
@@ -1237,7 +1226,6 @@ WHERE rn = 1 AND step < (SELECT MAX(step) FROM it)
 ORDER BY step
 """
 
-_bpe_train_iterated.__name__ = "bpe_train_iterated"
 query(
     "bpe_train_iterated",
     oracle=_BPE_TRAIN_DUCK,
@@ -1482,7 +1470,6 @@ _WORDPIECE_DUCK_DIALECT = (
     "SELECT w, unnest(range(1, length(w) + 1)) AS i FROM words",
 )
 
-_wordpiece_recursive.__name__ = "wordpiece_tokenize_recursive"
 query(
     "wordpiece_tokenize_recursive",
     oracle=_wordpiece_sql(*_WORDPIECE_DUCK_DIALECT),
@@ -1730,7 +1717,6 @@ _UNIGRAM_DUCK_SQL = _duck_materialize(
     _UNIGRAM_DP_CTE_NAMES + ("d0", "d1", "d2", "d3", "suffix", "steps"),
 )
 
-_unigram_lm_em_step.__name__ = "unigram_lm_em_step"
 query(
     "unigram_lm_em_step",
     oracle=_UNIGRAM_DUCK_SQL,
@@ -1983,7 +1969,6 @@ def _unigram_lm_em_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_unigram_lm_em_pruned.__name__ = "unigram_lm_em_pruned"
 query(
     "unigram_lm_em_pruned",
     oracle=_UNIGRAM2_DUCK_SQL,
@@ -2043,7 +2028,6 @@ def _vocab_coverage_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_vocab_coverage_fn.__name__ = "vocab_coverage_curve"
 query(
     "vocab_coverage_curve",
     oracle=_vocab_coverage_sql(
@@ -2314,7 +2298,6 @@ GROUP BY i.source
 ORDER BY i.source
 """
 
-_bpe_fertility_census.__name__ = "bpe_fertility_census"
 query(
     "bpe_fertility_census",
     oracle=_BPE_FERTILITY_DUCK,
@@ -2387,7 +2370,6 @@ def _unimax_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_unimax_sql("size(split(text, ' '))"))
 
 
-_unimax_mixture_weights.__name__ = "unimax_mixture_weights"
 query(
     "unimax_mixture_weights",
     oracle=_unimax_sql("len(string_split(text, ' '))"),
@@ -2470,7 +2452,6 @@ def _sequence_packing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_sequence_packing_census.__name__ = "sequence_packing_census"
 query(
     "sequence_packing_census",
     oracle=_packing_sql(

@@ -44,27 +44,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
-from crypto_lakehouse_spark.queries.registry import query
-
-
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tables: list[str],
-    tags: tuple[str, ...],
-    bench: bool = True,
-) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags, bench=bench)(fn)
+from crypto_lakehouse_spark.queries.registry import query, sql_query
+from crypto_lakehouse_spark.queries.similarity_ops import (
+    _DOT_DUCK,
+    _DOT_SPARK,
+    _PQ_DUCK_CORE,
+    _PQ_L2_64_DUCK,
+    _PQ_L2_64_SPARK,
+    _PQ_RECALL_VIEWS_CORE,
+    PQ_ENCD_VIEW,
+    cached_pq_index,
+)
 
 
 # --- document fingerprinting: winnowing over 4-gram rolling hashes ---------
@@ -87,7 +77,7 @@ GROUP BY doc_id
 ORDER BY doc_id
 """
 
-_pair(
+sql_query(
     "doc_fingerprint_winnow",
     """
 WITH grams AS (
@@ -241,7 +231,6 @@ def _embedding_ivf_topk_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_embedding_ivf_topk_fn.__name__ = "embedding_ivf_topk"
 query(
     "embedding_ivf_topk",
     oracle=_ivf_sql(
@@ -363,36 +352,24 @@ FROM hits h
 """
 
 
-def _wire_ivf_pq() -> None:
-    from crypto_lakehouse_spark.queries.similarity_ops import (
-        _DOT_DUCK,
-        _DOT_SPARK,
-        _PQ_DUCK_CORE,
-        _PQ_L2_64_DUCK,
-        _PQ_L2_64_SPARK,
-        _PQ_RECALL_VIEWS_CORE,
-        PQ_ENCD_VIEW,
-        cached_pq_index,
-    )
-
-    # Spark side composes over the MATERIALIZED index fixtures
-    # (cached_pq_index + cached_ivf_cents): the before-plan carried 12
-    # embeddings scans from CTE-inlined re-execution of the codebook /
-    # encode / centroid chains. Per call, the probe-bounded ADC
-    # relation (candidate-sized) is materialized ONCE — it is consumed
-    # by the top-10 ranking AND the n_candidates scalar, and inlining
-    # re-ran the whole probe+term chain per reference — then the tail
-    # (exact ranking + overlap + report) runs over the view. The
-    # oracle keeps the full single-statement inline chain.
-    adc_head = "WITH " + _ivf_pq_core_sql(
-        _PQ_RECALL_VIEWS_CORE,
-        _DOT_SPARK,
-        _CENT_LONG_S,
-        "transform(array_sort(collect_list(struct(dim, cv))), s -> s.cv)",
-        cents_src=IVF_CENTS_VIEW,
-        encd_marker=f"FROM {PQ_ENCD_VIEW} e\n",
-    ) + "\nSELECT vec_id, adc_dist FROM adc"
-    tail_sql = f"""
+# Spark side composes over the MATERIALIZED index fixtures
+# (cached_pq_index + cached_ivf_cents): the before-plan carried 12
+# embeddings scans from CTE-inlined re-execution of the codebook /
+# encode / centroid chains. Per call, the probe-bounded ADC
+# relation (candidate-sized) is materialized ONCE — it is consumed
+# by the top-10 ranking AND the n_candidates scalar, and inlining
+# re-ran the whole probe+term chain per reference — then the tail
+# (exact ranking + overlap + report) runs over the view. The
+# oracle keeps the full single-statement inline chain.
+_IVF_PQ_ADC_HEAD = "WITH " + _ivf_pq_core_sql(
+    _PQ_RECALL_VIEWS_CORE,
+    _DOT_SPARK,
+    _CENT_LONG_S,
+    "transform(array_sort(collect_list(struct(dim, cv))), s -> s.cv)",
+    cents_src=IVF_CENTS_VIEW,
+    encd_marker=f"FROM {PQ_ENCD_VIEW} e\n",
+) + "\nSELECT vec_id, adc_dist FROM adc"
+_IVF_PQ_TAIL = """
 WITH corpus AS (
     SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
     FROM embeddings
@@ -401,7 +378,7 @@ qfull AS (SELECT vec FROM corpus WHERE vec_id = 0),
 exact10 AS (
     SELECT c.vec_id FROM (
         SELECT c.vec_id,
-               ROW_NUMBER() OVER (ORDER BY {{l2}}, c.vec_id) AS rn
+               ROW_NUMBER() OVER (ORDER BY {l2}, c.vec_id) AS rn
         FROM corpus c CROSS JOIN qfull q
         WHERE c.vec_id <> 0
     ) c WHERE rn <= 10
@@ -425,38 +402,29 @@ SELECT CAST(0 AS BIGINT) AS query_id,
 FROM hits h
 """.replace("{l2}", _PQ_L2_64_SPARK)
 
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cached_pq_index(spark, sf_dir)
-        cached_ivf_cents(spark, sf_dir)
-        # The returned frame still reads the view: hold_view defers
-        # the previous call's release to this one.
-        hold_view(spark, "ivfpq_adc_mat", spark.sql(adc_head))
-        return spark.sql(tail_sql)
 
-    fn.__name__ = "ivf_pq_topk"
-    fn.__doc__ = (
-        "IVF probe + PQ-ADC rerank + in-result recall over the "
-        "materialized PQ index and centroid fixtures; the candidate-"
-        "sized ADC relation is materialized per call (consumed by the "
-        "ranking AND the n_candidates scalar). ADC stage SQL:\n"
-        + adc_head
-        + "\nReport tail SQL:\n"
-        + tail_sql
-    )
-    query(
-        "ivf_pq_topk",
-        oracle=_ivf_pq_sql(
-            _PQ_DUCK_CORE,
-            _DOT_DUCK,
-            _CENT_LONG_D,
-            "list(cv ORDER BY dim)",
-            _PQ_L2_64_DUCK,
-        ),
-        tags=("similarity", "ann", "ivf", "pq"),
-    )(fn)
-
-
-_wire_ivf_pq()
+@query(
+    "ivf_pq_topk",
+    oracle=_ivf_pq_sql(
+        _PQ_DUCK_CORE,
+        _DOT_DUCK,
+        _CENT_LONG_D,
+        "list(cv ORDER BY dim)",
+        _PQ_L2_64_DUCK,
+    ),
+    tags=("similarity", "ann", "ivf", "pq"),
+)
+def _ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF probe + PQ-ADC rerank + in-result recall over the
+    materialized PQ index and centroid fixtures; the candidate-sized
+    ADC relation is materialized per call (consumed by the ranking AND
+    the n_candidates scalar)."""
+    cached_pq_index(spark, sf_dir)
+    cached_ivf_cents(spark, sf_dir)
+    # The returned frame still reads the view: hold_view defers
+    # the previous call's release to this one.
+    hold_view(spark, "ivfpq_adc_mat", spark.sql(_IVF_PQ_ADC_HEAD))
+    return spark.sql(_IVF_PQ_TAIL)
 
 # --- embedding-cosine near-dup via LSH candidates --------------------------
 _HI = "('8','9','a','b','c','d','e','f')"
@@ -521,7 +489,7 @@ _PROJ_D = (
     "(acc, v) -> acc + v)"
 )
 
-_pair(
+sql_query(
     "embedding_near_dup",
     _neardup_sql(
         _DOT_S,
@@ -620,7 +588,7 @@ SELECT stage, stage_order, users FROM (
 ORDER BY stage_order
 """
 
-_pair(
+sql_query(
     "event_funnel",
     _FUNNEL_SPARK,
     _FUNNEL,
@@ -649,7 +617,7 @@ ORDER BY cohort_week, active_week
 # Oracle anchor only (bench=False): the fused single-scan twin below
 # is the declared scale path and the benched primary — the same
 # anchor/primary split as the sketch twins in events_ops.
-_pair(
+sql_query(
     "weekly_retention",
     _RETENTION,
     _RETENTION,
@@ -787,7 +755,6 @@ def _ann_recall_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ann_recall_fn.__name__ = "ann_recall_at_5"
 query(
     "ann_recall_at_5",
     oracle=_recall_sql(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crypto_lakehouse_spark.functions import ddiv, fmt_date, fmt_ts
-from crypto_lakehouse_spark.io import load_table, register_views
+from crypto_lakehouse_spark.io import load_table
 from crypto_lakehouse_spark.operators.checkpointing import truncate_lineage
 from crypto_lakehouse_spark.operators.gold import candles, latest_prices
 from crypto_lakehouse_spark.queries.fixture_meter import fixture

@@ -17,10 +17,13 @@ Determinism rules every query here follows (SURVEY §7 "hard parts"):
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from crypto_lakehouse_spark.io import register_views
 
 
 @dataclass
@@ -44,29 +47,23 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Session confs every query (re)sets at call time. Per-query `confs`
-# overlay these; because EVERY registered query applies the merged map
-# on entry, an override can never leak into the next query — the next
-# call restores the default. This is the per-job shuffle sizing a
-# cluster submitter would do, expressed at query granularity:
-# - initialPartitionNum: shuffles START at this width and AQE
-#   coalesces down to the 64 MB advisory size. The default stays at
-#   the core count (cheap for the sub-second tier — measured 2-3x
-#   slower at a blanket 256); queries with multi-GB shuffle
-#   intermediates (the PPJoin verify join shuffles candidates x
-#   64-element arrays) declare a wider start, because AQE can merge
-#   small partitions but can never SPLIT an oversized non-skew one
-#   (sf10 ramp: 200 s at width 32 vs 75 s at 128 for the same plan).
+# Every registered query (re)sets its session confs at call time: its
+# own `confs`, plus this key unless it declares it. Because EVERY query
+# applies its map on entry, an override can never leak into the next
+# query — the next call restores the default. This is the per-job
+# shuffle sizing a cluster submitter would do, expressed at query
+# granularity: shuffles START at initialPartitionNum and AQE coalesces
+# down to the 64 MB advisory size. The default is resolved PER SESSION
+# at call time (defaultParallelism == core count on local[N],
+# executor-core sum on a cluster; cheap for the sub-second tier —
+# measured 2-3x slower at a blanket 256); queries with multi-GB
+# shuffle intermediates (the PPJoin verify join shuffles candidates x
+# 64-element arrays) declare a wider start, because AQE can merge
+# small partitions but can never SPLIT an oversized non-skew one
+# (sf10 ramp: 200 s at width 32 vs 75 s at 128 for the same plan).
 _INITIAL_PARTITIONS_KEY = (
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 )
-
-_QUERY_CONF_DEFAULTS: dict[str, str] = {
-    # `_INITIAL_PARTITIONS_KEY` is resolved PER SESSION at call time
-    # (defaultParallelism == core count on local[N], executor-core sum
-    # on a cluster) — a literal here would silently pin another
-    # cluster's shuffles to this box's core count.
-}
 
 
 def _default_initial_partitions(spark: SparkSession) -> str:
@@ -196,15 +193,13 @@ def query(
     The decorated function has signature (spark, sf_dir) -> DataFrame
     and is responsible for loading what it needs via
     `crypto_lakehouse_spark.io` (which registers temp views).
-    `confs` overlays `_QUERY_CONF_DEFAULTS` for this query; the merged
-    map is applied on every call (and therefore reset by the next
-    query's call — no leakage between queries).
+    `confs` is applied on every call (and therefore reset by the next
+    query's call — no leakage between queries). The registered
+    wrapper is named `name`.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        merged = dict(_QUERY_CONF_DEFAULTS)
-        if confs:
-            merged.update(confs)
+        merged = dict(confs or {})
         _ALL_DECLARED_CONF_KEYS.update(merged)
 
         def _with_confs(inner: Callable) -> Callable:
@@ -226,7 +221,7 @@ def query(
                         pass  # a locked-down external session still works
                 return _strip_trailing_sort(inner(spark, sf_dir))
 
-            wrapped.__name__ = inner.__name__
+            wrapped.__name__ = name
             wrapped.__doc__ = inner.__doc__
             wrapped.__wrapped__ = inner
             return wrapped
@@ -243,3 +238,39 @@ def query(
         return REGISTRY[name].spark_fn
 
     return deco
+
+
+def sql_query(
+    name: str,
+    spark_sql: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    tables: list[str] | None = None,
+    bench: bool = True,
+    prepare: Callable[[SparkSession, str], object] | None = None,
+    module: str | None = None,
+) -> None:
+    """Register a query that is one Spark SQL string paired with its
+    DuckDB `oracle` (None: the same dialect-common string runs on
+    both engines).
+
+    Each call first registers `tables` as temp views (every table when
+    None) or, when the SQL reads a session fixture's view, runs
+    `prepare(spark, sf_dir)` in their place. The generated function
+    reports `module`, by default the caller's module (as
+    `collections.namedtuple` does), as its `__module__`: the query
+    belongs to the module that declares it."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        if prepare is None:
+            register_views(spark, sf_dir, tables)
+        else:
+            prepare(spark, sf_dir)
+        return spark.sql(spark_sql)
+
+    fn.__module__ = module or sys._getframe(1).f_globals["__name__"]  # noqa: SLF001
+    fn.__doc__ = (
+        "Paired-dialect SQL (semantics in the declaring module's "
+        f"docstring). Spark SQL:\n{spark_sql}"
+    )
+    query(name, oracle=oracle or spark_sql, tags=tags, bench=bench)(fn)

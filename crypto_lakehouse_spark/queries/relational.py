@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 # Exact decimal shorthands: every money/qty column is 2dp in the data,
 # so DECIMAL(12,2) casts are lossless and products stay exact (<38 prec).
@@ -30,28 +30,8 @@ _TAX = "CAST(l_tax AS DECIMAL(4,2))"
 _TOT = "CAST(o_totalprice AS DECIMAL(12,2))"
 
 
-def _common_sql(
-    name: str,
-    sql: str,
-    tags: tuple[str, ...],
-    bench: bool = True,
-    oracle: str | None = None,
-) -> None:
-    """Register a query whose Spark plan and DuckDB oracle are the same
-    SQL string (dialect-common subset); pass `oracle` only where the
-    dialects genuinely diverge."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(sql)
-
-    fn.__name__ = name
-    fn.__doc__ = f"dialect-common SQL; see module docstring. SQL:\n{sql}"
-    query(name, oracle=oracle or sql, tags=tags, bench=bench)(fn)
-
-
 # --- aggregation spine: TPC-H Q1 shape ------------------------------------
-_common_sql(
+sql_query(
     "q1_pricing_summary",
     f"""
 SELECT l_returnflag,
@@ -74,7 +54,7 @@ ORDER BY l_returnflag, l_linestatus
 )
 
 # --- join + agg + top-k: TPC-H Q3 shape -----------------------------------
-_common_sql(
+sql_query(
     "q3_shipping_priority",
     f"""
 SELECT o_orderkey,
@@ -95,7 +75,7 @@ LIMIT 10
 )
 
 # --- 5-way join: TPC-H Q5 shape -------------------------------------------
-_common_sql(
+sql_query(
     "q5_local_supplier_volume",
     f"""
 SELECT n_name,
@@ -116,7 +96,7 @@ ORDER BY revenue DESC, n_name
 )
 
 # --- semi / anti joins ----------------------------------------------------
-_common_sql(
+sql_query(
     "semi_join_customers_with_open_orders",
     """
 SELECT c_custkey, c_name, c_mktsegment
@@ -128,7 +108,7 @@ ORDER BY c_custkey
     tags=("relational", "semi-join"),
 )
 
-_common_sql(
+sql_query(
     "anti_join_customers_without_big_orders",
     """
 SELECT c_custkey, c_name
@@ -141,7 +121,7 @@ ORDER BY c_custkey
 )
 
 # --- rollup / grouping sets ----------------------------------------------
-_common_sql(
+sql_query(
     "rollup_revenue",
     f"""
 SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
@@ -155,7 +135,7 @@ ORDER BY returnflag, linestatus
     tags=("relational", "rollup"),
 )
 
-_common_sql(
+sql_query(
     "grouping_sets_order_stats",
     f"""
 SELECT COALESCE(o_orderstatus, 'ALL') AS status,
@@ -169,7 +149,7 @@ ORDER BY status, priority
     tags=("relational", "rollup"),
 )
 
-_common_sql(
+sql_query(
     "cube_order_stats",
     f"""
 SELECT COALESCE(o_orderstatus, 'ALL') AS status,
@@ -184,7 +164,7 @@ ORDER BY status, priority
 )
 
 # --- set operations -------------------------------------------------------
-_common_sql(
+sql_query(
     "set_ops_customer_segments",
     """
 SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -200,7 +180,7 @@ ORDER BY c_custkey
 )
 
 # --- window functions -----------------------------------------------------
-_common_sql(
+sql_query(
     "running_order_total",
     f"""
 SELECT o_custkey,
@@ -217,7 +197,7 @@ ORDER BY o_custkey, o_orderkey
     tags=("relational", "window"),
 )
 
-_common_sql(
+sql_query(
     "order_gap_lag_lead",
     """
 SELECT o_custkey,
@@ -245,7 +225,7 @@ ORDER BY o_custkey, o_orderkey
 """,
 )
 
-_common_sql(
+sql_query(
     "rank_parts_by_quantity",
     f"""
 SELECT p_partkey,
@@ -266,7 +246,7 @@ ORDER BY rnk, p_partkey
     tags=("relational", "window", "topk"),
 )
 
-_common_sql(
+sql_query(
     "top3_orders_per_customer",
     """
 SELECT o_custkey, o_orderkey, CAST(o_totalprice AS DOUBLE) AS totalprice
@@ -283,7 +263,7 @@ ORDER BY o_custkey, o_orderkey
     tags=("relational", "window", "topk"),
 )
 
-_common_sql(
+sql_query(
     "ntile_customer_quartiles",
     """
 SELECT CAST(quartile AS BIGINT) AS quartile,
@@ -302,7 +282,7 @@ ORDER BY quartile
 )
 
 # --- correlated subquery --------------------------------------------------
-_common_sql(
+sql_query(
     "orders_above_customer_avg",
     f"""
 SELECT o.o_custkey, o.o_orderkey, CAST(o.o_totalprice AS DOUBLE) AS totalprice
@@ -318,7 +298,7 @@ ORDER BY o.o_custkey, o.o_orderkey
 )
 
 # --- conditional / CASE ---------------------------------------------------
-_common_sql(
+sql_query(
     "case_bucket_order_sizes",
     f"""
 SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
@@ -335,7 +315,7 @@ ORDER BY bucket, o_orderstatus
 )
 
 # --- string functions -----------------------------------------------------
-_common_sql(
+sql_query(
     "string_funcs_parts",
     """
 SELECT p_partkey,
@@ -353,7 +333,7 @@ ORDER BY p_partkey
 )
 
 # --- date functions -------------------------------------------------------
-_common_sql(
+sql_query(
     "date_funcs_orders",
     """
 SELECT CAST(CAST(date_trunc('month', o_orderdate) AS DATE) AS STRING)
@@ -370,7 +350,7 @@ ORDER BY order_month
 )
 
 # --- distinct aggregation -------------------------------------------------
-_common_sql(
+sql_query(
     "distinct_counts",
     """
 SELECT l_returnflag,
@@ -385,7 +365,7 @@ ORDER BY l_returnflag
 )
 
 # --- having ---------------------------------------------------------------
-_common_sql(
+sql_query(
     "having_frequent_customers",
     f"""
 SELECT o_custkey, COUNT(*) AS n_orders,
@@ -399,7 +379,7 @@ ORDER BY o_custkey
 )
 
 # --- collect_list (A5) with deterministic ordering ------------------------
-_common_sql(
+sql_query(
     "collect_order_statuses",
     """
 SELECT o_custkey,
@@ -421,7 +401,7 @@ ORDER BY o_custkey
 )
 
 # --- pivot (CASE-based, engine-portable) ----------------------------------
-_common_sql(
+sql_query(
     "pivot_revenue_by_status",
     f"""
 SELECT l_returnflag,
@@ -438,7 +418,7 @@ ORDER BY l_returnflag
 )
 
 # --- RANGE frame over time (interval-bounded window) ----------------------
-_common_sql(
+sql_query(
     "range_frame_trailing_30d",
     f"""
 SELECT o_custkey,
@@ -456,7 +436,7 @@ ORDER BY o_custkey, o_orderkey
 )
 
 # --- percentiles (exact, interpolated) ------------------------------------
-_common_sql(
+sql_query(
     "price_percentiles_by_status",
     """
 SELECT o_orderstatus,
@@ -495,7 +475,7 @@ ORDER BY o_orderstatus
 #    replace.
 #  - *_sketch: the sketch ONLY — the plan a 100 TB deployment runs and
 #    the one the bench times. Rows-only driver check by construction.
-_common_sql(
+sql_query(
     "price_percentiles_by_status_approx",
     """
 SELECT o_orderstatus,

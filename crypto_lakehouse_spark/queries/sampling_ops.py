@@ -42,27 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_lakehouse_spark.io import load_table, register_views
-from crypto_lakehouse_spark.queries.registry import query
-
-
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tables: list[str],
-    tags: tuple[str, ...],
-) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables)
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+from crypto_lakehouse_spark.io import load_table
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
 # --- deterministic train/val/test split ------------------------------------
@@ -91,7 +72,7 @@ GROUP BY split, lang
 ORDER BY split, lang
 """
 
-_pair(
+sql_query(
     "deterministic_split",
     _SPLIT,
     _SPLIT,
@@ -114,7 +95,7 @@ WHERE rn <= 5
 ORDER BY lang, doc_id
 """
 
-_pair(
+sql_query(
     "stratified_sample_docs",
     _STRAT,
     _STRAT,
@@ -146,7 +127,7 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
 
-_pair(
+sql_query(
     "percentile_profile_orders",
     _PCT,
     _PCT,
@@ -194,7 +175,7 @@ FROM sums
 ORDER BY l_returnflag
 """
 
-_pair(
+sql_query(
     "corr_exact_lineitem",
     _CORR,
     _CORR,
@@ -261,7 +242,7 @@ GROUP BY ROLLUP(r_name, n_name)
 ORDER BY region_total, nation_total, r_name, n_name
 """
 
-_pair(
+sql_query(
     "rollup_region_nation",
     _ROLLUP,
     _ROLLUP,
@@ -293,7 +274,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-_pair(
+sql_query(
     "percentile_cont_events",
     _PCTL_CONT,
     _PCTL_CONT,
@@ -335,7 +316,7 @@ FROM counts c CROSS JOIN tot t
 ORDER BY digit
 """
 
-_pair(
+sql_query(
     "benford_first_digit_audit",
     _BENFORD,
     _BENFORD.replace("CAST(o_totalprice AS STRING)",
@@ -375,7 +356,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-_pair(
+sql_query(
     "winsorized_mean_value",
     _WINSOR,
     _WINSOR,
@@ -415,7 +396,7 @@ ORDER BY aes_key, doc_id
 LIMIT 25
 """
 
-_pair(
+sql_query(
     "weighted_sample_aexpj",
     _AES_SQL.format(
         u=_AES_U.replace(
@@ -471,7 +452,7 @@ GROUP BY lang, (rk - 1) % 5
 ORDER BY lang, fold
 """
 
-_pair(
+sql_query(
     "stratified_kfold_assignment",
     _KFOLD,
     _KFOLD,
@@ -538,7 +519,7 @@ FROM ranked
 ORDER BY source
 """
 
-_pair(
+sql_query(
     "neyman_allocation_split",
     _NEYMAN_SQL,
     _NEYMAN_SQL,

@@ -289,7 +289,6 @@ def _zorder_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_zorder_fn.__name__ = "zorder_morton_cells"
 _zorder_fn.__doc__ = (
     "Morton/Z-order clustering keys with per-cell extents (see block "
     "comment)."
@@ -559,7 +558,6 @@ def _hilbert_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_hilbert_fn.__name__ = "hilbert_curve_cells"
 _hilbert_fn.__doc__ = (
     "Hilbert-curve clustering keys with per-cell extents (see block "
     "comment; companion to zorder_morton_cells). Reads the memoized "
@@ -648,7 +646,6 @@ def _locality_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_locality_fn.__name__ = "curve_locality_eval"
 _locality_fn.__doc__ = (
     "Morton vs Hilbert per-cell extents and spatial step per key "
     "step, measured on the same bucket grid (see block comment)."

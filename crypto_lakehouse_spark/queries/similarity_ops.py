@@ -21,12 +21,13 @@ rank comparison.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 # Driver-memory contract for centroid/seed collect() sites. Every
 # collect in this module is bounded — k = ceil(sqrt(N)) seeds for the
@@ -58,17 +59,7 @@ def _assert_centroid_budget(n_rows: int, dim: int) -> None:
         )
 
 
-def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["embeddings"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["embeddings"])
 
 
 # Sequential-fold dot product of two double arrays.
@@ -530,7 +521,6 @@ GROUP BY d.cid, m.n_members, m.min_vec_id, m.max_vec_id, nr.n_rounds
 ORDER BY cluster_id
 """
 
-_kmeans_converged.__name__ = "kmeans_converged"
 query(
     "kmeans_converged",
     oracle=_KM_CONV_DUCK,
@@ -887,7 +877,6 @@ def _pq_adc_topk_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql("WITH " + _PQ_VIEWS_TERMS + "\n" + _PQ_TOPK_TAIL)
 
 
-_pq_adc_topk_fn.__name__ = "pq_adc_topk"
 query(
     "pq_adc_topk",
     oracle=f"WITH {_PQ_DUCK_CORE}\n{_PQ_TOPK_TAIL}",
@@ -954,7 +943,6 @@ def _pq_recall_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_pq_recall_fn.__name__ = "pq_recall_at_10"
 query(
     "pq_recall_at_10",
     oracle=_pq_recall_sql(_PQ_DUCK_CORE, _PQ_L2_64_DUCK, _D_DUCK),
@@ -2099,7 +2087,6 @@ truth AS (SELECT vec_id, nbr FROM nnd_truth_mat),
     )
 
 
-_nn_descent_round_fn.__name__ = "nn_descent_round_recall"
 query(
     "nn_descent_round_recall",
     oracle=_nn_descent_sql(_DOT_DUCK, _D_DUCK),
@@ -2305,7 +2292,6 @@ summary AS ({_nnd_summary_sql(_NND_COS_DUCK,
 SELECT * FROM summary
 """
 
-_nn_descent_converged.__name__ = "nn_descent_converged"
 query(
     "nn_descent_converged",
     oracle=_NND_CONV_DUCK,
@@ -2623,7 +2609,6 @@ WHERE d.vec_id <> {top["vec_id"]}"""
     )
 
 
-_coreset_kcenter_greedy.__name__ = "coreset_kcenter_greedy"
 query(
     "coreset_kcenter_greedy",
     oracle=_kcenter_sql(

@@ -46,30 +46,16 @@ Heaps checkpoint join fans the first-occurrence relation out by the
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import fixture, hold_view
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tags: tuple[str, ...],
-    tables: list[str] | None = None,
-) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, tables or ["documents"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics in the module docstring). "
-        f"Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 # --- Heaps-law vocabulary growth ---------------------------------------------
@@ -488,7 +474,6 @@ def _mi_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_mi_fn.__name__ = "mutual_information_type_weekday"
 query(
     "mutual_information_type_weekday",
     oracle=_mi_sql("CAST(floor(epoch(ts) / 86400.0) AS BIGINT)"),
@@ -724,7 +709,6 @@ def _chi2_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_chi2_fn.__name__ = "chi_square_type_weekday"
 query(
     "chi_square_type_weekday",
     oracle=_chi2_sql("CAST(floor(epoch(ts) / 86400.0) AS BIGINT)"),
@@ -1229,7 +1213,6 @@ SELECT source, w1, w2, COUNT(*) AS c FROM (
     )
 
 
-_condent_fn.__name__ = "bigram_conditional_entropy"
 query(
     "bigram_conditional_entropy",
     oracle=_condent_sql(

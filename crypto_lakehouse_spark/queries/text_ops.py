@@ -13,11 +13,13 @@ list_transform).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import hold_view
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 # Stopword lists for the language-ID heuristic (deterministic tiny
 # lists; the operator contract is argmax-with-preference-order, not
@@ -30,17 +32,7 @@ _STOP = {
 }
 
 
-def _pair(name: str, spark_sql: str, duck_sql: str, tags: tuple[str, ...]) -> None:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["documents"])
-        return spark.sql(spark_sql)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Paired-dialect SQL (semantics documented in the module "
-        f"docstring). Spark SQL:\n{spark_sql}"
-    )
-    query(name, oracle=duck_sql, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 def _inlist(words: tuple[str, ...]) -> str:
@@ -647,7 +639,6 @@ def _bm25_prf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bm25_prf_fn.__name__ = "bm25_prf_rerank"
 query(
     "bm25_prf_rerank",
     oracle=_bm25_prf_sql(
@@ -876,7 +867,6 @@ def _rrf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_rrf_fn.__name__ = "rrf_hybrid_topk"
 query(
     "rrf_hybrid_topk",
     oracle="WITH "
@@ -976,7 +966,6 @@ ORDER BY doc_id, rank
     )
 
 
-_tfidf_kw_fn.__name__ = "tfidf_keywords_top3"
 query(
     "tfidf_keywords_top3",
     oracle=_tfidf_kw_sql("unnest(ws)", "string_split"),

@@ -25,13 +25,16 @@ correlation key, so nothing is per-row.
 
 from __future__ import annotations
 
-from crypto_lakehouse_spark.queries.relational import (
-    _DISC,
-    _EXT,
-    _QTY,
-    _TOT,
-    _common_sql,
-)
+from functools import partial
+
+from crypto_lakehouse_spark.queries import relational
+from crypto_lakehouse_spark.queries.registry import sql_query
+from crypto_lakehouse_spark.queries.relational import _DISC, _EXT, _QTY, _TOT
+
+# Dialect-common SQL, as in `relational`, whose TPC-H family these
+# queries extend: they report its module (perfbench/querymix.py selects
+# its market slice by module).
+_common_sql = partial(sql_query, module=relational.__name__)
 
 # Part↔supplier relation derived from facts (no partsupp table).
 _PS = "(SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)"

@@ -58,38 +58,22 @@ Scale notes (what survives 1000 executors / 100 TB):
 Cross-engine dialect notes: word arrays are `split`/`size`/
 `element_at`+`transform(sequence)` on Spark vs `string_split`/
 `len`/`ws[i]`+`list_transform(range)` on DuckDB; integer division
-is `DIV` vs `//` (the `%%DIV%%` placeholder, same mechanism as
-scale_ops.zorder_morton_cells).
+is `DIV` vs `//` (the `%%DIV%%` placeholder, replaced per dialect at
+the registering call as in scale_ops.zorder_morton_cells).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from crypto_lakehouse_spark.io import register_views
 from crypto_lakehouse_spark.queries.fixture_meter import fixture
-from crypto_lakehouse_spark.queries.registry import query
+from crypto_lakehouse_spark.queries.registry import query, sql_query
 
 
-def _pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str,
-    tags: tuple[str, ...],
-) -> None:
-    spark_final = spark_sql.replace("%%DIV%%", "DIV")
-    duck_final = duck_sql.replace("%%DIV%%", "//")
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir, ["documents"])
-        return spark.sql(spark_final)
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Training-corpus prep operator (scale notes in the module "
-        f"docstring). Spark SQL:\n{spark_final}"
-    )
-    query(name, oracle=duck_final, tags=tags)(fn)
+_pair = partial(sql_query, tables=["documents"])
 
 
 def _ngrams_spark(src: str, n: int, distinct: bool = True) -> str:
@@ -232,8 +216,8 @@ ORDER BY lang, pack_id
 
 _pair(
     "pack_concat_chunks",
-    _packing("size(split(text, ' '))"),
-    _packing("len(string_split(text, ' '))"),
+    _packing("size(split(text, ' '))").replace("%%DIV%%", "DIV"),
+    _packing("len(string_split(text, ' '))").replace("%%DIV%%", "//"),
     tags=("trainprep", "sampling"),
 )
 
@@ -311,8 +295,8 @@ ORDER BY rep_bin_permille
 
 _pair(
     "intra_doc_repetition",
-    _repetition(_ngrams_spark("documents", 2, distinct=False)),
-    _repetition(_ngrams_duck("documents", 2, distinct=False)),
+    _repetition(_ngrams_spark("documents", 2, distinct=False)).replace("%%DIV%%", "DIV"),
+    _repetition(_ngrams_duck("documents", 2, distinct=False)).replace("%%DIV%%", "//"),
     tags=("trainprep", "text"),
 )
 
@@ -530,7 +514,6 @@ def _contamination_minhash_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_FZ_TAIL)
 
 
-_contamination_minhash_fuzzy.__name__ = "contamination_minhash_fuzzy"
 query(
     "contamination_minhash_fuzzy",
     oracle=_fuzzy_contamination(
@@ -704,7 +687,6 @@ def _purged_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_PURGED_SPARK)
 
 
-_purged_fn.__name__ = "purged_time_split"
 _purged_fn.__doc__ = (
     "Purged temporal train/embargo/test split (block comment above)."
 )
@@ -907,11 +889,11 @@ _pair(
     _rho_sql(
         "SELECT doc_id, source, explode(split(lower(text), ' ')) AS tok "
         "FROM documents WHERE length(text) > 0 AND source IS NOT NULL"
-    ),
+    ).replace("%%DIV%%", "DIV"),
     _rho_sql(
         "SELECT doc_id, source, unnest(string_split(lower(text), ' ')) AS tok"
         " FROM documents WHERE length(text) > 0 AND source IS NOT NULL"
-    ),
+    ).replace("%%DIV%%", "//"),
     tags=("trainprep", "selection", "rho-loss", "learnability"),
 )
 

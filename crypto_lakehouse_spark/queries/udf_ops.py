@@ -536,7 +536,6 @@ def _cov_arrow_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_cov_arrow_fn.__name__ = "embedding_covariance_arrow"
 
 
 def _wire_cov_arrow() -> None:

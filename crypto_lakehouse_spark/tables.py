@@ -404,19 +404,25 @@ class LakehouseTable:
                 if emptied:
                     self._refresh()
             else:
-                # Unpartitioned: stage then swap (full rewrite is inherent).
-                # The staged directory carries the sidecar, or the swap
-                # would drop the recorded schema and added columns.
-                tmp = f"{self.path}__staging_{int(time.time() * 1000)}"
-                merged.write.mode("overwrite").parquet(tmp)
-                self._record_schema(merged, self._sidecar(), tmp)
-                bak = f"{self.path}__old"
-                shutil.rmtree(bak, ignore_errors=True)
-                os.rename(self.path, bak)
-                os.rename(tmp, self.path)
-                shutil.rmtree(bak, ignore_errors=True)
-                self._refresh()
+                self._swap_in(merged)  # full rewrite is inherent
         return n
+
+    def _swap_in(self, df: DataFrame) -> None:
+        """Replace an unpartitioned table with `df`, which may read the
+        table itself: stage `df` beside the table, then swap the
+        directories. A static overwrite of the path would delete the
+        input files before the job reads them. The staged directory
+        carries the sidecar, or the swap would drop the recorded schema
+        and added columns."""
+        tmp = f"{self.path}__staging_{int(time.time() * 1000)}"
+        df.write.mode("overwrite").parquet(tmp)
+        self._record_schema(df, self._sidecar(), tmp)
+        bak = f"{self.path}__old"
+        shutil.rmtree(bak, ignore_errors=True)
+        os.rename(self.path, bak)
+        os.rename(tmp, self.path)
+        shutil.rmtree(bak, ignore_errors=True)
+        self._refresh()
 
     # -- maintenance (reference compaction.py analog) ----------------------
     def compact(self, target_files_per_partition: int = 1) -> None:
@@ -429,7 +435,7 @@ class LakehouseTable:
             out = df.repartition(target_files_per_partition, *self.partition_by)
             self.overwrite_partitions(out)
         else:
-            self.overwrite(df.coalesce(target_files_per_partition))
+            self._swap_in(df.coalesce(target_files_per_partition))
 
     def vacuum_staging(self) -> int:
         """Remove leftover staging/backup dirs (orphan-file cleanup

@@ -108,11 +108,17 @@ def generate() -> str:
         lines.append("|---|---|---|---|---|---|")
         for name, q in qs:
             # spark_fn is the registry's conf-applying wrapper; the
-            # implementation lives behind __wrapped__.
+            # implementation lives behind __wrapped__. A query made by
+            # registry.sql_query has its code in registry.py: name the
+            # module that declares it instead.
             impl = getattr(q.spark_fn, "__wrapped__", q.spark_fn)
             code = impl.__code__
-            rel = os.path.relpath(code.co_filename, REPO)
-            loc = f"`{rel}:{code.co_firstlineno}`"
+            declared = sys.modules[impl.__module__].__file__
+            if os.path.samefile(code.co_filename, declared):
+                rel = os.path.relpath(code.co_filename, REPO)
+                loc = f"`{rel}:{code.co_firstlineno}`"
+            else:
+                loc = f"`{os.path.relpath(declared, REPO)}`"
             oracle = "value" if q.oracle else "rows-only"
             bench = ("plan" if q.bench_fn else "yes") if q.bench else "no"
             ramps = "+".join(

@@ -51,6 +51,20 @@ def test_compact_reduces_files(spark, tmp_path):
     assert t.read().count() == 4
 
 
+def test_compact_unpartitioned_keeps_rows(spark, tmp_path):
+    """Compaction of an unpartitioned table stages its output before
+    replacing the table: a static overwrite of the path it reads would
+    delete the input files first."""
+    t = LakehouseTable(spark, str(tmp_path / "u"))
+    schema = "k BIGINT, v STRING"
+    t.append(spark.createDataFrame([(1, "a")], schema))
+    t.append(spark.createDataFrame([(2, "b")], schema))
+    t.compact()
+    assert len(glob.glob(str(tmp_path / "u" / "*.parquet"))) == 1
+    assert {(r.k, r.v) for r in t.read().collect()} == {(1, "a"), (2, "b")}
+    assert t.vacuum_staging() == 0
+
+
 def test_unpartitioned_merge_swap(spark, tmp_path):
     t = LakehouseTable(spark, str(tmp_path / "u"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k BIGINT, v STRING")
