@@ -4,11 +4,15 @@ A from-scratch Spark-first re-expression of the reference's three
 entry points (SURVEY §3): streaming ingest
 (streaming_bronze_writer.py), hourly bronze->silver batch
 (bronze_to_silver.py), and the dbt gold builds (ohlcv_1m/1h,
-daily_metrics, price_latest) — as one engine over LakehouseTable
-storage with partition-overwrite MERGE.
+daily_metrics, price_latest) — as one engine over `VersionedTable`
+storage (pipeline/versioned.py) with partition-pruned MERGE. Every
+write is one atomic manifest commit, so a stage that fails leaves each
+table at its previous snapshot.
 
 Bronze, silver and the OHLCV tables are incremental by construction:
-- bronze: append-only, partitioned by ingestion date;
+- bronze: append-only, partitioned by ingestion date; with a `txn`
+  (the streaming ingest passes one per micro-batch), a replayed batch
+  is skipped instead of appended twice;
 - silver: lookback-filtered scan of bronze (P5), dedup W1, typed
   casts, MERGE on trade_id — only touched _trade_date partitions
   rewrite;
@@ -25,7 +29,7 @@ registered queries and session fixtures run; this module adds only
 the bronze projection, the gold column finish and the storage.
 
 Each stage returns the rows its own call wrote (for a MERGE, the rows
-of its source), counted on the write side; none of them re-reads the
+of its source), as its commit records them; none of them re-reads the
 table it wrote to count it.
 
 At 100 TB: bronze/silver scans prune on partition date; the silver
@@ -45,7 +49,19 @@ from crypto_lakehouse_spark import schemas
 from crypto_lakehouse_spark.operators.gold import candles, latest_prices
 from crypto_lakehouse_spark.operators.trades import silver_trades
 from crypto_lakehouse_spark.schemas import TRADE_JSON_SCHEMA
-from crypto_lakehouse_spark.tables import LakehouseTable
+from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
+
+
+def _rows(table: VersionedTable, version: int) -> int:
+    return table.commit_info(version)["rows"]
+
+
+def _appended(table: VersionedTable, df: DataFrame, txn) -> int | None:
+    """Rows `table.append(df, txn=txn)` wrote; None when `txn` was
+    committed before and the append was skipped."""
+    before = table.current_version()
+    version = table.append(df, txn=txn)
+    return None if version == before else _rows(table, version)
 
 
 class Lakehouse:
@@ -53,29 +69,33 @@ class Lakehouse:
         self.spark = spark
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
-        self.bronze = LakehouseTable(
+        self.bronze = VersionedTable(
             spark, f"{warehouse}/bronze_trades", schemas.BRONZE_PARTITIONS
         )
-        self.dlq = LakehouseTable(spark, f"{warehouse}/dlq")
-        self.silver = LakehouseTable(
+        self.dlq = VersionedTable(spark, f"{warehouse}/dlq")
+        self.silver = VersionedTable(
             spark, f"{warehouse}/silver_trades", schemas.SILVER_PARTITIONS
         )
-        self.gold: dict[str, LakehouseTable] = {
-            "ohlcv_1m": LakehouseTable(spark, f"{warehouse}/ohlcv_1m", schemas.GOLD_PARTITIONS),
-            "ohlcv_1h": LakehouseTable(spark, f"{warehouse}/ohlcv_1h", schemas.GOLD_PARTITIONS),
-            "daily_metrics": LakehouseTable(spark, f"{warehouse}/daily_metrics"),
-            "price_latest": LakehouseTable(spark, f"{warehouse}/price_latest"),
+        self.gold: dict[str, VersionedTable] = {
+            "ohlcv_1m": VersionedTable(spark, f"{warehouse}/ohlcv_1m", schemas.GOLD_PARTITIONS),
+            "ohlcv_1h": VersionedTable(spark, f"{warehouse}/ohlcv_1h", schemas.GOLD_PARTITIONS),
+            "daily_metrics": VersionedTable(spark, f"{warehouse}/daily_metrics"),
+            "price_latest": VersionedTable(spark, f"{warehouse}/price_latest"),
         }
 
     # ------------------------------------------------------------------
     # bronze ingest (reference streaming_bronze_writer.py:132-166)
     # ------------------------------------------------------------------
-    def ingest_feed(self, feed: DataFrame) -> dict[str, int]:
+    def ingest_feed(
+        self, feed: DataFrame, txn: tuple[str, int] | None = None
+    ) -> dict[str, int]:
         """Kafka-envelope feed -> bronze append + DLQ routing.
 
         Parse failures (malformed JSON) land in the DLQ table wrapped
         with error context (reference producer DLQ, S9/T9); heartbeats
         and other non-trades are dropped by the null-key filter (T7).
+        Both appends carry `txn=(app_id, batch_id)`: a batch at or
+        below the id a table recorded for `app_id` is skipped there.
         Returns the rows this call appended to bronze and to the DLQ.
         """
         # PERMISSIVE from_json yields an all-null struct on bad input;
@@ -109,10 +129,14 @@ class Lakehouse:
             )
             .filter(F.col("trade_id").isNotNull())  # T7 heartbeat drop
         )
-        n_bronze = self.bronze.append(bronze_rows)
+        n_bronze = _appended(self.bronze, bronze_rows, txn)
+        if n_bronze is None:
+            # A replayed batch bronze already holds. Its DLQ append is
+            # skipped too, unless the run stopped between the two.
+            return {"bronze": 0, "dlq": _appended(self.dlq, bad, txn) or 0}
         n_bad = obs.get["bad"]
         if n_bad:
-            self.dlq.append(bad)
+            _appended(self.dlq, bad, txn)
         return {"bronze": n_bronze, "dlq": n_bad}
 
     # ------------------------------------------------------------------
@@ -155,7 +179,7 @@ class Lakehouse:
         silver = (
             silver_trades(typed)
             .filter(F.col("trade_time").isNotNull() & F.col("side").isin("buy", "sell"))
-            # silver's stored column order, which its _schema.json records
+            # silver's stored column order, which its manifest records
             .select(
                 F.col("trade_id").cast("long").alias("trade_id"),
                 "product_id",
@@ -172,7 +196,7 @@ class Lakehouse:
         # Keyed on trade_id alone, so MERGE keeps its moved-key check:
         # a re-picked duplicate can carry a different trade_time, and
         # so a different _trade_date partition.
-        return self.silver.merge(silver, keys=["trade_id"])
+        return _rows(self.silver, self.silver.merge(silver, keys=["trade_id"]))
 
     # ------------------------------------------------------------------
     # gold builds (reference dbt marts)
@@ -214,7 +238,8 @@ class Lakehouse:
         # _partition_date is to_date(window_start), so adding it leaves
         # the key set unchanged; with the partition column inside the
         # keys, a key cannot move partitions and MERGE skips that check.
-        return table.merge(out, keys=["product_id", "window_start", "_partition_date"])
+        keys = ["product_id", "window_start", "_partition_date"]
+        return _rows(table, table.merge(out, keys=keys))
 
     def build_daily_metrics(self) -> int:
         """daily_metrics from silver (formulas per SURVEY §2.8.1-2).
@@ -235,7 +260,8 @@ class Lakehouse:
             ((h - lo) / F.nullif(h, F.lit(0.0))).cast("decimal(18,8)").alias("max_drawdown"),
             F.date_trunc("month", "window_start").cast("date").alias("_partition_month"),
         )
-        return self.gold["daily_metrics"].merge(out, keys=["product_id", "date"])
+        table = self.gold["daily_metrics"]
+        return _rows(table, table.merge(out, keys=["product_id", "date"]))
 
     def build_price_latest(self, now=None) -> int:
         """price_latest full rebuild (dbt table materialization,
@@ -253,7 +279,8 @@ class Lakehouse:
             F.col("volume_24h").cast("decimal(18,8)").alias("volume_24h"),
             F.lit(now).alias("snapshot_time"),
         )
-        return self.gold["price_latest"].overwrite(out)
+        table = self.gold["price_latest"]
+        return _rows(table, table.overwrite(out))
 
     # ------------------------------------------------------------------
     def run_all(self, feed: DataFrame) -> dict[str, int]:

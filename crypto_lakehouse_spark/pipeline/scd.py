@@ -31,13 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crypto_lakehouse_spark.tables import LakehouseTable
+from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
 META = ["valid_from", "valid_to", "is_current"]
 
 
 def scd2_apply(
-    table: LakehouseTable,
+    table: VersionedTable,
     updates: DataFrame,
     key: str,
     effective_col: str = "effective_ts",
@@ -63,8 +63,8 @@ def scd2_apply(
     )
 
     if not table.exists():
-        table.overwrite(incoming)
-        return {"new": incoming.count(), "changed": 0, "unchanged": 0}
+        n_new = table.commit_info(table.overwrite(incoming))["rows"]
+        return {"new": n_new, "changed": 0, "unchanged": 0}
 
     dim = table.read()
     current = dim.filter(F.col("is_current"))
@@ -118,11 +118,11 @@ def scd2_apply(
     return {"new": n_new, "changed": n_changed, "unchanged": n_unchanged}
 
 
-def current_of(table: LakehouseTable) -> DataFrame:
+def current_of(table: VersionedTable) -> DataFrame:
     return table.read().filter(F.col("is_current"))
 
 
-def as_of(table: LakehouseTable, ts) -> DataFrame:
+def as_of(table: VersionedTable, ts) -> DataFrame:
     """Point-in-time dimension lookup: the version valid at `ts`."""
     return table.read().filter(
         (F.col("valid_from") <= F.lit(ts))

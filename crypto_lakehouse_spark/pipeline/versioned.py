@@ -41,7 +41,13 @@ inserted; only touched partitions rewrite. The source side of that
 contract (computed once, unique on the keys, NULL-safe partition
 pruning, no matched key moved out of its partition) is the one
 implementation in `tables.py` (`merge_source`, `prune_to_partitions`),
-shared with `LakehouseTable.merge`.
+shared by `merge` and `merge_dv`.
+
+This is the engine's one table layer: the medallion pipeline
+(pipeline/lakehouse.py), the SCD2 dimensions, the streaming MERGE sink
+and the table queries all write through it. A table's state is its
+manifest, so each write commits atomically and a DataFrame read
+before a later commit keeps reading its own snapshot.
 
 At 100 TB: manifests hold file paths (KBs per thousand files), never
 data; the planner cost is listing strings. Reads of version N scan
@@ -59,10 +65,12 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 from crypto_lakehouse_spark.tables import (
     backfill_added_columns,
     merge_source,
+    partition_dir,
     prune_to_partitions,
 )
 
@@ -122,8 +130,9 @@ class VersionedTable:
         # randomly-laid-out keys). ~1 KiB per file per column.
         self.bloom_columns = bloom_columns or []
         self._last_write_stats: dict[str, dict] = {}
-        # Schema of the most recent _write_files df in this process;
-        # rides the manifest (like Delta's log schema) so an
+        # Schema of the _write_files df the next commit publishes
+        # (reset by every commit); rides the manifest (like Delta's log
+        # schema) so reads need no footer inference and an
         # all-files-deleted or never-populated snapshot still reads
         # back as an EMPTY TYPED frame instead of failing.
         self._last_write_schema: dict | None = None
@@ -143,17 +152,28 @@ class VersionedTable:
         vs = self.versions()
         return vs[-1] if vs else None
 
+    def exists(self) -> bool:
+        """Whether any version has been committed."""
+        return self.current_version() is not None
+
     def _load(self, version: int) -> dict:
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
+    def commit_info(self, version: int) -> dict:
+        """One commit's log entry: version, op, ts, n_files and `rows`
+        (the rows an append or overwrite wrote, or a MERGE's source
+        held; None for other commits)."""
+        m = self._load(version)
+        return {
+            "version": version,
+            **{k: m[k] for k in ("op", "ts", "n_files")},
+            "rows": m.get("rows"),
+        }
+
     def history(self) -> list[dict]:
         """Commit log, oldest first (Delta DESCRIBE HISTORY analog)."""
-        return [
-            {"version": v, **{k: m[k] for k in ("op", "ts", "n_files")}}
-            for v in self.versions()
-            for m in [self._load(v)]
-        ]
+        return [self.commit_info(v) for v in self.versions()]
 
     # How many times a benign loser re-reads the head and retries its
     # CAS before giving up (pathological: >5 writers racing the same
@@ -176,6 +196,7 @@ class VersionedTable:
         equality_deletes: list[dict] | None = None,
         clustering: dict | None = None,
         generated_columns: dict[str, dict] | None = None,
+        rows: int | None = None,
     ) -> int:
         """Publish the next version via compare-and-swap, with
         commit-time REBASE for benign conflict classes (the
@@ -209,53 +230,61 @@ class VersionedTable:
         many-writer scale this is what lets the reference's hourly
         jobs and a daily maintenance pass share one table without a
         retry storm — only true lost-update shapes surface errors."""
-        attempts = 0
-        while True:
-            try:
-                return self._publish(
-                    files,
-                    op,
-                    base,
-                    added_columns,
-                    constraints,
-                    txn,
-                    conflict,
-                    column_mapping,
-                    deletion_vectors,
-                    dropped_columns,
-                    row_tracking_seed,
-                    equality_deletes,
-                    clustering,
-                    generated_columns,
-                )
-            except CommitConflictError:
-                cls = (conflict or {}).get("class", "full")
-                if cls == "full" or attempts >= self._REBASE_ATTEMPTS:
-                    raise
-                attempts += 1
-                head = self.current_version()
-                start = -1 if base is None else base
-                for v in range(start + 1, head + 1):
-                    mc = self._load(v).get("conflict") or {"class": "full"}
-                    if mc["class"] == "full":
-                        raise  # intervening full-table/metadata commit
-                    if cls != "append" and (
-                        set(mc.get("partitions") or [])
-                        & set(conflict.get("partitions") or [])
-                    ):
-                        raise  # same-partition rewrite race: lost update
-                head_m = self._load(head)
-                removed = set(conflict.get("removed") or [])
-                if not removed <= set(head_m["files"]):
-                    raise  # a file we rewrite was itself rewritten
-                if txn is not None:
-                    last = head_m.get("txns", {}).get(txn[0])
-                    if last is not None and txn[1] <= last:
-                        return head  # another writer landed our txn id
-                files = [
-                    f for f in head_m["files"] if f not in removed
-                ] + list(conflict.get("added") or [])
-                base = head
+        try:
+            attempts = 0
+            while True:
+                try:
+                    return self._publish(
+                        files,
+                        op,
+                        base,
+                        added_columns,
+                        constraints,
+                        txn,
+                        conflict,
+                        column_mapping,
+                        deletion_vectors,
+                        dropped_columns,
+                        row_tracking_seed,
+                        equality_deletes,
+                        clustering,
+                        generated_columns,
+                        rows,
+                    )
+                except CommitConflictError:
+                    cls = (conflict or {}).get("class", "full")
+                    if cls == "full" or attempts >= self._REBASE_ATTEMPTS:
+                        raise
+                    attempts += 1
+                    head = self.current_version()
+                    start = -1 if base is None else base
+                    for v in range(start + 1, head + 1):
+                        mc = self._load(v).get("conflict") or {"class": "full"}
+                        if mc["class"] == "full":
+                            raise  # intervening full-table/metadata commit
+                        if cls != "append" and (
+                            set(mc.get("partitions") or [])
+                            & set(conflict.get("partitions") or [])
+                        ):
+                            raise  # same-partition rewrite race: lost update
+                    head_m = self._load(head)
+                    removed = set(conflict.get("removed") or [])
+                    if not removed <= set(head_m["files"]):
+                        raise  # a file we rewrite was itself rewritten
+                    if txn is not None:
+                        last = head_m.get("txns", {}).get(txn[0])
+                        if last is not None and txn[1] <= last:
+                            return head  # another writer landed our txn id
+                    files = [
+                        f for f in head_m["files"] if f not in removed
+                    ] + list(conflict.get("added") or [])
+                    base = head
+        finally:
+            # The written files' stats and schema belong to this commit
+            # alone: a later commit that writes no files must carry the
+            # previous snapshot's schema, not this instance's last write.
+            self._last_write_stats = {}
+            self._last_write_schema = None
 
     def _publish(
         self,
@@ -273,6 +302,7 @@ class VersionedTable:
         equality_deletes: list[dict] | None = None,
         clustering: dict | None = None,
         generated_columns: dict[str, dict] | None = None,
+        rows: int | None = None,
     ) -> int:
         """One CAS publish attempt of version base+1.
 
@@ -347,6 +377,9 @@ class VersionedTable:
             "n_files": len(files),
             "files": sorted(files),
             "stats": stats,
+            # Rows an append or overwrite wrote, or a MERGE's source
+            # held (Delta operationMetrics); None for other commits.
+            "rows": rows,
             # Base schema rides the manifest chain (Delta records the
             # same in its log): written fresh when this commit produced
             # files, carried forward otherwise. Lets read() return an
@@ -632,6 +665,11 @@ class VersionedTable:
         self._last_write_stats = {f: self._file_stats(f) for f in moved}
         self._last_write_schema = df.schema.jsonValue()
         return moved
+
+    def _rows_written(self, files: list[str]) -> int:
+        """Rows of files the last `_write_files` produced, from the
+        footers it already read for their stats."""
+        return sum(self._last_write_stats[f]["__rows__"] for f in files)
 
     def _file_rows(self, rel: str) -> int:
         """Footer-only row count of a table-relative parquet file (no
@@ -943,6 +981,7 @@ class VersionedTable:
             "append",
             base=cur,
             txn=txn,
+            rows=self._rows_written(new_files),
             conflict={
                 "class": "append",
                 "added": new_files,
@@ -954,7 +993,10 @@ class VersionedTable:
         df = self._with_generated(df)
         self._check_constraints(df)
         cur = self.current_version()
-        return self._commit(self._write_files(df), "overwrite", base=cur)
+        files = self._write_files(df)
+        return self._commit(
+            files, "overwrite", base=cur, rows=self._rows_written(files)
+        )
 
     # -- schema evolution ---------------------------------------------------
     def add_column(self, name: str, dtype: str, default=None) -> int:
@@ -1096,6 +1138,7 @@ class VersionedTable:
         keys: list[str],
         merge_schema: bool = False,
         txn: tuple[str, int] | None = None,
+        delete_match: str | None = None,
     ) -> int:
         """COW MERGE (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED
         INSERT *, reference bronze_to_silver.py:171-186): rewrites only
@@ -1104,7 +1147,15 @@ class VersionedTable:
         of the contract (computed once, unique on `keys`, NULL-safe
         partition pruning, no key moved out of its partition) is
         `tables.merge_source` and `tables.prune_to_partitions`, shared
-        with `LakehouseTable.merge`.
+        with `merge_dv`. The commit records the source's row count.
+
+        `delete_match` adds Delta's third clause, WHEN MATCHED AND
+        <predicate> THEN DELETE: source rows satisfying the predicate
+        (a SQL expression over source columns) remove the matched
+        target row instead of replacing it; a delete-marked key with
+        no target match is a no-op, as in Delta. A partition whose
+        every row is deleted writes no file, and its old files leave
+        the manifest with the rest of the touched partitions.
 
         `merge_schema=True` is Delta's `schema.autoMerge`: columns the
         source carries that the target lacks are declared as added
@@ -1125,12 +1176,15 @@ class VersionedTable:
         # partition-by-generated pattern), so the uniqueness check
         # must see the computed values.
         source = self._with_generated(source)
-        with merge_source(source, keys, self.partition_by) as (source, _, parts):
-            self._check_constraints(source)
+        with merge_source(source, keys, self.partition_by) as (source, n, parts):
+            upserts = source
+            if delete_match is not None:
+                upserts = source.filter(~F.expr(delete_match))
+            self._check_constraints(upserts)
             cur = self.current_version()
             if cur is None:
                 return self._commit(
-                    self._write_files(source), "merge", base=cur, txn=txn
+                    self._write_files(upserts), "merge", base=cur, txn=txn, rows=n
                 )
 
             added_columns = None
@@ -1195,12 +1249,15 @@ class VersionedTable:
                 *([F.col("_row_id").alias("__row_id")] if rt_on else []),
             )
             target = prune_to_partitions(target, source, keys, self.partition_by, parts)
+            # Anti-join against ALL source keys (updates AND deletes): a
+            # matched target row is either replaced by its upsert row or
+            # dropped by its delete row; only `upserts` re-enter.
             keep = target.join(source.select(*keys), keys, "left_anti")
-            src_out = source
+            src_out = upserts
             if rt_on:
                 # Matched source rows inherit the matched target row's id
                 # (UPDATE preserves identity); unmatched get NULL = fresh.
-                src_out = source.join(
+                src_out = upserts.join(
                     target.select(*keys, "__row_id"), keys, "left"
                 )
             new_files = self._write_files(keep.unionByName(src_out))
@@ -1209,10 +1266,14 @@ class VersionedTable:
             removed: list[str] = []
             touched: set[str] = set()
             if self.partition_by:
-                touched = {os.path.dirname(f) for f in new_files}
-                # A touched partition with zero output rows still needs its
-                # old files dropped; source partition dirs cover it because
-                # merge output always contains every source partition.
+                # The source's partitions, not the new files' directories:
+                # a partition the MERGE emptied writes no file, and its old
+                # files must still leave the manifest.
+                touched = {partition_dir(self.partition_by, p) for p in parts}
+                # Plus the directories Spark actually wrote: a value whose
+                # Python str() differs from Spark's cast (e.g. a float
+                # 1e20) must still replace, not duplicate, its partition.
+                touched |= {os.path.dirname(f) for f in new_files}
                 base_files = self._load(cur)["files"]
                 carried = [
                     f for f in base_files if os.path.dirname(f) not in touched
@@ -1245,6 +1306,7 @@ class VersionedTable:
                 added_columns=added_columns,
                 conflict=conflict,
                 txn=txn,
+                rows=n,
             )
 
     # -- reads -------------------------------------------------------------
@@ -1662,8 +1724,23 @@ class VersionedTable:
             )
 
         reader = self.spark.read.option("basePath", self.path)
+        stored = snap.get("table_schema")
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        elif stored is not None:
+            # The manifest records the schema the files were written
+            # with, so the scan needs no footer inference (a Spark job
+            # per read), and partition columns keep their written type:
+            # a STRING partition value "08" reads back as "08", not INT 8.
+            # Columns read nullable, as an inferred read returns them.
+            reader = reader.schema(
+                StructType(
+                    [
+                        StructField(f.name, f.dataType, True, f.metadata)
+                        for f in StructType.fromJson(stored).fields
+                    ]
+                )
+            )
         dv_map = snap.get("deletion_vectors", {})
         clean = [f for f in files if not dv_map.get(f)]
         dved = [f for f in files if dv_map.get(f)]
@@ -2108,8 +2185,6 @@ class VersionedTable:
             # deleted): return an empty TYPED frame from the manifest's
             # recorded schema — the Delta behavior. Only manifests
             # predating schema recording still raise.
-            from pyspark.sql.types import StructType
-
             cur0 = self.current_version()
             snap0 = self._load(cur0 if version is None else version)
             stored = snap0.get("table_schema")
@@ -2618,42 +2693,39 @@ class VersionedTable:
         # commit path.
         self._last_write_stats = dict(snap.get("stats", {}))
         self._last_write_schema = snap.get("table_schema")
-        try:
-            return self._commit(
-                snap["files"],
-                f"restore(v{version})",
-                base=self.current_version(),
-                added_columns=snap.get("added_columns", {}),
-                column_mapping=snap.get("column_mapping", {}),
-                # Constraints travel with the snapshot too: keeping the
-                # HEAD's constraint set while restoring a pre-rename
-                # schema can leave a CHECK over a column that no longer
-                # resolves, failing every later append/merge.
-                constraints=snap.get("constraints", {}),
-                # Deletion vectors and dropped columns are metadata-only
-                # (file list unchanged), so _commit's inherit-from-HEAD
-                # default would silently keep HEAD's state: restoring to
-                # a pre-delete version would keep rows deleted, and
-                # restoring to a DV'd version from a DV-free HEAD would
-                # resurrect them (ADVICE r12). Pin both to the target
-                # snapshot explicitly.
-                deletion_vectors={
-                    f: list(v)
-                    for f, v in snap.get("deletion_vectors", {}).items()
-                },
-                dropped_columns=dict(snap.get("dropped_columns", {})),
-                equality_deletes=list(snap.get("equality_deletes", [])),
-                clustering=snap.get("clustering") or {},
-                generated_columns=dict(snap.get("generated_columns", {})),
-                # Row ids travel with the snapshot: the restored files
-                # keep the bases they were FIRST committed under, so a
-                # row's id is identical before and after the restore
-                # (the `next` counter stays monotone via _publish's
-                # max() against HEAD — no id reuse).
-                row_tracking_seed=snap.get("row_tracking"),
-            )
-        finally:
-            self._last_write_stats = {}
+        return self._commit(
+            snap["files"],
+            f"restore(v{version})",
+            base=self.current_version(),
+            added_columns=snap.get("added_columns", {}),
+            column_mapping=snap.get("column_mapping", {}),
+            # Constraints travel with the snapshot too: keeping the
+            # HEAD's constraint set while restoring a pre-rename
+            # schema can leave a CHECK over a column that no longer
+            # resolves, failing every later append/merge.
+            constraints=snap.get("constraints", {}),
+            # Deletion vectors and dropped columns are metadata-only
+            # (file list unchanged), so _commit's inherit-from-HEAD
+            # default would silently keep HEAD's state: restoring to
+            # a pre-delete version would keep rows deleted, and
+            # restoring to a DV'd version from a DV-free HEAD would
+            # resurrect them (ADVICE r12). Pin both to the target
+            # snapshot explicitly.
+            deletion_vectors={
+                f: list(v)
+                for f, v in snap.get("deletion_vectors", {}).items()
+            },
+            dropped_columns=dict(snap.get("dropped_columns", {})),
+            equality_deletes=list(snap.get("equality_deletes", [])),
+            clustering=snap.get("clustering") or {},
+            generated_columns=dict(snap.get("generated_columns", {})),
+            # Row ids travel with the snapshot: the restored files
+            # keep the bases they were FIRST committed under, so a
+            # row's id is identical before and after the restore
+            # (the `next` counter stays monotone via _publish's
+            # max() against HEAD — no id reuse).
+            row_tracking_seed=snap.get("row_tracking"),
+        )
 
     def clone_to(self, dest_path: str) -> "VersionedTable":
         """Delta shallow-CLONE analog: an independent table at
@@ -2685,29 +2757,26 @@ class VersionedTable:
             os.link(src, dst)
         dest._last_write_stats = dict(snap.get("stats", {}))
         dest._last_write_schema = snap.get("table_schema")
-        try:
-            dest._commit(
-                snap["files"],
-                f"clone({self.path}@v{cur})",
-                base=None,
-                added_columns=snap.get("added_columns", {}),
-                # The full schema-evolution + governance state travels
-                # with the clone, exactly as Delta shallow CLONE copies
-                # the source's metadata: renames, drops, DVs, CHECKs.
-                column_mapping=snap.get("column_mapping", {}),
-                constraints=snap.get("constraints", {}),
-                deletion_vectors=dv_map,
-                dropped_columns=dict(snap.get("dropped_columns", {})),
-                equality_deletes=eq_entries,
-                clustering=snap.get("clustering") or {},
-                generated_columns=dict(snap.get("generated_columns", {})),
-                # The clone keeps the source's row ids (same files,
-                # same bases, same next counter) — diverges only with
-                # each side's subsequent commits.
-                row_tracking_seed=snap.get("row_tracking"),
-            )
-        finally:
-            dest._last_write_stats = {}
+        dest._commit(
+            snap["files"],
+            f"clone({self.path}@v{cur})",
+            base=None,
+            added_columns=snap.get("added_columns", {}),
+            # The full schema-evolution + governance state travels
+            # with the clone, exactly as Delta shallow CLONE copies
+            # the source's metadata: renames, drops, DVs, CHECKs.
+            column_mapping=snap.get("column_mapping", {}),
+            constraints=snap.get("constraints", {}),
+            deletion_vectors=dv_map,
+            dropped_columns=dict(snap.get("dropped_columns", {})),
+            equality_deletes=eq_entries,
+            clustering=snap.get("clustering") or {},
+            generated_columns=dict(snap.get("generated_columns", {})),
+            # The clone keeps the source's row ids (same files,
+            # same bases, same next counter) — diverges only with
+            # each side's subsequent commits.
+            row_tracking_seed=snap.get("row_tracking"),
+        )
         return dest
 
     def write_stream(

@@ -9,7 +9,7 @@ alone. That differentially proves the write path (S4 partitioned
 create, S5/J4 MERGE upsert, S7 materialization), not just the
 read-side plans.
 
-- `merge_upsert_result`: LakehouseTable COW MERGE (update + insert in
+- `merge_upsert_result`: VersionedTable COW MERGE (update + insert in
   one source) on a partitioned table; oracle = anti-join ∪ source
   (the MERGE definition, reference bronze_to_silver.py:156-188).
 - `medallion_gold_ohlcv`: the full medallion path feed → bronze
@@ -89,7 +89,7 @@ def merge_upsert_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     in place — doubled totalprice — unmatched inserted), then the
     STORED table is returned. Partition column (o_orderstatus) is
     stable under the update, so only touched partitions rewrite."""
-    from crypto_lakehouse_spark.tables import LakehouseTable
+    from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
     register_views(spark, sf_dir, ["orders"])
     target = spark.sql(
@@ -98,7 +98,7 @@ def merge_upsert_result(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders WHERE o_orderkey % 3 = 0
         """
     )
-    t = LakehouseTable(
+    t = VersionedTable(
         spark,
         scratch_dir("merge_q_") + "/t",
         partition_by=["o_orderstatus"],
@@ -293,8 +293,8 @@ def merge_delete_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-priority census is returned and must equal the relational
     derivation. Partition pruning holds (o_orderpriority stable under
     the update), and fully-emptied partitions are dropped, not left
-    behind (tables.py merge docstring)."""
-    from crypto_lakehouse_spark.tables import LakehouseTable
+    behind (`VersionedTable.merge` docstring)."""
+    from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
     register_views(spark, sf_dir, ["orders"])
     target = spark.sql(
@@ -303,7 +303,7 @@ def merge_delete_result(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders WHERE o_orderkey % 3 = 0
         """
     )
-    t = LakehouseTable(
+    t = VersionedTable(
         spark,
         scratch_dir("merge_del_q_") + "/t",
         partition_by=["o_orderpriority"],

@@ -5,9 +5,9 @@ Bronze keeps raw string fields + full payload (schema-on-read escape
 hatch, reference streaming_bronze_writer.py:69-89); silver is typed
 and deduplicated (bronze_to_silver.py:49-69); gold carries the OHLCV
 column specs (ohlcv_1m.sql:79-91). The column list of each stored
-table is the one its writer (pipeline/lakehouse.py) produces; the
-table's `_schema.json` sidecar records it at write time, and
-`LakehouseTable.read()` reads with that recorded schema
+table is the one its writer (pipeline/lakehouse.py) produces; each
+commit's manifest records it, and `VersionedTable.read()` reads with
+that recorded schema
 (tests/test_lakehouse.py::test_recorded_schema_matches_files pins it
 against the files).
 """

@@ -534,7 +534,11 @@ def run_stream_ingest(
     Pass the same `stage_dir`/`ckpt_dir` across calls to exercise
     checkpoint RECOVERY: a restart replays nothing already committed
     (T2/T3's actual claim); only files added to `stage_dir` since the
-    checkpoint are processed.
+    checkpoint are processed. A batch the sink committed but the
+    checkpoint did not is replayed under the same batch id, and the
+    bronze and DLQ appends skip it: their `txn` app id is the
+    checkpoint's absolute path, so a fresh checkpoint against an
+    existing warehouse is a new app and is not skipped.
     """
     from crypto_lakehouse_spark.pipeline.lakehouse import Lakehouse
     from crypto_lakehouse_spark.sources.trade_feed import trade_feed
@@ -562,16 +566,17 @@ def run_stream_ingest(
 
     lh = Lakehouse(spark, warehouse)
     metrics: list[dict] = []
+    ckpt = ckpt_dir or scratch_dir("ckpt_ingest_")
+    app_id = f"ingest:{os.path.abspath(ckpt)}"
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:  # T8 hook
-        counts = lh.ingest_feed(batch_df)
+        counts = lh.ingest_feed(batch_df, txn=(app_id, batch_id))
         metrics.append({"batch_id": batch_id, **counts})
         if each_batch is not None:
             # Downstream incremental stages (silver MERGE, gold builds)
             # run inside the micro-batch — the continuous-medallion mode.
             each_batch(lh, batch_id)
 
-    ckpt = ckpt_dir or scratch_dir("ckpt_ingest_")
     listener = IngestMetricsListener()
     spark.streams.addListener(listener)
     try:
@@ -853,7 +858,7 @@ def run_join_then_window(
 
 def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC upsert: a 3-batch change feed drained through
-    foreachBatch into a partitioned LakehouseTable MERGE — the
+    foreachBatch into a partitioned VersionedTable MERGE — the
     continuous silver-maintenance mode a lakehouse actually runs
     (Delta's `foreachBatch + MERGE` recipe; reference
     bronze_to_silver.py:156-188 runs the same MERGE in batch).
@@ -863,15 +868,15 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     100th key again (status -> 'U2', price +250). Each micro-batch is
     unique on the merge key (MERGE's contract) and leaves the
     partition column (o_orderpriority) untouched, so every merge is a
-    pruned dynamic-partition overwrite — at scale only the partitions
-    a batch touches are rewritten, and exactly-once holds because the
+    partition-pruned rewrite — at scale only the partitions a batch
+    touches are rewritten, and exactly-once holds because the
     file-source checkpoint replays no committed batch.
 
     Returns the final table state aggregated per status — the latest
     row per key wins, which is what the latest-state SQL oracle
     re-derives relationally.
     """
-    from crypto_lakehouse_spark.tables import LakehouseTable
+    from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
@@ -892,7 +897,7 @@ def run_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     _stage_file(u1, feed, 1)
     _stage_file(u2, feed, 2)
 
-    table = LakehouseTable(
+    table = VersionedTable(
         spark,
         os.path.join(scratch_dir("cdc_tbl_"), "orders_silver"),
         partition_by=["o_orderpriority"],

@@ -40,7 +40,7 @@ def main() -> int:
         # widening waves once shipped without regenerating); only the
         # generator rewrites the committed file.
         print(
-            "STALE OPERATORS.md: header count != registry count "
+            "STALE OPERATORS.md: differs from the generator's output "
             f"({len(REGISTRY)} registered) — run "
             "`python scripts/gen_operators_md.py`"
         )
@@ -108,20 +108,19 @@ def ramp_rule_violations() -> list[str]:
 
 
 def operators_md_stale() -> bool:
-    """True when OPERATORS.md's generated header count disagrees with
-    the live registry (the index was not regenerated after a widening
-    wave)."""
+    """True when OPERATORS.md differs from what
+    `gen_operators_md.generate()` produces for the live registry (the
+    index was not regenerated after a query, tag or impl line moved)."""
     import os
-    import re
+
+    import gen_operators_md
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md")
     try:
         with open(path) as f:
-            head = f.read(2000)
+            return f.read() != gen_operators_md.generate()
     except OSError:
         return True
-    m = re.search(r"(\d+) registered queries", head)
-    return m is None or int(m.group(1)) != len(REGISTRY)
 
 
 if __name__ == "__main__":

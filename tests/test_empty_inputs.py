@@ -18,8 +18,8 @@ pin it:
   pagerank_iterated, pagerank_converged.
 - zero-file PARTITIONED parquet write then read
   (UNABLE_TO_INFER_SCHEMA — a partitioned write of 0 rows emits no
-  files at all): LakehouseTable schema sidecar / VersionedTable
-  manifest table_schema / ArrowParquetWriter empty part file, the
+  files at all): VersionedTable manifest table_schema /
+  ArrowParquetWriter empty part file, the
   Delta log-schema analog — medallion_gold_ohlcv, merge_upsert_result,
   merge_delete_result, streaming_merge_upsert, stream_ingest_bronze,
   python_datasource_write_roundtrip, versioned_delete_result,
@@ -119,17 +119,17 @@ def test_query_degrades_on_empty_input(spark, empty_sf_dir, name):
 
 def test_lakehouse_table_empty_partitioned_write_reads_typed(spark, tmp_path):
     """A PARTITIONED write of 0 rows emits no data files; read() must
-    come back as an empty TYPED frame via the schema sidecar."""
+    come back as an empty TYPED frame via the manifest's schema."""
     from pyspark.sql import functions as F
 
-    from crypto_lakehouse_spark.tables import LakehouseTable
+    from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
     df = spark.range(0).select(
         F.col("id").alias("k"),
         F.lit("x").alias("v"),
         F.lit("p0").alias("part"),
     )
-    t = LakehouseTable(spark, str(tmp_path / "t"), partition_by=["part"])
+    t = VersionedTable(spark, str(tmp_path / "t"), partition_by=["part"])
     t.overwrite(df)
     back = t.read()
     assert back.count() == 0

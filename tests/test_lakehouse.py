@@ -143,9 +143,8 @@ def test_incremental_rerun_is_idempotent(lakehouse):
 def test_incremental_merge_picks_up_new_data(lakehouse, spark):
     """Simulate a late batch: new trades after the watermark flow
     through silver and gold via the incremental path."""
-    # NOTE: counts materialized BEFORE the merge — a DataFrame held
-    # across a merge refers to rewritten files (file-level snapshot
-    # semantics; a Delta-style txn log is what would relax this).
+    # A DataFrame held across the merge keeps reading the snapshot it
+    # was read from: the merge commits new files, the old ones stay.
     s = lakehouse.silver.read()
     n_before = s.count()
     top = s.orderBy(F.col("trade_time").desc()).first()
@@ -168,16 +167,55 @@ def test_incremental_merge_picks_up_new_data(lakehouse, spark):
     )
     lakehouse.silver.merge(new, keys=["trade_id"])
     assert lakehouse.silver.read().count() == n_before + 1
+    assert s.count() == n_before
     lakehouse.build_ohlcv("minute", lookback="2 HOURS")
     m = lakehouse.gold["ohlcv_1m"].read()
     assert m.agg(F.sum("trade_count")).first()[0] == lakehouse.silver.read().count()
 
 
 def test_recorded_schema_matches_files(lakehouse, spark):
-    """read() takes the schema recorded at write time instead of
-    inferring it; for every pipeline table it must equal what the files
-    infer to: the same names, types, nullability and column order."""
+    """read() takes the schema the manifest recorded at write time
+    instead of inferring it; for every pipeline table it must equal what
+    the snapshot's files infer to: the same names, types, nullability
+    and column order."""
+    import os
+
     tables = [lakehouse.bronze, lakehouse.dlq, lakehouse.silver, *lakehouse.gold.values()]
     assert len(tables) == 7
     for t in tables:
-        assert t.read().schema == spark.read.parquet(t.path).schema, t.path
+        files, _ = t.files_for_scan()
+        inferred = spark.read.option("basePath", t.path).parquet(
+            *(os.path.join(t.path, f) for f in files)
+        )
+        assert t.read().schema == inferred.schema, t.path
+
+
+def test_failed_silver_publish_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """A silver MERGE whose manifest publish fails after its files are
+    written leaves silver at its previous snapshot: the new files are
+    orphans no read lists."""
+    lh = Lakehouse(spark, str(tmp_path / "warehouse"))
+    lh.ingest_feed(trade_feed(spark, SF))
+    lh.bronze_to_silver(lookback_hours=None)
+    version = lh.silver.current_version()
+    before = sorted(lh.silver.read().collect())
+    written = []
+    write_files = lh.silver._write_files
+
+    def record(df):
+        files = write_files(df)
+        written.extend(files)
+        return files
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected publish failure")
+
+    monkeypatch.setattr(lh.silver, "_write_files", record)
+    monkeypatch.setattr(lh.silver, "_publish", fail)
+    with pytest.raises(RuntimeError, match="injected publish failure"):
+        lh.bronze_to_silver(lookback_hours=None)
+    assert written
+    assert lh.silver.current_version() == version
+    files, _ = lh.silver.files_for_scan()
+    assert not set(written) & set(files)
+    assert sorted(lh.silver.read().collect()) == before

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crypto_lakehouse_spark.pipeline.scd import as_of, current_of, scd2_apply
-from crypto_lakehouse_spark.tables import LakehouseTable
+from crypto_lakehouse_spark.pipeline.versioned import VersionedTable
 
 T0 = datetime(2026, 1, 1)
 T1 = datetime(2026, 2, 1)
@@ -22,7 +22,7 @@ def _batch(spark, rows):
 
 @pytest.fixture()
 def dim(spark, tmp_path):
-    return LakehouseTable(spark, str(tmp_path / "dim_customer"))
+    return VersionedTable(spark, str(tmp_path / "dim_customer"))
 
 
 def test_scd2_history_chain(spark, dim):
